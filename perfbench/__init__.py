@@ -1,0 +1,1 @@
+"""Repeatable benchmark of the engine; entry point ``perfbench/run.py``."""
