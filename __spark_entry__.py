@@ -13,14 +13,15 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Importing these modules populates the shared REGISTRY.
-from svdmovie_lens_parallel_apache_spark_spark import catalog as _catalog
-
-for _mod in ("catalog_text", "catalog_ml", "catalog_stream", "catalog_pipeline"):
-    try:  # later-milestone catalogs; absence must not break the smoke check
-        __import__(f"svdmovie_lens_parallel_apache_spark_spark.{_mod}")
-    except ImportError:
-        pass
+# Importing these modules populates the shared REGISTRY; a broken
+# catalog module must fail loudly, not silently drop its queries.
+from svdmovie_lens_parallel_apache_spark_spark import (  # noqa: F401
+    catalog as _catalog,
+    catalog_ml,
+    catalog_pipeline,
+    catalog_stream,
+    catalog_text,
+)
 
 REGISTRY = _catalog.REGISTRY
 

@@ -53,8 +53,6 @@ from __future__ import annotations
 import json
 import os
 import re
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
@@ -289,30 +287,17 @@ def _stamp_watermark(view: str, mv_props: dict, expected_last: int) -> int:
     the next refresh would silently re-fold the rival's already-
     applied delta. Raising here keeps the module's promise that the
     double-scheduler mistake is loud."""
-    job = uuid.uuid4().hex
-    tmp_dir = os.path.join(view, "_tmp", job)
-    try:
-        while True:
-            _recheck(view, expected_last)
-            current = st.latest_version(view)
-            head = st._load_snapshot(view, current)
-            snapshot = {
-                "version": current + 1,
-                "parent": current,
-                "operation": "metadata",
-                "properties": {_MV_KEY: mv_props},
-                "schema": head["schema"],
-                "n_shards": head["n_shards"],
-                "n_rows": head["n_rows"],
-                "shards": head["shards"],
-            }
-            for k in ("deletes", "constraints", "partition_by"):
-                if head.get(k):
-                    snapshot[k] = head[k]
-            if st._claim_snapshot(view, tmp_dir, snapshot):
-                return current + 1
-    finally:
-        shutil.rmtree(tmp_dir, ignore_errors=True)
+
+    def apply(head: dict) -> dict:
+        _recheck(view, expected_last)
+        return {
+            "operation": "metadata",
+            "properties": {_MV_KEY: mv_props},
+            "schema": head["schema"],
+            "shards": head["shards"],
+        }
+
+    return st._commit(view, None, apply)
 
 
 def _prunable(values: list) -> bool:

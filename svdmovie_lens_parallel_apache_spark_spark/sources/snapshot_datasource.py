@@ -531,7 +531,6 @@ def _build():
                     pass
 
         def commit(self, messages):
-            import shutil
             import uuid as _uuid
 
             from pyspark.sql.types import StructType as _ST
@@ -539,7 +538,7 @@ def _build():
             from .snapshot_table import (
                 _SNAP_DIR,
                 _base_constraints,
-                _claim_snapshot,
+                _commit,
                 _merge_schema,
             )
 
@@ -574,77 +573,54 @@ def _build():
                 os.path.join(self.table, _DATA_DIR, s["file"])
                 for s in mine
             ]
-            tmp_dir = os.path.join(self.table, "_tmp", _uuid.uuid4().hex)
-            try:
-                while True:
-                    current = latest_version(self.table)
-                    if current is None:
-                        base_shards, base_deletes, cons = [], [], {}
-                        merged = schema
-                    else:
-                        base = _load_snapshot(self.table, current)
-                        cons = base.get("constraints", {})
-                        # a constraint added concurrently (between the
-                        # entry validation and this claim) still binds
-                        # this batch — same rebase rule write_snapshot
-                        # applies; a failure here leaves the published
-                        # files as unreferenced orphans (vacuum), never
-                        # a committed violation
-                        fresh = {
-                            k: v for k, v in cons.items()
-                            if validated.get(k) != v
-                        }
-                        if fresh and published:
-                            self._validate_paths(
-                                published, schema, fresh
-                            )
-                            validated.update(fresh)
-                        if self.overwrite:
-                            base_shards, base_deletes = [], []
-                            merged = schema
-                        else:
-                            # same layout-race rule as write_snapshot: a
-                            # concurrent re-partition invalidates these
-                            # staged shards' split, not just the base
-                            if base.get("partition_by", []) != list(
-                                self.partition_by
-                            ):
-                                raise ValueError(
-                                    f"snapshot_table writer: table was "
-                                    f"re-partitioned to "
-                                    f"{base.get('partition_by', [])} "
-                                    f"while this append (spec "
-                                    f"{list(self.partition_by)}) was "
-                                    f"staging; retry the write"
-                                )
-                            base_shards = base["shards"]
-                            base_deletes = base.get("deletes", [])
-                            merged = _merge_schema(
-                                _ST.fromJson(base["schema"]), schema
-                            )
-                    shards = list(base_shards) + mine
-                    snapshot = {
-                        "version": (current or 0) + 1,
-                        "parent": current,
-                        "operation": (
-                            "overwrite" if self.overwrite else "append"
-                        ),
-                        "properties": {"sink": "snapshot_table_batch"},
-                        "schema": merged.jsonValue(),
-                        "n_shards": len(shards),
-                        "n_rows": sum(s["n_rows"] for s in shards),
-                        "shards": sorted(shards, key=lambda s: s["file"]),
-                    }
-                    if base_deletes:  # overwrite clears them above
-                        snapshot["deletes"] = base_deletes
-                    if cons:  # invariants persist through overwrite too
-                        snapshot["constraints"] = cons
-                    if self.partition_by:
-                        snapshot["partition_by"] = list(self.partition_by)
-                    if _claim_snapshot(self.table, tmp_dir, snapshot):
-                        return
-            finally:
-                shutil.rmtree(tmp_dir, ignore_errors=True)
+            shape = {
+                "operation": "overwrite" if self.overwrite else "append",
+                "properties": {"sink": "snapshot_table_batch"},
+                "schema": schema.jsonValue(),
+                "shards": mine,
+                "partition_by": list(self.partition_by),
+            }
+
+            def apply(base):
+                if base is None:
+                    return dict(shape)  # first commit creates the table
+                # a constraint added concurrently (between the entry
+                # validation and this claim) still binds this batch —
+                # same rebase rule write_snapshot applies
+                fresh = {
+                    k: v for k, v in base.get("constraints", {}).items()
+                    if validated.get(k) != v
+                }
+                if fresh and published:
+                    self._validate_paths(published, schema, fresh)
+                    validated.update(fresh)
+                if self.overwrite:
+                    # invariants persist through overwrite; pending
+                    # deletes do not
+                    return {**shape, "deletes": []}
+                # same layout-race rule as write_snapshot: a concurrent
+                # re-partition invalidates these staged shards' split,
+                # not just the base
+                if base.get("partition_by", []) != list(self.partition_by):
+                    raise ValueError(
+                        f"snapshot_table writer: table was re-partitioned "
+                        f"to {base.get('partition_by', [])} while this "
+                        f"append (spec {list(self.partition_by)}) was "
+                        f"staging; retry the write"
+                    )
+                return {
+                    **shape,
+                    "schema": _merge_schema(
+                        _ST.fromJson(base["schema"]), schema
+                    ).jsonValue(),
+                    "shards": base["shards"] + mine,
+                }
+
+            # the batch writer's contract is that a refused batch leaves
+            # its published files as unreferenced orphans for vacuum
+            # (never a committed violation), so they are not handed to
+            # _commit for reclaiming
+            _commit(self.table, None, apply, create=True)
 
         def _validate(self, staged, schema, constraints):
             self._validate_paths(

@@ -211,19 +211,15 @@ def _build():
                     pass
 
         def commit(self, messages, batchId):
-            import shutil
-
             from pyspark.sql.types import StructType
 
             from .snapshot_table import (
                 _DATA_DIR,
                 _SNAP_DIR,
                 _base_constraints,
-                _claim_snapshot,
+                _commit,
                 _enforce_constraints,
-                _load_snapshot,
                 _merge_schema,
-                latest_version,
                 snapshot_history,
             )
 
@@ -277,58 +273,41 @@ def _build():
             props = {"streaming_batch_id": batchId, "sink": "snapshot_sink"}
             if self.app_id is not None:
                 props["streaming_app_id"] = self.app_id
-            tmp_dir = os.path.join(self.table, "_tmp", uuid.uuid4().hex)
-            try:
-                while True:
-                    current = latest_version(self.table)
-                    if current is None:
-                        base_shards, base_deletes = [], []
-                        merged = schema
-                        cons = {}
-                    else:
-                        base = _load_snapshot(self.table, current)
-                        base_shards = base["shards"]
-                        base_deletes = base.get("deletes", [])
-                        cons = base.get("constraints", {})
-                        merged = _merge_schema(
-                            StructType.fromJson(base["schema"]), schema
-                        )
-                    shards = list(base_shards) + mine
-                    snapshot = {
-                        "version": (current or 0) + 1,
-                        "parent": current,
-                        "operation": "append",
-                        "properties": props,
-                        "schema": merged.jsonValue(),
-                        "n_shards": len(shards),
-                        "n_rows": sum(s["n_rows"] for s in shards),
-                        "shards": sorted(shards, key=lambda s: s["file"]),
-                    }
-                    if base_deletes:
-                        snapshot["deletes"] = base_deletes
-                    if cons:
-                        snapshot["constraints"] = cons
-                    # a partitioned table keeps its spec through stream
-                    # appends; identity fields were split and stamped at
-                    # write time against the spec READ AT QUERY START —
-                    # a mid-stream re-partition would make those stamps
-                    # wrong, so it fails the query loudly (restart
-                    # re-inherits)
-                    if current is not None and base.get(
-                        "partition_by", []
-                    ) != list(self.partition_by):
-                        raise ValueError(
-                            f"snapshot_sink: table was re-partitioned to "
-                            f"{base.get('partition_by', [])} while this "
-                            f"query (spec {list(self.partition_by)}) was "
-                            f"running; restart the stream"
-                        )
-                    if current is not None and base.get("partition_by"):
-                        snapshot["partition_by"] = base["partition_by"]
-                    if _claim_snapshot(self.table, tmp_dir, snapshot):
-                        return
-            finally:
-                shutil.rmtree(tmp_dir, ignore_errors=True)
+            shape = {
+                "operation": "append",
+                "properties": props,
+                "schema": schema.jsonValue(),
+                "shards": mine,
+            }
+
+            def apply(base):
+                if base is None:
+                    return dict(shape)  # first commit creates the table
+                # a partitioned table keeps its spec through stream
+                # appends; identity fields were split and stamped at
+                # write time against the spec READ AT QUERY START — a
+                # mid-stream re-partition would make those stamps
+                # wrong, so it fails the query loudly (restart
+                # re-inherits)
+                if base.get("partition_by", []) != list(self.partition_by):
+                    raise ValueError(
+                        f"snapshot_sink: table was re-partitioned to "
+                        f"{base.get('partition_by', [])} while this "
+                        f"query (spec {list(self.partition_by)}) was "
+                        f"running; restart the stream"
+                    )
+                return {
+                    **shape,
+                    "schema": _merge_schema(
+                        StructType.fromJson(base["schema"]), schema
+                    ).jsonValue(),
+                    "shards": base["shards"] + mine,
+                }
+
+            _commit(
+                self.table, None, apply, [s["file"] for s in mine],
+                create=True,
+            )
 
         def abort(self, messages, batchId):
             self._discard(messages)

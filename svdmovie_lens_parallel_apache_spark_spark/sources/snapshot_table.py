@@ -35,14 +35,20 @@ Commit protocol (optimistic concurrency, Delta-on-POSIX shaped):
 1. stage data files under a private ``_tmp/<job>/`` dir;
 2. publish them into ``data/`` under fresh uuid names (``os.replace`` —
    uuid names never collide, so publishing is invisible until step 3);
-3. read the current latest version V, build snapshot V+1, write it to a
-   temp file, and claim it with ``os.link(tmp, _snapshots/V+1)`` —
-   hard-link creation FAILS with EEXIST if someone else committed V+1
-   first. The loser re-reads the new latest snapshot, REBASES (append:
-   its shards still apply on top; overwrite: retries claiming V+2 with
-   its own file list) and claims the next number. A crash at any point
-   leaves the last committed snapshot fully intact: uncommitted data
-   files are unreferenced orphans, never dangling references.
+3. :func:`_commit` reads the current latest version V and hands its
+   snapshot to the writer's ``apply(base)``, which returns the writer's
+   part of snapshot V+1 (its shards, schema, operation — or None for a
+   no-op); ``_commit`` stamps the rest (version, parent, branch, counts,
+   carried deletes/constraints/spec), writes it to a temp file, and
+   claims it with ``os.link(tmp, _snapshots/V+1)`` — hard-link creation
+   FAILS with EEXIST if someone else committed V+1 first. The loser
+   re-reads the new latest snapshot and calls ``apply`` again, which
+   REBASES (append: its shards still apply on top; overwrite: its own
+   file list claims V+2) or raises on a conflict, and claims the next
+   number. Files the job published but never claimed are removed on
+   the way out. A crash at any point leaves the last committed snapshot
+   fully intact: uncommitted data files are unreferenced orphans, never
+   dangling references.
 
 Reads pin ONE snapshot file and scan exactly the shards it names with
 the schema it recorded — so a reader never sees a torn version, and
@@ -713,54 +719,34 @@ def set_partition_spec(table: str, partition_by: list[str]) -> int:
     schema; ``[]`` un-partitions future writes. Returns the version."""
     parsed = [_parse_partition_spec(s) for s in partition_by]
     pb = [f["spec"] for f in parsed]
-    job = uuid.uuid4().hex
-    tmp_dir = os.path.join(table, "_tmp", job)
-    try:
-        while True:
-            current = latest_version(table)
-            if current is None:
-                raise FileNotFoundError(
-                    f"snapshot_table: {table} has no snapshots"
+
+    def apply(snap: dict) -> dict:
+        schema = StructType.fromJson(snap["schema"])
+        names = {f.name: f.dataType.simpleString() for f in schema.fields}
+        for f in parsed:
+            if f["source"] not in names:
+                raise ValueError(
+                    f"snapshot_table: partition source "
+                    f"{f['source']!r} not in table schema"
                 )
-            snap = _load_snapshot(table, current)
-            schema = StructType.fromJson(snap["schema"])
-            names = {f.name: f.dataType.simpleString() for f in schema.fields}
-            for f in parsed:
-                if f["source"] not in names:
-                    raise ValueError(
-                        f"snapshot_table: partition source "
-                        f"{f['source']!r} not in table schema"
-                    )
-                if names[f["source"]] not in f["types"]:
-                    raise ValueError(
-                        f"snapshot_table: partition field {f['spec']!r} "
-                        f"supports {'/'.join(f['types'])} source columns "
-                        f"only; {f['source']!r} is {names[f['source']]}"
-                    )
-            version = current + 1
-            snapshot = {
-                "version": version,
-                "parent": current,
-                "operation": "set_partition_spec",
-                "properties": {
-                    "partition_by": pb,
-                    "previous": snap.get("partition_by", []),
-                },
-                "schema": snap["schema"],
-                "n_shards": snap["n_shards"],
-                "n_rows": snap["n_rows"],
-                "shards": snap["shards"],
-            }
-            if snap.get("deletes"):
-                snapshot["deletes"] = snap["deletes"]
-            if snap.get("constraints"):
-                snapshot["constraints"] = snap["constraints"]
-            if pb:
-                snapshot["partition_by"] = pb
-            if _claim_snapshot(table, tmp_dir, snapshot):
-                return version
-    finally:
-        shutil.rmtree(tmp_dir, ignore_errors=True)
+            if names[f["source"]] not in f["types"]:
+                raise ValueError(
+                    f"snapshot_table: partition field {f['spec']!r} "
+                    f"supports {'/'.join(f['types'])} source columns "
+                    f"only; {f['source']!r} is {names[f['source']]}"
+                )
+        return {
+            "operation": "set_partition_spec",
+            "properties": {
+                "partition_by": pb,
+                "previous": snap.get("partition_by", []),
+            },
+            "schema": snap["schema"],
+            "shards": snap["shards"],
+            "partition_by": pb,
+        }
+
+    return _commit(table, None, apply)
 
 
 def version_as_of(table: str, ts: float) -> int:
@@ -966,12 +952,15 @@ def _encode_manifests(
 def _claim_snapshot(
     table: str, tmp_dir: str, snapshot: dict, branch: str | None = None,
 ) -> bool:
-    """Step 3 of the commit protocol, shared by every committer: write
-    the snapshot to a private temp file and claim its version number
-    with a hard-link create (put-if-absent). True = committed; False =
-    a concurrent writer won this version — re-derive from the new base
-    and try the next number. (Object-store variant: put-if-absent on
-    the snapshot key replaces the link; see module docstring.)
+    """The claim inside step 3 of the commit protocol: write the
+    snapshot to a private temp file and claim its version number with a
+    hard-link create (put-if-absent). True = committed; False = a
+    concurrent writer won this version. Every snapshot writer reaches
+    it through :func:`_commit`, whose loop re-derives from the new base
+    and tries the next number; only :func:`create_branch` (one claim
+    that must not retry) and :func:`_ledger_append` (not a snapshot
+    log) call it directly. (Object-store variant: put-if-absent on the
+    snapshot key replaces the link; see module docstring.)
 
     Every commit is stamped here (single choke point) with a
     ``committed_at`` epoch-seconds float made STRICTLY MONOTONIC within
@@ -1010,6 +999,87 @@ def _claim_snapshot(
     except FileExistsError:
         os.remove(tmp_snap)
         return False
+
+
+def _commit(
+    table: str, branch: str | None, apply,
+    published: list[str] = (), create: bool = False,
+) -> int | None:
+    """Step 3 of the commit protocol: the ONE optimistic retry loop
+    every snapshot writer commits through (Iceberg
+    ``PendingUpdate.apply`` + ``SnapshotProducer.commit`` shaped).
+
+    Each attempt reads the head of ``branch`` (main when None) and calls
+    ``apply(base)`` with its resolved snapshot. ``apply`` re-runs the
+    writer's own conflict checks (raising aborts the commit) and returns
+    the writer's part of the next snapshot — ``operation``,
+    ``properties``, ``schema``, ``shards`` and any writer-specific keys
+    — or None when there is nothing to commit. This function stamps the
+    rest: ``version``/``parent``, ``branch``, ``n_shards``/``n_rows``,
+    the shard sort, and each of ``deletes``/``constraints``/
+    ``partition_by`` that apply left out, copied from the base. An
+    empty value means "none" and is left out of the log, which is how
+    overwrite and rollback clear them. A lost claim re-reads the head
+    and calls ``apply`` again.
+
+    An empty log raises: on a branch it means the branch was dropped
+    while the writer staged; on main, only ``create`` writers accept it
+    (``base`` is then None). ``published`` is the job's running list of
+    names moved into ``data/`` (shards and deletion-vector parts, staged
+    before the call or inside ``apply``): every one the claimed snapshot
+    does not reference (a superseded attempt, a raised conflict, a
+    no-op) is removed on the way out instead of waiting for
+    :func:`vacuum`. Returns the claimed version, or the unchanged head
+    version when ``apply`` returned None."""
+    tmp_dir = os.path.join(table, "_tmp", uuid.uuid4().hex)
+    claimed: dict = {}
+    try:
+        while True:
+            current = latest_version(table, branch)
+            if current is None and (branch is not None or not create):
+                raise FileNotFoundError(
+                    f"snapshot_table: no branch {branch!r} on {table} "
+                    f"(never created, or dropped while this write was "
+                    f"staging); create_branch() first"
+                    if branch is not None
+                    else f"snapshot_table: {table} has no snapshots"
+                )
+            base = (
+                None if current is None
+                else _load_snapshot(table, current, branch)
+            )
+            snapshot = apply(base)
+            if snapshot is None:
+                return current
+            for k in ("deletes", "constraints", "partition_by"):
+                if k not in snapshot and base is not None:
+                    snapshot[k] = base.get(k)
+                if not snapshot.get(k):
+                    snapshot.pop(k, None)
+            shards = sorted(snapshot["shards"], key=lambda s: s["file"])
+            snapshot.update(
+                version=(current or 0) + 1,
+                parent=current,
+                n_shards=len(shards),
+                n_rows=sum(s["n_rows"] for s in shards),
+                shards=shards,
+            )
+            if branch is not None:
+                snapshot["branch"] = branch
+            if _claim_snapshot(table, tmp_dir, snapshot, branch):
+                claimed = snapshot
+                return snapshot["version"]
+    finally:
+        shutil.rmtree(tmp_dir, ignore_errors=True)
+        live = {s["file"] for s in claimed.get("shards", [])}
+        for d in claimed.get("deletes", []):
+            if "positions" in d:
+                live.update(_dv_parts(d))
+        for n in set(published) - live:
+            try:
+                os.remove(os.path.join(table, _DATA_DIR, n))
+            except FileNotFoundError:
+                pass
 
 
 def _stats_overlap(shard: dict, col: str, lo, hi) -> bool:
@@ -1276,6 +1346,16 @@ def _pstr(value) -> str | None:
     """Normalize a Python-side partition probe to the recorded string
     form (``None`` stays NULL — the hive default-partition case)."""
     return None if value is None else str(value)
+
+
+def _probe_log(matching: dict) -> dict:
+    """``{col: value_or_list}`` partition probes in the recorded string
+    form — how every partition-scoped commit logs what it matched."""
+    return {
+        c: [_pstr(v) for v in w] if isinstance(w, (list, tuple, set))
+        else _pstr(w)
+        for c, w in matching.items()
+    }
 
 
 def _parse_partition_spec(spec: str) -> dict:
@@ -1671,9 +1751,7 @@ def add_constraint(
         read_snapshot(spark, table, current), {name: condition}
     )
     constraints[name] = condition
-    return _commit_metadata(
-        table, snap, constraints, {"constraint_added": name}
-    )
+    return _commit_metadata(table, constraints, {"constraint_added": name})
 
 
 def drop_constraint(table: str, name: str) -> int:
@@ -1687,51 +1765,31 @@ def drop_constraint(table: str, name: str) -> int:
     if name not in constraints:
         raise ValueError(f"snapshot_table: no constraint named {name!r}")
     del constraints[name]
-    return _commit_metadata(
-        table, snap, constraints, {"constraint_dropped": name}
-    )
+    return _commit_metadata(table, constraints, {"constraint_dropped": name})
 
 
-def _commit_metadata(
-    table: str, base: dict, constraints: dict, props: dict,
-) -> int:
+def _commit_metadata(table: str, constraints: dict, props: dict) -> int:
     """Metadata-only commit: the parent's shards/schema/deletes verbatim
-    under ``operation: 'metadata'`` with updated constraints. Retries
-    the claim on a lost race by re-deriving from the new base (shards
-    may have changed; the metadata delta still applies on top)."""
-    job = uuid.uuid4().hex
-    tmp_dir = os.path.join(table, "_tmp", job)
-    try:
-        while True:
-            current = latest_version(table)
-            snap = _load_snapshot(table, current)
-            snapshot = {
-                "version": current + 1,
-                "parent": current,
-                "operation": "metadata",
-                "properties": dict(props),
-                "schema": snap["schema"],
-                "n_shards": snap["n_shards"],
-                "n_rows": snap["n_rows"],
-                "shards": snap["shards"],
-            }
-            if snap.get("deletes"):
-                snapshot["deletes"] = snap["deletes"]
-            if constraints:
-                snapshot["constraints"] = constraints
-            if snap.get("partition_by"):
-                snapshot["partition_by"] = snap["partition_by"]
-            if _claim_snapshot(table, tmp_dir, snapshot):
-                return snapshot["version"]
-    finally:
-        shutil.rmtree(tmp_dir, ignore_errors=True)
+    under ``operation: 'metadata'`` with updated constraints. A lost
+    race re-derives from the new base (shards may have changed; the
+    metadata delta still applies on top)."""
+    return _commit(
+        table, None,
+        lambda snap: {
+            "operation": "metadata",
+            "properties": dict(props),
+            "schema": snap["schema"],
+            "shards": snap["shards"],
+            "constraints": constraints,
+        },
+    )
 
 
 def _alter_columns(
     spark: SparkSession, table: str, operation: str, props: dict,
     make_schema, stamp_shard, alters: tuple = (),
 ) -> int:
-    """Shared commit loop for the ALTER TABLE column ops
+    """Shared commit for the ALTER TABLE column ops
     (:func:`rename_column` / :func:`drop_column` / :func:`add_column`):
     a METADATA-ONLY snapshot carrying a new schema and (for rename/
     drop) per-shard column mappings — zero data files touched, the
@@ -1747,97 +1805,75 @@ def _alter_columns(
     forward untouched."""
     from pyspark.sql import functions as F
 
-    job = uuid.uuid4().hex
-    tmp_dir = os.path.join(table, "_tmp", job)
-    try:
-        while True:
-            current = latest_version(table)
-            if current is None:
-                raise FileNotFoundError(
-                    f"snapshot_table: {table} has no snapshots"
-                )
-            snap = _load_snapshot(table, current)
-            # only CONDITION tombstones block rename/drop: their SQL
-            # text is written against current column names, so the
-            # alter would orphan them. POSITIONAL deletion vectors are
-            # name-free (file, pos) coordinates — they compose with
-            # column mapping for free and carry forward untouched.
-            conditional = [
-                d for d in snap.get("deletes", []) if "condition" in d
-            ]
-            if conditional and operation != "add_column":
+    def apply(snap: dict) -> dict:
+        # only CONDITION tombstones block rename/drop: their SQL text is
+        # written against current column names, so the alter would
+        # orphan them. POSITIONAL deletion vectors are name-free (file,
+        # pos) coordinates — they compose with column mapping for free
+        # and carry forward untouched.
+        conditional = [
+            d for d in snap.get("deletes", []) if "condition" in d
+        ]
+        if conditional and operation != "add_column":
+            raise ValueError(
+                f"snapshot_table: {operation} with pending lazy "
+                f"deletes would orphan their conditions; run "
+                f"compact_table first"
+            )
+        schema = StructType.fromJson(snap["schema"])
+        psrc = {
+            _parse_partition_spec(s)["source"]
+            for s in snap.get("partition_by", [])
+        }
+        hit = [c for c in alters if c in psrc]
+        if hit:
+            # the spec and every shard's recorded values are keyed by
+            # column NAME; renaming/dropping one would orphan them
+            # (Delta/Iceberg forbid this too)
+            raise ValueError(
+                f"snapshot_table: {operation} on partition column(s) "
+                f"{hit} — re-partition via an overwrite instead"
+            )
+        new_schema = make_schema(schema)
+        for name, cond in (snap.get("constraints") or {}).items():
+            try:
+                _ = spark.createDataFrame([], new_schema).where(
+                    F.expr(cond).cast("boolean")
+                ).schema
+            except Exception as exc:
                 raise ValueError(
-                    f"snapshot_table: {operation} with pending lazy "
-                    f"deletes would orphan their conditions; run "
-                    f"compact_table first"
-                )
-            schema = StructType.fromJson(snap["schema"])
-            psrc = {
-                _parse_partition_spec(s)["source"]
-                for s in snap.get("partition_by", [])
-            }
-            hit = [c for c in alters if c in psrc]
-            if hit:
-                # the spec and every shard's recorded values are keyed
-                # by column NAME; renaming/dropping one would orphan
-                # them (Delta/Iceberg forbid this too)
-                raise ValueError(
-                    f"snapshot_table: {operation} on partition column(s) "
-                    f"{hit} — re-partition via an overwrite instead"
-                )
-            new_schema = make_schema(schema)
-            for name, cond in (snap.get("constraints") or {}).items():
-                try:
-                    _ = spark.createDataFrame([], new_schema).where(
-                        F.expr(cond).cast("boolean")
-                    ).schema
-                except Exception as exc:
-                    raise ValueError(
-                        f"snapshot_table: CHECK constraint {name!r} "
-                        f"({cond}) references a column this {operation} "
-                        f"alters; drop the constraint first"
-                    ) from exc
-            identity = {f.name: f.name for f in new_schema.fields}
-            def _normalized(s: dict) -> dict:
-                # a map equal to the identity over the NEW schema is
-                # equivalent to no map (every field reads its own
-                # physical name) — normalize it away so a rename CYCLE
-                # (v->w->v) leaves a plain protocol-1 table with
-                # single-scan reads instead of a permanently mapped
-                # one. UNLESS the shard hides dropped physical columns
-                # ("hidden", recorded by drop_column): there the
-                # absent-entry behavior is load-bearing — an unmapped
-                # read after a same-name re-add would resurface the
-                # dropped bytes
-                if s.get("names") == identity and not s.get("hidden"):
-                    s = dict(s)
-                    del s["names"]
-                return s
+                    f"snapshot_table: CHECK constraint {name!r} "
+                    f"({cond}) references a column this {operation} "
+                    f"alters; drop the constraint first"
+                ) from exc
+        identity = {f.name: f.name for f in new_schema.fields}
 
-            shards = [
+        def _normalized(s: dict) -> dict:
+            # a map equal to the identity over the NEW schema is
+            # equivalent to no map (every field reads its own physical
+            # name) — normalize it away so a rename CYCLE (v->w->v)
+            # leaves a plain protocol-1 table with single-scan reads
+            # instead of a permanently mapped one. UNLESS the shard
+            # hides dropped physical columns ("hidden", recorded by
+            # drop_column): there the absent-entry behavior is
+            # load-bearing — an unmapped read after a same-name re-add
+            # would resurface the dropped bytes
+            if s.get("names") == identity and not s.get("hidden"):
+                s = dict(s)
+                del s["names"]
+            return s
+
+        return {
+            "operation": operation,
+            "properties": dict(props),
+            "schema": new_schema.jsonValue(),
+            "shards": [
                 _normalized(stamp_shard(s, schema) or s)
                 for s in snap["shards"]
-            ]
-            snapshot = {
-                "version": current + 1,
-                "parent": current,
-                "operation": operation,
-                "properties": dict(props),
-                "schema": new_schema.jsonValue(),
-                "n_shards": len(shards),
-                "n_rows": sum(s["n_rows"] for s in shards),
-                "shards": sorted(shards, key=lambda s: s["file"]),
-            }
-            if snap.get("deletes"):
-                snapshot["deletes"] = snap["deletes"]
-            if snap.get("constraints"):
-                snapshot["constraints"] = snap["constraints"]
-            if snap.get("partition_by"):
-                snapshot["partition_by"] = snap["partition_by"]
-            if _claim_snapshot(table, tmp_dir, snapshot):
-                return snapshot["version"]
-    finally:
-        shutil.rmtree(tmp_dir, ignore_errors=True)
+            ],
+        }
+
+    return _commit(table, None, apply)
 
 
 def _file_has_column(shard: dict, table: str, physical: str) -> bool:
@@ -2199,7 +2235,8 @@ def _remove_unreferenced(
 
 
 def _footer_stats(
-    table: str, names: list[str], schema, stats_cols: list[str] | None,
+    spark: SparkSession, table: str, names: list[str], schema,
+    stats_cols: list[str] | None,
 ) -> tuple[dict, dict] | None:
     """Per-shard row counts and min/max stats read from the parquet
     FOOTERS on the driver — no Spark job, no re-scan of data just
@@ -2254,14 +2291,11 @@ def _footer_stats(
         # incremented) bound that pyarrow 16 cannot distinguish from
         # an exact one — so if the session's Hadoop conf sets any
         # finite truncation length, refuse the fast path and let the
-        # caller run the exact aggregation instead.
+        # caller run the exact aggregation instead. The session is the
+        # writer's own (passed in, not getActiveSession(), which is None
+        # in thread-pool workers and would silently refuse the path).
         try:
-            from pyspark.sql import SparkSession
-
-            sess = SparkSession.getActiveSession()
-            if sess is None:
-                return None
-            hc = sess.sparkContext._jsc.hadoopConfiguration()
+            hc = spark.sparkContext._jsc.hadoopConfiguration()
             v = hc.get("parquet.statistics.truncate.length")
             if v is not None and int(v) < (1 << 31) - 1:
                 return None
@@ -2363,16 +2397,18 @@ def _footer_stats(
 
 
 def _stage_publish(
-    df: DataFrame, table: str, tmp_dir: str,
+    df: DataFrame, table: str, published: list[str],
     stats_cols: list[str] | None,
     partition_by: list[str] | None = None,
     cluster_within: list[str] | None = None,
     cluster_parts: int | None = None,
 ) -> tuple[list[str], dict, dict, dict]:
     """Steps 1–2 of the commit protocol: stage ``df`` as parquet under
-    the job's private ``tmp_dir``, publish the shards into ``data/``
-    under fresh uuid names (invisible until a snapshot names them), and
-    compute per-shard row counts + optional min/max stats in ONE
+    a private ``_tmp/<job>/`` dir (removed on return), publish the
+    shards into ``data/`` under fresh uuid names (invisible until a
+    snapshot names them; each name is appended to ``published`` as it
+    lands, so :func:`_commit` can reclaim it), and compute per-shard
+    row counts + optional min/max stats from the footers or in ONE
     metadata-weight job via ``input_file_name`` — not a per-file driver
     loop. Returns ``(names, counts, stats, partitions)``.
 
@@ -2408,118 +2444,125 @@ def _stage_publish(
 
     from pyspark.sql import functions as F
 
-    # 1. stage: a normal distributed parquet write into private tmp;
-    # partitioned tables stage hive-layout on shadow string copies so
-    # the real columns survive inside each file
-    pb = list(partition_by or [])
-    if pb:
-        # shadow columns are the TRANSFORMED partition values (identity
-        # = string cast); positional names because spec strings like
-        # "bucket(8, doc_id)" are not valid column names. Every non-NULL
-        # value is prefixed with "=" before hitting the hive dir name:
-        # Spark writes an EMPTY STRING to __HIVE_DEFAULT_PARTITION__
-        # (conflating '' with NULL — silent wrong pruning and a wrong
-        # drop_partition); the prefix makes '' a real directory and is
-        # stripped on decode. concat propagates NULL, so NULL still
-        # lands in the default partition.
-        fields = [_parse_partition_spec(s) for s in pb]
-        staged_df = df
-        for i, f in enumerate(fields):
-            staged_df = staged_df.withColumn(
-                f"__p_{i}", F.concat(F.lit("="), f["expr"](df))
-            )
-        # one shuffle BEFORE partitionBy bounds the commit's file count:
-        # without it every upstream task fans into every partition it
-        # touches (tasks x partitions staged files — the small-file
-        # explosion Delta/Iceberg optimized writes exist to prevent).
-        # Plain writes hash on the tuple (~one file per partition
-        # value); CLUSTERED rewrites (cluster_within) instead range-
-        # partition on (tuple, cluster keys) into ``cluster_parts``
-        # slices — files stay bounded by the slice budget, sized by
-        # rows (the range sampler gives big partitions more files), and
-        # each file covers a narrow key range WITHIN its tuple, which
-        # is what keeps per-shard stats selective inside a partition.
-        shadow = [F.col(f"__p_{i}") for i in range(len(pb))]
-        if cluster_within or cluster_parts:
-            if cluster_parts:
-                n_out = cluster_parts
-            else:
-                try:
-                    n_out = int(
-                        df.sparkSession.conf.get(
-                            "spark.sql.shuffle.partitions"
-                        )
-                    )
-                except (TypeError, ValueError):  # e.g. AQE "auto"
-                    n_out = df.sparkSession.sparkContext.defaultParallelism
-            # without cluster keys, big tuples still need a within-tuple
-            # split key for the ``cluster_parts`` file budget to mean
-            # anything: spark_partition_id() is plan-agnostic (works on
-            # unions/joins, unlike input_file_name) and splits a big
-            # tuple at upstream-partition granularity — for the
-            # compaction/DML rewrites that set cluster_parts, upstream
-            # partitions are the files being rewritten
-            inner = (
-                [F.col(c) for c in cluster_within]
-                if cluster_within else [F.spark_partition_id()]
-            )
-            staged_df = staged_df.repartitionByRange(
-                max(1, n_out), *shadow, *inner
-            )
-            if cluster_within:
-                staged_df = staged_df.sortWithinPartitions(
-                    *[f"__p_{i}" for i in range(len(pb))], *cluster_within
-                )
-        else:
-            staged_df = staged_df.repartition(*shadow)
-        staged_df.write.mode("overwrite").partitionBy(
-            *[f"__p_{i}" for i in range(len(pb))]
-        ).parquet(tmp_dir)
-        staged = sorted(
-            glob.glob(
-                os.path.join(
-                    tmp_dir,
-                    *[f"__p_{i}=*" for i in range(len(pb))],
-                    "part-*.parquet",
-                )
-            )
-        )
-    else:
-        df.write.mode("overwrite").parquet(tmp_dir)
-        staged = sorted(glob.glob(os.path.join(tmp_dir, "part-*.parquet")))
-    # 2. publish under fresh uuid names (invisible: nothing refs them)
-    mine = []
-    partitions: dict[str, dict] = {}
-    for p in staged:
-        name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp_dir = os.path.join(table, "_tmp", uuid.uuid4().hex)
+    try:
+        # 1. stage: a normal distributed parquet write into private tmp;
+        # partitioned tables stage hive-layout on shadow string copies so
+        # the real columns survive inside each file
+        pb = list(partition_by or [])
         if pb:
-            # decode this file's partition tuple from its hive dirs:
-            # tmp/__p_0=x/__p_1=y/part-*.parquet (hive %-escapes
-            # special chars; __HIVE_DEFAULT_PARTITION__ encodes NULL);
-            # logged under the canonical spec-string keys
-            comps = os.path.relpath(p, tmp_dir).split(os.sep)[:-1]
-            vals: dict[str, str | None] = {}
-            for f, comp in zip(fields, comps):
-                raw = comp.split("=", 1)[1]
-                if raw == "__HIVE_DEFAULT_PARTITION__":
-                    vals[f["spec"]] = None
-                    continue
-                dec = unquote(raw)
-                if not dec.startswith("="):  # the staged "=" prefix
-                    raise RuntimeError(
-                        f"snapshot_table: staged partition dir {comp!r} "
-                        f"lacks the value prefix — staging layout bug"
+            # shadow columns are the TRANSFORMED partition values (identity
+            # = string cast); positional names because spec strings like
+            # "bucket(8, doc_id)" are not valid column names. Every non-NULL
+            # value is prefixed with "=" before hitting the hive dir name:
+            # Spark writes an EMPTY STRING to __HIVE_DEFAULT_PARTITION__
+            # (conflating '' with NULL — silent wrong pruning and a wrong
+            # drop_partition); the prefix makes '' a real directory and is
+            # stripped on decode. concat propagates NULL, so NULL still
+            # lands in the default partition.
+            fields = [_parse_partition_spec(s) for s in pb]
+            staged_df = df
+            for i, f in enumerate(fields):
+                staged_df = staged_df.withColumn(
+                    f"__p_{i}", F.concat(F.lit("="), f["expr"](df))
+                )
+            # one shuffle BEFORE partitionBy bounds the commit's file count:
+            # without it every upstream task fans into every partition it
+            # touches (tasks x partitions staged files — the small-file
+            # explosion Delta/Iceberg optimized writes exist to prevent).
+            # Plain writes hash on the tuple (~one file per partition
+            # value); CLUSTERED rewrites (cluster_within) instead range-
+            # partition on (tuple, cluster keys) into ``cluster_parts``
+            # slices — files stay bounded by the slice budget, sized by
+            # rows (the range sampler gives big partitions more files), and
+            # each file covers a narrow key range WITHIN its tuple, which
+            # is what keeps per-shard stats selective inside a partition.
+            shadow = [F.col(f"__p_{i}") for i in range(len(pb))]
+            if cluster_within or cluster_parts:
+                if cluster_parts:
+                    n_out = cluster_parts
+                else:
+                    try:
+                        n_out = int(
+                            df.sparkSession.conf.get(
+                                "spark.sql.shuffle.partitions"
+                            )
+                        )
+                    except (TypeError, ValueError):  # e.g. AQE "auto"
+                        n_out = df.sparkSession.sparkContext.defaultParallelism
+                # without cluster keys, big tuples still need a within-tuple
+                # split key for the ``cluster_parts`` file budget to mean
+                # anything: spark_partition_id() is plan-agnostic (works on
+                # unions/joins, unlike input_file_name) and splits a big
+                # tuple at upstream-partition granularity — for the
+                # compaction/DML rewrites that set cluster_parts, upstream
+                # partitions are the files being rewritten
+                inner = (
+                    [F.col(c) for c in cluster_within]
+                    if cluster_within else [F.spark_partition_id()]
+                )
+                staged_df = staged_df.repartitionByRange(
+                    max(1, n_out), *shadow, *inner
+                )
+                if cluster_within:
+                    staged_df = staged_df.sortWithinPartitions(
+                        *[f"__p_{i}" for i in range(len(pb))], *cluster_within
                     )
-                vals[f["spec"]] = dec[1:]
-            partitions[name] = vals
-        os.replace(p, os.path.join(table, _DATA_DIR, name))
-        mine.append(name)
+            else:
+                staged_df = staged_df.repartition(*shadow)
+            staged_df.write.mode("overwrite").partitionBy(
+                *[f"__p_{i}" for i in range(len(pb))]
+            ).parquet(tmp_dir)
+            staged = sorted(
+                glob.glob(
+                    os.path.join(
+                        tmp_dir,
+                        *[f"__p_{i}=*" for i in range(len(pb))],
+                        "part-*.parquet",
+                    )
+                )
+            )
+        else:
+            df.write.mode("overwrite").parquet(tmp_dir)
+            staged = sorted(glob.glob(os.path.join(tmp_dir, "part-*.parquet")))
+        # 2. publish under fresh uuid names (invisible: nothing refs them)
+        mine = []
+        partitions: dict[str, dict] = {}
+        for p in staged:
+            name = f"part-{uuid.uuid4().hex}.parquet"
+            if pb:
+                # decode this file's partition tuple from its hive dirs:
+                # tmp/__p_0=x/__p_1=y/part-*.parquet (hive %-escapes
+                # special chars; __HIVE_DEFAULT_PARTITION__ encodes NULL);
+                # logged under the canonical spec-string keys
+                comps = os.path.relpath(p, tmp_dir).split(os.sep)[:-1]
+                vals: dict[str, str | None] = {}
+                for f, comp in zip(fields, comps):
+                    raw = comp.split("=", 1)[1]
+                    if raw == "__HIVE_DEFAULT_PARTITION__":
+                        vals[f["spec"]] = None
+                        continue
+                    dec = unquote(raw)
+                    if not dec.startswith("="):  # the staged "=" prefix
+                        raise RuntimeError(
+                            f"snapshot_table: staged partition dir {comp!r} "
+                            f"lacks the value prefix — staging layout bug"
+                        )
+                    vals[f["spec"]] = dec[1:]
+                partitions[name] = vals
+            os.replace(p, os.path.join(table, _DATA_DIR, name))
+            published.append(name)
+            mine.append(name)
+    finally:
+        shutil.rmtree(tmp_dir, ignore_errors=True)
 
     spark = df.sparkSession
     counts = {n: 0 for n in mine}
     stats: dict[str, dict] = {n: {} for n in mine}
-    footer = _footer_stats(table, mine, df.schema, stats_cols) if mine \
-        else None
+    footer = (
+        _footer_stats(spark, table, mine, df.schema, stats_cols)
+        if mine else None
+    )
     if footer is not None:
         # driver-side footer read replaces the per-commit stats job —
         # bit-identical by the _footer_stats whitelist, else it
@@ -2556,6 +2599,36 @@ def _stage_publish(
         mine.remove(n)
         counts.pop(n), stats.pop(n), partitions.pop(n, None)
     return mine, counts, stats, partitions
+
+
+def _shard_entries(
+    mine: list[str], counts: dict, stats: dict, blooms: dict, parts: dict,
+) -> list[dict]:
+    """Snapshot-log entries for freshly published shards: file and row
+    count, plus the stats/bloom/partition maps when non-empty."""
+    out = []
+    for n in mine:
+        s = {"file": n, "n_rows": counts[n]}
+        for key, vals in (
+            ("stats", stats), ("bloom", blooms), ("partition", parts),
+        ):
+            if vals.get(n):
+                s[key] = vals[n]
+        out.append(s)
+    return out
+
+
+def _recheck_constraints(df: DataFrame, validated: dict, base: dict) -> None:
+    """A constraint added concurrently (between a writer's entry
+    validation and its claim) still binds the batch: enforce every
+    constraint of ``base`` that ``validated`` lacks, then record it."""
+    fresh = {
+        k: v for k, v in base.get("constraints", {}).items()
+        if validated.get(k) != v
+    }
+    if fresh:
+        _enforce_constraints(df, fresh)
+        validated.update(fresh)
 
 
 def _rebase_evolution_guard(
@@ -2711,129 +2784,68 @@ def write_snapshot(
     _enforce_constraints(df, validated)  # fail BEFORE staging any data
     # remember the base this job's schema was captured against: a
     # rebase that crosses a schema-evolution commit must conflict, not
-    # silently merge (see the rename/drop check in the claim loop)
+    # silently merge (see the rename/drop check in apply)
     entry_version = latest_version(table, branch)
-    job = uuid.uuid4().hex
-    tmp_dir = os.path.join(table, "_tmp", job)
-    try:
-        mine, counts, stats, parts = _stage_publish(
-            df, table, tmp_dir, stats_cols, pb,
-            cluster_within=_cluster_within,
-            cluster_parts=_cluster_parts,
-        )
-        blooms = _compute_blooms(
-            df.sparkSession, table, mine, bloom_cols or [],
-            bloom_bits, bloom_k,
-        )
-        # 3. claim the next version; on EEXIST rebase and retry
-        while True:
-            current = latest_version(table, branch)
-            if branch is not None and current is None:
-                # the branch existed at entry (checked above) but its
-                # log is empty now: a concurrent drop_branch removed
-                # it mid-write. Committing would silently resurrect
-                # the branch as a fork-less chain with no base_version
-                # — fail loudly instead.
-                raise FileNotFoundError(
-                    f"snapshot_table: branch {branch!r} on {table} was "
-                    f"dropped while this write was staging; re-create "
-                    f"the branch and retry"
-                )
-            if current is None:
-                base_shards: list[dict] = []
-                base_schema = df.schema
-                base_deletes: list[dict] = []
-                constraints: dict = {}
-            else:
-                snap = _load_snapshot(table, current, branch)
-                constraints = snap.get("constraints", {})
-                # a constraint added concurrently (between our entry
-                # validation and this claim) still binds this batch
-                fresh = {
-                    k: v for k, v in constraints.items()
-                    if validated.get(k) != v
-                }
-                if fresh:
-                    _enforce_constraints(df, fresh)
-                    validated = {**validated, **fresh}
-                base_shards = snap["shards"]
-                # evolution compatibility is an APPEND concern only: an
-                # overwrite replaces the table schema outright (Delta
-                # overwriteSchema-style), so a type change there is a
-                # legal redefinition, not an error
-                base_schema = (
-                    df.schema if mode == "overwrite"
-                    else _merge_schema(
-                        StructType.fromJson(snap["schema"]), df.schema
-                    )
-                )
-                base_deletes = snap.get("deletes", [])
-                # a concurrent overwrite that changed the partition
-                # spec invalidates this job's staged LAYOUT, not just
-                # its base — rebasing silently would commit shards
-                # partitioned under the old spec
-                if mode == "append" and snap.get("partition_by", []) != pb:
-                    raise ValueError(
-                        f"snapshot_table: table was re-partitioned to "
-                        f"{snap.get('partition_by', [])} while this "
-                        f"append (spec {pb}) was staging; retry the write"
-                    )
-                # likewise, an append rebased across a concurrent
-                # rename_column/drop_column would _merge_schema its
-                # ENTRY-TIME df.schema into the evolved base and
-                # resurrect the renamed/dropped name as a separate
-                # column, landing the new rows under the stale name.
-                # Delta/Iceberg raise a metadata conflict here; so do we.
-                if mode == "append":
-                    _rebase_evolution_guard(
-                        table, branch, snap, current, entry_version,
-                        "append",
-                    )
-            def _shard(n):
-                s = {"file": n, "n_rows": counts[n]}
-                if stats[n]:
-                    s["stats"] = stats[n]
-                if blooms[n]:
-                    s["bloom"] = blooms[n]
-                if parts.get(n):
-                    s["partition"] = parts[n]
-                return s
+    published: list[str] = []
+    mine, counts, stats, parts = _stage_publish(
+        df, table, published, stats_cols, pb,
+        cluster_within=_cluster_within,
+        cluster_parts=_cluster_parts,
+    )
+    blooms = _compute_blooms(
+        df.sparkSession, table, mine, bloom_cols or [],
+        bloom_bits, bloom_k,
+    )
+    new = _shard_entries(mine, counts, stats, blooms, parts)
 
-            if mode == "overwrite":
-                shards = [_shard(n) for n in mine]
-                schema = df.schema
-                deletes: list[dict] = []  # replaced table: nothing pending
-            else:
-                shards = list(base_shards) + [_shard(n) for n in mine]
-                schema = base_schema
-                # pending lazy deletes carry forward untouched: each one
-                # names the shards it covers, and these new shards are
-                # not among them (append-after-delete rows must survive)
-                deletes = base_deletes
-            version = (current or 0) + 1
-            snapshot = {
-                "version": version,
-                "parent": current,
-                "operation": mode,
-                "properties": dict(properties or {}),
-                "schema": schema.jsonValue(),
-                "n_shards": len(shards),
-                "n_rows": sum(s["n_rows"] for s in shards),
-                "shards": sorted(shards, key=lambda s: s["file"]),
-            }
-            if deletes:
-                snapshot["deletes"] = deletes
-            if constraints:  # invariants persist through overwrite too
-                snapshot["constraints"] = constraints
-            if pb:
-                snapshot["partition_by"] = pb
-            if branch is not None:
-                snapshot["branch"] = branch
-            if _claim_snapshot(table, tmp_dir, snapshot, branch):
-                return version
-            # lost the race: rebase on the winner's snapshot, retry
-    finally:
-        shutil.rmtree(tmp_dir, ignore_errors=True)
+    def apply(snap: dict | None) -> dict:
+        out = {
+            "operation": mode,
+            "properties": dict(properties or {}),
+            "schema": df.schema.jsonValue(),
+            "shards": new,
+            "partition_by": pb,
+        }
+        if snap is None:
+            return out  # first commit creates the table
+        _recheck_constraints(df, validated, snap)
+        if mode == "overwrite":
+            # evolution compatibility is an APPEND concern only: an
+            # overwrite replaces the table schema outright (Delta
+            # overwriteSchema-style), so a type change there is a legal
+            # redefinition, not an error. Constraints persist through
+            # it; pending lazy deletes do not (nothing they cover is
+            # live any more).
+            out["deletes"] = []
+            return out
+        schema = _merge_schema(StructType.fromJson(snap["schema"]), df.schema)
+        # a concurrent overwrite that changed the partition spec
+        # invalidates this job's staged LAYOUT, not just its base —
+        # rebasing silently would commit shards partitioned under the
+        # old spec
+        if snap.get("partition_by", []) != pb:
+            raise ValueError(
+                f"snapshot_table: table was re-partitioned to "
+                f"{snap.get('partition_by', [])} while this "
+                f"append (spec {pb}) was staging; retry the write"
+            )
+        # likewise, an append rebased across a concurrent
+        # rename_column/drop_column would _merge_schema its ENTRY-TIME
+        # df.schema into the evolved base and resurrect the
+        # renamed/dropped name as a separate column, landing the new
+        # rows under the stale name. Delta/Iceberg raise a metadata
+        # conflict here; so do we.
+        _rebase_evolution_guard(
+            table, branch, snap, snap["version"], entry_version, "append",
+        )
+        # pending lazy deletes carry forward untouched: each one names
+        # the shards it covers, and these new shards are not among them
+        # (append-after-delete rows must survive)
+        out["schema"] = schema.jsonValue()
+        out["shards"] = snap["shards"] + new
+        return out
+
+    return _commit(table, branch, apply, published, create=True)
 
 
 def read_snapshot(
@@ -3331,175 +3343,159 @@ def analyze_table(
             "snapshot_table: analyze_table needs stats_cols and/or "
             "bloom_cols"
         )
-    job = uuid.uuid4().hex
-    tmp_dir = os.path.join(table, "_tmp", job)
     stat_cache: dict[str, dict] = {}
     bloom_cache: dict[str, dict] = {}
-    try:
-        while True:
-            current = latest_version(table, branch)
-            if current is None:
-                raise FileNotFoundError(
-                    f"snapshot_table: {table} has no snapshots"
-                    + (f" on branch {branch!r}" if branch else "")
-                )
-            head = _load_snapshot(table, current, branch)
-            schema = StructType.fromJson(head["schema"])
-            for c in list(stats_cols or []) + list(bloom_cols or []):
-                if c not in schema.fieldNames():
-                    raise ValueError(
-                        f"snapshot_table: analyze_table column {c!r} "
-                        f"not in the table schema"
-                    )
-            for c in stats_cols or []:
-                t = schema[c].dataType.simpleString()
-                if t not in _STATS_COL_TYPES:
-                    raise ValueError(
-                        f"snapshot_table: stats_cols supports "
-                        f"numeric/string/date/timestamp/timestamp_ntz "
-                        f"columns only; {c!r} is {t}"
-                    )
-            for c in bloom_cols or []:
-                t = schema[c].dataType.simpleString()
-                if t not in ("int", "bigint", "smallint", "tinyint",
-                             "string"):
-                    raise ValueError(
-                        f"snapshot_table: bloom_cols supports "
-                        f"integral/string columns only; {c!r} is {t}"
-                    )
-            skipped_mapped = 0
-            targets: list[dict] = []
-            for s in head["shards"]:
-                need_stats = any(
-                    c not in s.get("stats", {}) for c in stats_cols or []
-                )
-                need_bloom = any(
-                    c not in s.get("bloom", {}) for c in bloom_cols or []
-                )
-                if not (need_stats or need_bloom):
-                    continue
-                if s.get("names") is not None:
-                    skipped_mapped += 1
-                    continue
-                targets.append(s)
-            if not targets:
-                return current  # fully stamped already: no-op
-            todo_stats = [
-                s["file"] for s in targets
-                if s["file"] not in stat_cache and stats_cols
-            ]
-            if todo_stats:
-                aggs = []
-                for c in stats_cols:
-                    # epoch-int bounds for temporal columns — same
-                    # recording rule as the write path (_stats_input)
-                    e = _stats_input(schema[c].dataType.simpleString(), c)
-                    aggs.append(F.min(e).alias(f"__min__{c}"))
-                    aggs.append(F.max(e).alias(f"__max__{c}"))
-                rows = (
-                    spark.read.schema(schema).parquet(
-                        *[
-                            os.path.join(table, _DATA_DIR, n)
-                            for n in todo_stats
-                        ]
-                    )
-                    .groupBy(F.input_file_name().alias("f"))
-                    .agg(*aggs)
-                    .collect()
-                )
-                from urllib.parse import unquote
 
-                for r in rows:
-                    name = os.path.basename(unquote(r["f"]))
-                    stat_cache[name] = {
-                        c: [r[f"__min__{c}"], r[f"__max__{c}"]]
-                        for c in stats_cols
-                    }
-                for n in todo_stats:
-                    if n not in stat_cache:
-                        # a zero-row file produces no group: stamp the
-                        # conservative unprunable sentinel so it leaves
-                        # the target set and re-analyze stays a no-op
-                        stat_cache[n] = {
-                            c: [None, None] for c in stats_cols
-                        }
-            todo_bloom = [
-                s["file"] for s in targets
-                if s["file"] not in bloom_cache and bloom_cols
-            ]
-            if todo_bloom:
-                # schema-pinned like the stats pass: target files may
-                # PREDATE a bloom column (evolution) — the pinned read
-                # NULL-fills it and the file stamps the empty sentinel
-                # instead of failing analysis
-                bloom_cache.update(
-                    _compute_blooms(
-                        spark, table, todo_bloom, list(bloom_cols),
-                        bloom_bits, bloom_k, schema=schema,
-                    )
+    def apply(head: dict) -> dict | None:
+        schema = StructType.fromJson(head["schema"])
+        for c in list(stats_cols or []) + list(bloom_cols or []):
+            if c not in schema.fieldNames():
+                raise ValueError(
+                    f"snapshot_table: analyze_table column {c!r} "
+                    f"not in the table schema"
                 )
-            restamped = []
-            target_names = {s["file"] for s in targets}
-            for s in head["shards"]:
-                if s["file"] not in target_names:
-                    restamped.append(s)
-                    continue
-                s = dict(s)
-                if stats_cols:
-                    s["stats"] = {
-                        **s.get("stats", {}),
-                        **{
-                            c: v
-                            for c, v in stat_cache.get(
-                                s["file"], {}
-                            ).items()
-                            if c not in s.get("stats", {})
-                        },
+        for c in stats_cols or []:
+            t = schema[c].dataType.simpleString()
+            if t not in _STATS_COL_TYPES:
+                raise ValueError(
+                    f"snapshot_table: stats_cols supports "
+                    f"numeric/string/date/timestamp/timestamp_ntz "
+                    f"columns only; {c!r} is {t}"
+                )
+        for c in bloom_cols or []:
+            t = schema[c].dataType.simpleString()
+            if t not in ("int", "bigint", "smallint", "tinyint",
+                         "string"):
+                raise ValueError(
+                    f"snapshot_table: bloom_cols supports "
+                    f"integral/string columns only; {c!r} is {t}"
+                )
+        skipped_mapped = 0
+        targets: list[dict] = []
+        for s in head["shards"]:
+            need_stats = any(
+                c not in s.get("stats", {}) for c in stats_cols or []
+            )
+            need_bloom = any(
+                c not in s.get("bloom", {}) for c in bloom_cols or []
+            )
+            if not (need_stats or need_bloom):
+                continue
+            if s.get("names") is not None:
+                skipped_mapped += 1
+                continue
+            targets.append(s)
+        if not targets:
+            return None  # fully stamped already: no-op
+        todo_stats = [
+            s["file"] for s in targets
+            if s["file"] not in stat_cache and stats_cols
+        ]
+        if todo_stats:
+            aggs = []
+            for c in stats_cols:
+                # epoch-int bounds for temporal columns — same
+                # recording rule as the write path (_stats_input)
+                e = _stats_input(schema[c].dataType.simpleString(), c)
+                aggs.append(F.min(e).alias(f"__min__{c}"))
+                aggs.append(F.max(e).alias(f"__max__{c}"))
+            rows = (
+                spark.read.schema(schema).parquet(
+                    *[
+                        os.path.join(table, _DATA_DIR, n)
+                        for n in todo_stats
+                    ]
+                )
+                .groupBy(F.input_file_name().alias("f"))
+                .agg(*aggs)
+                .collect()
+            )
+            from urllib.parse import unquote
+
+            for r in rows:
+                name = os.path.basename(unquote(r["f"]))
+                stat_cache[name] = {
+                    c: [r[f"__min__{c}"], r[f"__max__{c}"]]
+                    for c in stats_cols
+                }
+            for n in todo_stats:
+                if n not in stat_cache:
+                    # a zero-row file produces no group: stamp the
+                    # conservative unprunable sentinel so it leaves
+                    # the target set and re-analyze stays a no-op
+                    stat_cache[n] = {
+                        c: [None, None] for c in stats_cols
                     }
-                if bloom_cols:
-                    s["bloom"] = {
-                        **s.get("bloom", {}),
-                        **{
-                            c: v
-                            for c, v in bloom_cache.get(
-                                s["file"], {}
-                            ).items()
-                            if c not in s.get("bloom", {})
-                        },
-                    }
+        todo_bloom = [
+            s["file"] for s in targets
+            if s["file"] not in bloom_cache and bloom_cols
+        ]
+        if todo_bloom:
+            # schema-pinned like the stats pass: target files may
+            # PREDATE a bloom column (evolution) — the pinned read
+            # NULL-fills it and the file stamps the empty sentinel
+            # instead of failing analysis
+            bloom_cache.update(
+                _compute_blooms(
+                    spark, table, todo_bloom, list(bloom_cols),
+                    bloom_bits, bloom_k, schema=schema,
+                )
+            )
+        restamped = []
+        target_names = {s["file"] for s in targets}
+        for s in head["shards"]:
+            if s["file"] not in target_names:
                 restamped.append(s)
-            snapshot = {
-                "version": current + 1,
-                "parent": current,
-                "operation": "metadata",
-                "properties": {
-                    "analyzed": len(targets),
-                    **(
-                        {"analyze_stats_cols": sorted(stats_cols)}
-                        if stats_cols else {}
-                    ),
-                    **(
-                        {"analyze_bloom_cols": sorted(bloom_cols)}
-                        if bloom_cols else {}
-                    ),
-                    **(
-                        {"analyze_skipped_mapped": skipped_mapped}
-                        if skipped_mapped else {}
-                    ),
-                },
-                "schema": head["schema"],
-                "n_shards": head["n_shards"],
-                "n_rows": head["n_rows"],
-                "shards": restamped,
-            }
-            for k in ("deletes", "constraints", "partition_by", "branch",
-                      "base_version"):
-                if head.get(k):
-                    snapshot[k] = head[k]
-            if _claim_snapshot(table, tmp_dir, snapshot, branch):
-                return current + 1
-    finally:
-        shutil.rmtree(tmp_dir, ignore_errors=True)
+                continue
+            s = dict(s)
+            if stats_cols:
+                s["stats"] = {
+                    **s.get("stats", {}),
+                    **{
+                        c: v
+                        for c, v in stat_cache.get(
+                            s["file"], {}
+                        ).items()
+                        if c not in s.get("stats", {})
+                    },
+                }
+            if bloom_cols:
+                s["bloom"] = {
+                    **s.get("bloom", {}),
+                    **{
+                        c: v
+                        for c, v in bloom_cache.get(
+                            s["file"], {}
+                        ).items()
+                        if c not in s.get("bloom", {})
+                    },
+                }
+            restamped.append(s)
+        out = {
+            "operation": "metadata",
+            "properties": {
+                "analyzed": len(targets),
+                **(
+                    {"analyze_stats_cols": sorted(stats_cols)}
+                    if stats_cols else {}
+                ),
+                **(
+                    {"analyze_bloom_cols": sorted(bloom_cols)}
+                    if bloom_cols else {}
+                ),
+                **(
+                    {"analyze_skipped_mapped": skipped_mapped}
+                    if skipped_mapped else {}
+                ),
+            },
+            "schema": head["schema"],
+            "shards": restamped,
+        }
+        if head.get("base_version"):  # a fork head keeps its fork point
+            out["base_version"] = head["base_version"]
+        return out
+
+    return _commit(table, branch, apply)
 
 
 def rewrite_manifests(table: str, branch: str | None = None) -> int:
@@ -3513,43 +3509,22 @@ def rewrite_manifests(table: str, branch: str | None = None) -> int:
     files. Returns the new version (or the current one unchanged when
     there is nothing to compact: zero or one segment and no inline
     spill)."""
-    job = uuid.uuid4().hex
-    tmp_dir = os.path.join(table, "_tmp", job)
-    try:
-        while True:
-            current = latest_version(table, branch)
-            if current is None:
-                raise FileNotFoundError(
-                    f"snapshot_table: {table} has no snapshots"
-                    + (f" on branch {branch!r}" if branch else "")
-                )
-            raw = _raw_snapshot(table, current, branch)
-            mans = raw.get("manifests", [])
-            if len(mans) <= 1 and not (mans and raw.get("shards")):
-                return current  # already compact: nothing to rewrite
-            head = _load_snapshot(table, current, branch)
-            snapshot = {
-                k: head[k]
-                for k in (
-                    "schema", "shards", "deletes", "partition_by",
-                    "constraints", "n_shards", "n_rows", "base_version",
-                    "branch",
-                )
-                if k in head
-            }
-            snapshot.update(
-                {
-                    "version": current + 1,
-                    "parent": current,
-                    "operation": "rewrite_manifests",
-                    "properties": {"rewrote_segments": len(mans)},
-                    "_rewrite_manifests": True,
-                }
-            )
-            if _claim_snapshot(table, tmp_dir, snapshot, branch):
-                return current + 1
-    finally:
-        shutil.rmtree(tmp_dir, ignore_errors=True)
+
+    def apply(head: dict) -> dict | None:
+        raw = _raw_snapshot(table, head["version"], branch)
+        mans = raw.get("manifests", [])
+        if len(mans) <= 1 and not (mans and raw.get("shards")):
+            return None  # already compact: nothing to rewrite
+        out = {k: head[k] for k in ("schema", "shards", "base_version")
+               if k in head}
+        out.update(
+            operation="rewrite_manifests",
+            properties={"rewrote_segments": len(mans)},
+            _rewrite_manifests=True,
+        )
+        return out
+
+    return _commit(table, branch, apply)
 
 
 # ---------------------------------------------------------------------------
@@ -3838,71 +3813,63 @@ def publish_branch(table: str, branch: str) -> int:
             continue
         key = props.get("streaming_app_id") or ""
         lineages[key] = max(lineages.get(key, -1), bid)
-    tmp_dir = os.path.join(table, "_tmp", f"publish-{uuid.uuid4().hex}")
-    try:
-        while True:
-            current = latest_version(table)
-            if current != base:
-                raise ValueError(
-                    f"snapshot_table: cannot publish branch {branch!r}: "
-                    f"main is at version {current} but the branch forked "
-                    f"from {base} — a squash-publish would drop the "
-                    f"interleaved commits; re-fork from {current} and "
-                    f"replay the branch writes"
-                )
-            snapshot = {
+    merged: dict[str, int] = {}
+
+    def apply(snap: dict) -> dict:
+        current = snap["version"]
+        if current != base:
+            raise ValueError(
+                f"snapshot_table: cannot publish branch {branch!r}: "
+                f"main is at version {current} but the branch forked "
+                f"from {base} — a squash-publish would drop the "
+                f"interleaved commits; re-fork from {current} and "
+                f"replay the branch writes"
+            )
+        props = {
+            # streaming_* stamps stay off main commits: the main sink's
+            # replay scan matches on those exact keys, and a leaked
+            # branch stamp would make it skip or duplicate real main
+            # batches
+            k: v
+            for k, v in head.get("properties", {}).items()
+            if not k.startswith("streaming_")
+        }
+        props["published_branch"] = branch
+        props["published_seq"] = head_seq
+        # carry EVERY known lineage's mark forward, not just this
+        # branch's: merge the durable ledger + the base snapshot's marks
+        # + this window's — so the latest publish commit and the ledger
+        # each hold the COMPLETE map and retention can never erase a
+        # lineage's only high-water mark
+        merged.clear()
+        merged.update(_ledger_marks(table))
+        base_marks = snap.get("properties", {}).get("published_streaming", {})
+        for src in (base_marks, lineages):
+            for k, v in src.items():
+                merged[k] = max(merged.get(k, -1), v)
+        if merged:
+            props["published_streaming"] = merged
+        # the table state comes from the branch head alone: an empty
+        # deletes/constraints/spec there must not inherit main's
+        return {
+            "deletes": [], "constraints": {}, "partition_by": [],
+            **{
                 k: v
                 for k, v in head.items()
                 if k not in (
                     "version", "parent", "operation", "branch",
                     "base_version", "committed_at", "properties",
                 )
-            }
-            props = {
-                # streaming_* stamps stay off main commits: the main
-                # sink's replay scan matches on those exact keys, and a
-                # leaked branch stamp would make it skip or duplicate
-                # real main batches
-                k: v
-                for k, v in head.get("properties", {}).items()
-                if not k.startswith("streaming_")
-            }
-            props["published_branch"] = branch
-            props["published_seq"] = head_seq
-            # carry EVERY known lineage's mark forward, not just this
-            # branch's: merge the durable ledger + the base snapshot's
-            # marks + this window's — so the latest publish commit and
-            # the ledger each hold the COMPLETE map and retention can
-            # never erase a lineage's only high-water mark
-            merged = dict(_ledger_marks(table))
-            base_marks = (
-                {}
-                if current is None
-                else _load_snapshot(table, current)
-                .get("properties", {})
-                .get("published_streaming", {})
-            )
-            for src in (base_marks, lineages):
-                for k, v in src.items():
-                    merged[k] = max(merged.get(k, -1), v)
-            if merged:
-                props["published_streaming"] = merged
-            snapshot.update(
-                {
-                    "version": (current or 0) + 1,
-                    "parent": current,
-                    "operation": "publish",
-                    "properties": props,
-                }
-            )
-            if _claim_snapshot(table, tmp_dir, snapshot):
-                if merged:
-                    _ledger_append(table, merged)
-                return snapshot["version"]
-            # lost the race for this version number: loop re-checks the
-            # fork base (the winner moved main, so this raises conflict)
-    finally:
-        shutil.rmtree(tmp_dir, ignore_errors=True)
+            },
+            "operation": "publish",
+            "properties": props,
+        }
+
+    # a lost claim re-runs apply, whose fork-base check then conflicts
+    version = _commit(table, None, apply)
+    if merged:
+        _ledger_append(table, merged)
+    return version
 
 
 _LEDGER_DIR = "_ledger"  # under _refs/: survives expire_snapshots
@@ -3926,7 +3893,9 @@ def _ledger_marks(table: str) -> dict[str, int]:
 
 def _ledger_append(table: str, marks: dict[str, int]) -> None:
     """Append a merged ledger entry (claim loop: losers re-merge with
-    the winner and retry, same protocol as every other commit)."""
+    the winner and retry). Ledger entries are not snapshots — no
+    schema, shards or parent chain — so this claims directly instead of
+    going through :func:`_commit`."""
     tmp_dir = os.path.join(table, "_tmp", f"ledger-{uuid.uuid4().hex}")
     try:
         while True:
@@ -4188,17 +4157,19 @@ _DV_ROWS_PER_PART = 4_000_000
 
 
 def _stage_dv(
-    matched: DataFrame, table: str, tmp_dir: str,
-) -> tuple[list[str], list[str], int]:
+    matched: DataFrame, table: str, published: list[str],
+) -> dict | None:
     """Write visible matched-row coordinates (``__file``/``__pos``) as
     deletion-vector parquet part(s) published under ``data/``
     (invisible until a snapshot's tombstone names them — same two-step
-    protocol as shards). Small vectors (≤ :data:`_DV_ROWS_PER_PART`
-    coordinates) stay ONE file; bigger ones split into
-    ``ceil(n / _DV_ROWS_PER_PART)`` round-robin parts written in
-    parallel, so a GDPR-scale delete never serialises O(matched rows)
-    through a single task. Returns ``(dv_parts, covered_files,
-    n_rows)``; ``([], [], 0)`` when nothing matched."""
+    protocol as shards; each part is appended to ``published`` as it
+    lands, like :func:`_stage_publish`). Small vectors
+    (≤ :data:`_DV_ROWS_PER_PART` coordinates) stay ONE file; bigger
+    ones split into ``ceil(n / _DV_ROWS_PER_PART)`` round-robin parts
+    written in parallel, so a GDPR-scale delete never serialises
+    O(matched rows) through a single task. Returns the positional
+    tombstone naming them — ``{"positions", "shards", "n_rows"}`` with
+    the covered files — or None when nothing matched."""
     import math
 
     from pyspark.sql import functions as F
@@ -4206,6 +4177,7 @@ def _stage_dv(
     coords = matched.select(
         F.col("__file").alias("file"), F.col("__pos").alias("pos")
     ).persist()
+    out = os.path.join(table, "_tmp", uuid.uuid4().hex)
     try:
         # one tight aggregation for total + distinct covered files
         # (was groupBy("file").count().collect(): a 32-partition
@@ -4218,10 +4190,9 @@ def _stage_dv(
             F.collect_set("file").alias("__files"),
         ).collect()[0]
         if not g["__n"]:
-            return [], [], 0
+            return None
         total = int(g["__n"])
         n_parts = max(1, math.ceil(total / _DV_ROWS_PER_PART))
-        out = os.path.join(tmp_dir, "dv")
         # range-partition + sort by (file, pos): parts stay row-count
         # bounded AND file-clustered, so a per-covered-file read (the
         # CDC stream pushes filters=[("file","=",name)]) prunes whole
@@ -4242,10 +4213,16 @@ def _stage_dv(
                 else f"{stem}-{i:05d}.parquet"
             )
             os.replace(p, os.path.join(table, _DATA_DIR, name))
+            published.append(name)
             names.append(name)
-        return names, sorted(g["__files"]), total
+        return {
+            "positions": names[0] if len(names) == 1 else names,
+            "shards": sorted(g["__files"]),
+            "n_rows": total,
+        }
     finally:
         coords.unpersist()
+        shutil.rmtree(out, ignore_errors=True)
 
 
 def _dv_parts(tombstone: dict) -> list[str]:
@@ -4352,9 +4329,6 @@ def merge_upsert(
     :func:`streaming_merge_sink` fed empty micro-batches does not
     churn one version per batch.
     """
-    from pyspark.sql import functions as F
-
-    spark = updates.sparkSession
     if prune_col is not None and prune_col not in key_cols:
         raise ValueError(
             f"snapshot_table: prune_col {prune_col!r} must be a merge key"
@@ -4528,19 +4502,9 @@ def _merge_upsert_cached(
     if prune_col is not None and g["__plo"] is not None \
             and g["__phi"] is not None:
         bounds = (g["__plo"], g["__phi"])
-    if branch is not None and latest_version(table, branch) is None:
-        raise FileNotFoundError(
-            f"snapshot_table: no branch {branch!r} on {table}; "
-            f"create_branch() first"
-        )
-    while True:
-        current = latest_version(table, branch)
-        if current is None:
-            raise FileNotFoundError(
-                f"snapshot_table: {table} has no snapshots"
-                + (f" on branch {branch!r}" if branch is not None else "")
-            )
-        snap = _load_snapshot(table, current, branch)
+    published: list[str] = []
+
+    def apply(snap: dict) -> dict | None:
         if snap.get("deletes") and not mor:
             # a CoW rewrite would detach pending tombstones; a MoR
             # merge composes with them instead (its coordinate scan
@@ -4557,7 +4521,7 @@ def _merge_upsert_cached(
                 f"snapshot_table: merge keys {missing} not in table"
             )
         if updates_empty and deletes_empty:
-            return current  # no keys → no matches → no-op, no commit
+            return None  # no keys → no matches → no-op, no commit
         # kept rows already satisfied the invariants at their own
         # commit; only the incoming (surviving) rows need validation
         _enforce_constraints(surviving, snap.get("constraints", {}))
@@ -4569,139 +4533,77 @@ def _merge_upsert_cached(
             snap.get("partition_by", []),
         )
         schema = _merge_schema(table_schema, updates.schema)
-        dv_parts, dv_covers, dv_rows = [], [], 0
-        if mor:
-            # the updates ALWAYS append (normalized to the evolved
-            # schema); matched old rows are subtracted by coordinates
+        dv = None
+        if mor or not touched:
+            # the updates ALWAYS append under MoR (matched old rows are
+            # subtracted by coordinates); normalized to the evolved
+            # table schema (fills any table columns the updates batch
+            # omits with NULL)
             merged = spark.createDataFrame([], schema).unionByName(
                 surviving, allowMissingColumns=True
             )
-        elif touched:
-            cur = _read_shards(spark, table, touched, table_schema)
-            kept = cur.join(
-                match_keys, on=key_cols, how="left_anti",
-            )
-            merged = kept.unionByName(surviving, allowMissingColumns=True)
         else:
-            # normalize updates to the evolved table schema (fills any
-            # table columns the updates batch omits with NULL)
-            merged = spark.createDataFrame([], schema).unionByName(
-                surviving, allowMissingColumns=True
+            cur = _read_shards(spark, table, touched, table_schema)
+            kept = cur.join(match_keys, on=key_cols, how="left_anti")
+            merged = kept.unionByName(surviving, allowMissingColumns=True)
+        if mor and touched:
+            # coordinates of the VISIBLE matched rows (pending
+            # tombstones applied first, so stacked vectors never
+            # double-delete): semi-join the touched shards' rows on the
+            # merge keys, keep (file, pos) only
+            vis = _scan_with_deletes(
+                spark, table, table_schema, touched,
+                snap.get("deletes", []), with_pos=True,
             )
-        stats_cols = sorted(
-            {c for s in snap["shards"] for c in s.get("stats", {})}
-        )
+            matched = vis.join(
+                match_keys, on=key_cols, how="left_semi",
+            ).select("__file", "__pos")
+            dv = _stage_dv(matched, table, published)
+        if surviving_empty and dv is None and (mor or not touched):
+            # nothing to insert AND nothing deleted (MoR: the staged
+            # vector came back empty; CoW: prune proved no shard can
+            # match) — unchanged state, no commit
+            return None
         pb = snap.get("partition_by", [])
-        job = uuid.uuid4().hex
-        tmp_dir = os.path.join(table, "_tmp", job)
-        committed = False
-        try:
-            if mor and touched:
-                # coordinates of the VISIBLE matched rows (pending
-                # tombstones applied first, so stacked vectors never
-                # double-delete): semi-join the touched shards' rows
-                # on the merge keys, keep (file, pos) only
-                vis = _scan_with_deletes(
-                    spark, table, table_schema, touched,
-                    snap.get("deletes", []), with_pos=True,
-                )
-                matched = vis.join(
-                    match_keys, on=key_cols, how="left_semi",
-                ).select("__file", "__pos")
-                dv_parts, dv_covers, dv_rows = _stage_dv(
-                    matched, table, tmp_dir
-                )
-            if surviving_empty and not dv_parts and (mor or not touched):
-                # nothing to insert AND nothing deleted (MoR: the
-                # staged vector came back empty; CoW: prune proved no
-                # shard can match) — unchanged state, no commit
-                return current
-            mine, counts, stats, parts = _stage_publish(
-                merged, table, tmp_dir, stats_cols, pb,
-                cluster_parts=max(1, len(touched)) if pb else None,
-            )
-            blooms = (
-                _inherited_blooms(spark, table, mine, touched)
-                if mine else {}
-            )
-            def _shard(n):
-                s = {"file": n, "n_rows": counts[n]}
-                if stats[n]:
-                    s["stats"] = stats[n]
-                if blooms.get(n):
-                    s["bloom"] = blooms[n]
-                if parts.get(n):
-                    s["partition"] = parts[n]
-                return s
-
-            old = snap["shards"] if mor else carried
-            shards = list(old) + [_shard(n) for n in mine]
-            deletes = list(snap.get("deletes", []))
-            if dv_parts:
-                deletes.append(
+        mine, counts, stats, parts = _stage_publish(
+            merged, table, published,
+            sorted({c for s in snap["shards"] for c in s.get("stats", {})}),
+            pb,
+            cluster_parts=max(1, len(touched)) if pb else None,
+        )
+        blooms = (
+            _inherited_blooms(spark, table, mine, touched) if mine else {}
+        )
+        return {
+            "operation": "merge",
+            "properties": {
+                **(properties or {}),
+                "merge_keys": list(key_cols),
+                "shards_rewritten": 0 if mor else len(touched),
+                "shards_skipped": len(carried),
+                **(
                     {
-                        "positions": (
-                            dv_parts[0] if len(dv_parts) == 1
-                            else dv_parts
-                        ),
-                        "shards": dv_covers,
-                        "n_rows": dv_rows,
+                        "mor": True,
+                        "rows_deleted": dv["n_rows"] if dv else 0,
+                        **({"dv": ",".join(_dv_parts(dv))} if dv else {}),
                     }
-                )
-            version = current + 1
-            snapshot = {
-                "version": version,
-                "parent": current,
-                "operation": "merge",
-                "properties": {
-                    **(properties or {}),
-                    "merge_keys": list(key_cols),
-                    "shards_rewritten": 0 if mor else len(touched),
-                    "shards_skipped": len(carried),
-                    **(
-                        {
-                            "mor": True,
-                            "rows_deleted": dv_rows,
-                            **(
-                                {"dv": ",".join(dv_parts)}
-                                if dv_parts else {}
-                            ),
-                        }
-                        if mor else {}
-                    ),
-                    **(
-                        {"delete_condition": delete_condition}
-                        if delete_condition is not None else {}
-                    ),
-                },
-                "schema": schema.jsonValue(),
-                "n_shards": len(shards),
-                # physical rows: pending vectors subtract at read time
-                "n_rows": sum(s["n_rows"] for s in shards),
-                "shards": sorted(shards, key=lambda s: s["file"]),
-            }
-            if deletes:
-                snapshot["deletes"] = deletes
-            if snap.get("constraints"):
-                snapshot["constraints"] = snap["constraints"]
-            if pb:
-                snapshot["partition_by"] = pb
-            if branch is not None:
-                snapshot["branch"] = branch
-            if _claim_snapshot(table, tmp_dir, snapshot, branch):
-                committed = True
-                return version
-            continue  # concurrent commit won: retry on the new base
-        finally:
-            shutil.rmtree(tmp_dir, ignore_errors=True)
-            if not committed and dv_parts:
-                # lost the race (or failed): the published-but-
-                # unclaimed vector parts are unreferenced — reclaim now
-                for n in dv_parts:
-                    try:
-                        os.remove(os.path.join(table, _DATA_DIR, n))
-                    except FileNotFoundError:
-                        pass
+                    if mor else {}
+                ),
+                **(
+                    {"delete_condition": delete_condition}
+                    if delete_condition is not None else {}
+                ),
+            },
+            "schema": schema.jsonValue(),
+            # physical rows: pending vectors subtract at read time
+            "shards": (snap["shards"] if mor else carried)
+            + _shard_entries(mine, counts, stats, blooms, parts),
+            "deletes": snap.get("deletes", []) + ([dv] if dv else []),
+        }
+
+    # a lost claim re-runs apply against the new base: the conservative
+    # conflict rule (re-scan every shard the winner may have touched)
+    return _commit(table, branch, apply, published)
 
 
 def drop_partition(table: str, matching: dict) -> int:
@@ -4725,75 +4627,47 @@ def drop_partition(table: str, matching: dict) -> int:
     lazy-delete tombstones stay attached to the surviving shards they
     cover (the read path resolves covers against LIVE shards only).
     Returns the committed version."""
-    job = uuid.uuid4().hex
-    tmp_dir = os.path.join(table, "_tmp", job)
-    try:
-        while True:
-            current = latest_version(table)
-            if current is None:
-                raise FileNotFoundError(
-                    f"snapshot_table: {table} has no snapshots"
-                )
-            snap = _load_snapshot(table, current)
-            pb = snap.get("partition_by", [])
-            bad = [c for c in matching if c not in pb]
-            if bad:
-                raise ValueError(
-                    f"snapshot_table: drop_partition columns {bad} are "
-                    f"not partition columns (spec: {pb})"
-                )
-            unstamped = [
-                s["file"]
-                for s in snap["shards"]
-                if any(c not in s.get("partition", {}) for c in matching)
-            ]
-            if unstamped:
-                raise ValueError(
-                    f"snapshot_table: {len(unstamped)} shard(s) carry no "
-                    f"recorded partition values for {sorted(matching)} "
-                    f"(pre-partitioning or streaming appends) and may "
-                    f"contain matching rows; run compact_table first"
-                )
-            probes = {
-                c: _transform_probes(pb, c, w) for c, w in matching.items()
-            }
-            kept, dropped = [], []
-            for s in snap["shards"]:
-                (dropped if all(
-                    _partition_match(s, c, t) for c, t in probes.items()
-                ) else kept).append(s)
-            version = current + 1
-            snapshot = {
-                "version": version,
-                "parent": current,
-                "operation": "drop_partition",
-                "properties": {
-                    "partition": {
-                        c: (
-                            [_pstr(v) for v in w]
-                            if isinstance(w, (list, tuple, set))
-                            else _pstr(w)
-                        )
-                        for c, w in matching.items()
-                    },
-                    "shards_dropped": len(dropped),
-                    "rows_dropped": sum(s["n_rows"] for s in dropped),
-                },
-                "schema": snap["schema"],
-                "n_shards": len(kept),
-                "n_rows": sum(s["n_rows"] for s in kept),
-                "shards": kept,
-            }
-            if snap.get("deletes"):
-                snapshot["deletes"] = snap["deletes"]
-            if snap.get("constraints"):
-                snapshot["constraints"] = snap["constraints"]
-            if pb:
-                snapshot["partition_by"] = pb
-            if _claim_snapshot(table, tmp_dir, snapshot):
-                return version
-    finally:
-        shutil.rmtree(tmp_dir, ignore_errors=True)
+
+    def apply(snap: dict) -> dict:
+        pb = snap.get("partition_by", [])
+        bad = [c for c in matching if c not in pb]
+        if bad:
+            raise ValueError(
+                f"snapshot_table: drop_partition columns {bad} are "
+                f"not partition columns (spec: {pb})"
+            )
+        unstamped = [
+            s["file"]
+            for s in snap["shards"]
+            if any(c not in s.get("partition", {}) for c in matching)
+        ]
+        if unstamped:
+            raise ValueError(
+                f"snapshot_table: {len(unstamped)} shard(s) carry no "
+                f"recorded partition values for {sorted(matching)} "
+                f"(pre-partitioning or streaming appends) and may "
+                f"contain matching rows; run compact_table first"
+            )
+        probes = {
+            c: _transform_probes(pb, c, w) for c, w in matching.items()
+        }
+        kept, dropped = [], []
+        for s in snap["shards"]:
+            (dropped if all(
+                _partition_match(s, c, t) for c, t in probes.items()
+            ) else kept).append(s)
+        return {
+            "operation": "drop_partition",
+            "properties": {
+                "partition": _probe_log(matching),
+                "shards_dropped": len(dropped),
+                "rows_dropped": sum(s["n_rows"] for s in dropped),
+            },
+            "schema": snap["schema"],
+            "shards": kept,
+        }
+
+    return _commit(table, None, apply)
 
 
 def replace_partition(
@@ -4876,14 +4750,15 @@ def replace_partition(
     validated = _base_constraints(table, branch)
     _enforce_constraints(df, validated)
     entry_version = latest_version(table, branch)
-    job = uuid.uuid4().hex
-    tmp_dir = os.path.join(table, "_tmp", job)
-    mine: list[str] = []
-    committed = False
-    try:
-        mine, counts, stats, parts = _stage_publish(
-            df, table, tmp_dir, stats_cols, pb,
-        )
+    published: list[str] = []
+    mine, counts, stats, parts = _stage_publish(
+        df, table, published, stats_cols, pb,
+    )
+    staged_tuples = {tuple(sorted(parts[n].items())) for n in mine}
+
+    def apply(snap: dict) -> dict:
+        # the staged-layout checks raise inside apply so that _commit
+        # reclaims the published shards (they depend only on staging)
         if matching is None and not mine:
             raise ValueError(
                 "snapshot_table: dynamic replace_partition with an "
@@ -4893,9 +4768,7 @@ def replace_partition(
         if probes is not None:
             stray = [
                 n for n in mine
-                if not all(
-                    parts[n].get(c) in t for c, t in probes.items()
-                )
+                if not all(parts[n].get(c) in t for c, t in probes.items())
             ]
             if stray:
                 ex = parts[stray[0]]
@@ -4906,139 +4779,65 @@ def replace_partition(
                     f"named partition would corrupt partitions this "
                     f"replace did not declare"
                 )
-            needed = set(probes)
-        else:
-            needed = set(pb)
-        staged_tuples = {
-            tuple(sorted(parts[n].items())) for n in mine
+        needed = set(probes) if probes is not None else set(pb)
+        if snap.get("partition_by", []) != pb:
+            raise ValueError(
+                f"snapshot_table: table was re-partitioned to "
+                f"{snap.get('partition_by', [])} while this replace "
+                f"(spec {pb}) was staging; retry the write"
+            )
+        _recheck_constraints(df, validated, snap)
+        _rebase_evolution_guard(
+            table, branch, snap, snap["version"], entry_version, "replace",
+        )
+        unstamped = [
+            s["file"]
+            for s in snap["shards"]
+            if any(c not in s.get("partition", {}) for c in needed)
+        ]
+        if unstamped:
+            raise ValueError(
+                f"snapshot_table: {len(unstamped)} live shard(s) "
+                f"carry no recorded partition values for "
+                f"{sorted(needed)} (pre-partitioning or streaming "
+                f"appends) and may contain matching rows; run "
+                f"compact_table first"
+            )
+        kept, replaced = [], []
+        for s in snap["shards"]:
+            if probes is not None:
+                hit = all(
+                    _partition_match(s, c, t) for c, t in probes.items()
+                )
+            else:
+                rec = {c: s["partition"].get(c) for c in pb}
+                hit = tuple(sorted(rec.items())) in staged_tuples
+            (replaced if hit else kept).append(s)
+        blooms = _inherited_blooms(df.sparkSession, table, mine, replaced)
+        return {
+            "operation": "replace_partition",
+            "properties": {
+                **(properties or {}),
+                # SOURCE probe values, same form drop_partition logs — a
+                # metadata consumer comparing sibling commits must not
+                # need to re-run the transform
+                "partition": (
+                    _probe_log(canon) if probes is not None
+                    else {"dynamic_tuples": [
+                        dict(t) for t in sorted(staged_tuples, key=repr)
+                    ]}
+                ),
+                "shards_replaced": len(replaced),
+                "rows_replaced": sum(s["n_rows"] for s in replaced),
+            },
+            "schema": _merge_schema(
+                StructType.fromJson(snap["schema"]), df.schema
+            ).jsonValue(),
+            "shards": kept
+            + _shard_entries(mine, counts, stats, blooms, parts),
         }
-        while True:
-            current = latest_version(table, branch)
-            if current is None:
-                raise FileNotFoundError(
-                    f"snapshot_table: branch {branch!r} on {table} was "
-                    f"dropped while this replace was staging; re-create "
-                    f"the branch and retry"
-                    if branch is not None
-                    else f"snapshot_table: {table} has no snapshots"
-                )
-            snap = _load_snapshot(table, current, branch)
-            if snap.get("partition_by", []) != pb:
-                raise ValueError(
-                    f"snapshot_table: table was re-partitioned to "
-                    f"{snap.get('partition_by', [])} while this replace "
-                    f"(spec {pb}) was staging; retry the write"
-                )
-            constraints = snap.get("constraints", {})
-            fresh = {
-                k: v for k, v in constraints.items()
-                if validated.get(k) != v
-            }
-            if fresh:
-                _enforce_constraints(df, fresh)
-                validated = {**validated, **fresh}
-            _rebase_evolution_guard(
-                table, branch, snap, current, entry_version, "replace",
-            )
-            unstamped = [
-                s["file"]
-                for s in snap["shards"]
-                if any(c not in s.get("partition", {}) for c in needed)
-            ]
-            if unstamped:
-                raise ValueError(
-                    f"snapshot_table: {len(unstamped)} live shard(s) "
-                    f"carry no recorded partition values for "
-                    f"{sorted(needed)} (pre-partitioning or streaming "
-                    f"appends) and may contain matching rows; run "
-                    f"compact_table first"
-                )
-            kept, replaced = [], []
-            for s in snap["shards"]:
-                if probes is not None:
-                    hit = all(
-                        _partition_match(s, c, t)
-                        for c, t in probes.items()
-                    )
-                else:
-                    rec = {c: s["partition"].get(c) for c in pb}
-                    hit = tuple(sorted(rec.items())) in staged_tuples
-                (replaced if hit else kept).append(s)
-            blooms = _inherited_blooms(
-                df.sparkSession, table, mine, replaced,
-            )
 
-            def _shard(n):
-                sh = {"file": n, "n_rows": counts[n]}
-                if stats[n]:
-                    sh["stats"] = stats[n]
-                if blooms.get(n):
-                    sh["bloom"] = blooms[n]
-                if parts.get(n):
-                    sh["partition"] = parts[n]
-                return sh
-
-            version = current + 1
-            snapshot = {
-                "version": version,
-                "parent": current,
-                "operation": "replace_partition",
-                "properties": {
-                    **(properties or {}),
-                    # SOURCE probe values, same form drop_partition
-                    # logs — a metadata consumer comparing sibling
-                    # commits must not need to re-run the transform
-                    "partition": (
-                        {
-                            c: (
-                                [_pstr(v) for v in w]
-                                if isinstance(w, (list, tuple, set))
-                                else _pstr(w)
-                            )
-                            for c, w in canon.items()
-                        }
-                        if probes is not None
-                        else {"dynamic_tuples": [
-                            dict(t)
-                            for t in sorted(staged_tuples, key=repr)
-                        ]}
-                    ),
-                    "shards_replaced": len(replaced),
-                    "rows_replaced": sum(s["n_rows"] for s in replaced),
-                },
-                "schema": _merge_schema(
-                    StructType.fromJson(snap["schema"]), df.schema
-                ).jsonValue(),
-                "n_shards": len(kept) + len(mine),
-                "n_rows": (
-                    sum(s["n_rows"] for s in kept)
-                    + sum(counts[n] for n in mine)
-                ),
-                "shards": sorted(
-                    kept + [_shard(n) for n in mine],
-                    key=lambda s: s["file"],
-                ),
-                "partition_by": pb,
-            }
-            if snap.get("deletes"):
-                snapshot["deletes"] = snap["deletes"]
-            if constraints:
-                snapshot["constraints"] = constraints
-            if branch is not None:
-                snapshot["branch"] = branch
-            if _claim_snapshot(table, tmp_dir, snapshot, branch):
-                committed = True
-                return version
-    finally:
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-        if not committed:
-            # nothing references the published-but-unclaimed shards;
-            # reclaim them now instead of leaving orphans for vacuum
-            for n in mine:
-                try:
-                    os.remove(os.path.join(table, _DATA_DIR, n))
-                except FileNotFoundError:
-                    pass
+    return _commit(table, branch, apply, published)
 
 
 def delete_where(
@@ -5077,8 +4876,8 @@ def delete_where(
     Commit is the standard optimistic claim; on losing a race the whole
     operation retries against the new base (a delete rebased onto a
     concurrent append must re-scan the appended shards too — the
-    conservative Delta conflict rule). The loser's published shards
-    become unreferenced orphans (reclaimed by :func:`expire_snapshots`).
+    conservative Delta conflict rule). The shards a lost attempt
+    published are removed once the retry commits (:func:`_commit`).
 
     ``lazy=True`` is the MERGE-ON-READ delete (Iceberg equality-delete /
     Hudi MOR shaped): commit only a metadata tombstone — the condition
@@ -5104,36 +4903,48 @@ def delete_where(
     """
     from pyspark.sql import functions as F
 
-    if branch is not None and latest_version(table, branch) is None:
-        raise FileNotFoundError(
-            f"snapshot_table: no branch {branch!r} on {table}; "
-            f"create_branch() first"
-        )
-    if lazy:
-        current = latest_version(table, branch)
-        if current is None:
-            raise FileNotFoundError(f"snapshot_table: {table} has no snapshots")
-        schema = StructType.fromJson(
-            _load_snapshot(table, current, branch)["schema"]
-        )
+    keep = ~F.coalesce(F.expr(condition).cast("boolean"), F.lit(False))
+    published: list[str] = []
+
+    def tombstone(snap: dict) -> dict | None:
         # analyse the condition against the table schema BEFORE the
         # tombstone commits: the CoW path validates implicitly by
         # evaluating the filter, but a committed unparseable/misspelled
         # lazy condition would fail every subsequent read AND the
         # compact_table remedy (it reads through read_snapshot)
-        _ = spark.createDataFrame([], schema).where(
-            F.coalesce(F.expr(condition).cast("boolean"), F.lit(False))
-        ).schema
-        return _lazy_delete(table, condition, partition_prune, branch)
-    keep = ~F.coalesce(F.expr(condition).cast("boolean"), F.lit(False))
-    while True:
-        current = latest_version(table, branch)
-        if current is None:
-            raise FileNotFoundError(
-                f"snapshot_table: {table} has no snapshots"
-                + (f" on branch {branch!r}" if branch is not None else "")
-            )
-        snap = _load_snapshot(table, current, branch)
+        schema = StructType.fromJson(snap["schema"])
+        _ = spark.createDataFrame([], schema).where(keep).schema
+        # partition_prune narrows the tombstone to the shards whose
+        # partition values can match (same caller contract as the CoW
+        # path): the others never pay the read-time NOT-filter
+        covered, _ = _triage_shards(
+            snap["shards"], None, partition_prune,
+            snap.get("partition_by", []),
+        )
+        if not covered:
+            # tombstone would cover zero shards — nothing any future
+            # read could subtract; no empty commit
+            return None
+        return {
+            "operation": "delete",
+            "properties": {
+                "delete_condition": condition,
+                "lazy": True,
+                "shards_rewritten": 0,
+                "shards_skipped": len(snap["shards"]),
+            },
+            "schema": snap["schema"],
+            # physical rows: lazy deletes subtract at read time
+            "shards": snap["shards"],
+            "deletes": snap.get("deletes", []) + [
+                {
+                    "condition": condition,
+                    "shards": sorted(s["file"] for s in covered),
+                }
+            ],
+        }
+
+    def rewrite(snap: dict) -> dict | None:
         if snap.get("deletes"):
             raise ValueError(
                 "snapshot_table: copy-on-write delete with pending lazy "
@@ -5153,134 +4964,36 @@ def delete_where(
             # (the rewrite path would have): a typo must raise, not
             # silently "succeed".
             _ = spark.createDataFrame([], schema).where(keep).schema
-            return current
+            return None
         # stats columns to recompute for rewritten shards: whatever the
         # touched shards already recorded (keeps pruning working after)
         stats_cols = sorted({c for s in touched for c in s.get("stats", {})})
         pb = snap.get("partition_by", [])
-        job = uuid.uuid4().hex
-        tmp_dir = os.path.join(table, "_tmp", job)
-        try:
-            mine, counts, stats, parts = [], {}, {}, {}
-            if touched:
-                remain = _read_shards(spark, table, touched, schema).where(
-                    keep
-                )
-                mine, counts, stats, parts = _stage_publish(
-                    remain, table, tmp_dir, stats_cols, pb,
-                    cluster_parts=max(1, len(touched)) if pb else None,
-                )
-            blooms = (
-                _inherited_blooms(spark, table, mine, touched)
-                if mine else {}
-            )
-            def _shard(n):
-                s = {"file": n, "n_rows": counts[n]}
-                if stats[n]:
-                    s["stats"] = stats[n]
-                if blooms.get(n):
-                    s["bloom"] = blooms[n]
-                if parts.get(n):
-                    s["partition"] = parts[n]
-                return s
+        remain = _read_shards(spark, table, touched, schema).where(keep)
+        mine, counts, stats, parts = _stage_publish(
+            remain, table, published, stats_cols, pb,
+            cluster_parts=max(1, len(touched)) if pb else None,
+        )
+        blooms = (
+            _inherited_blooms(spark, table, mine, touched) if mine else {}
+        )
+        return {
+            "operation": "delete",
+            "properties": {
+                "delete_condition": condition,
+                "shards_rewritten": len(touched),
+                "shards_skipped": len(carried),
+                **(
+                    {"partition_prune": _probe_log(partition_prune)}
+                    if partition_prune else {}
+                ),
+            },
+            "schema": snap["schema"],
+            "shards": carried
+            + _shard_entries(mine, counts, stats, blooms, parts),
+        }
 
-            shards = list(carried) + [_shard(n) for n in mine]
-            version = current + 1
-            snapshot = {
-                "version": version,
-                "parent": current,
-                "operation": "delete",
-                "properties": {
-                    "delete_condition": condition,
-                    "shards_rewritten": len(touched),
-                    "shards_skipped": len(carried),
-                    **(
-                        {"partition_prune": {
-                            c: _pstr(w) if not isinstance(
-                                w, (list, tuple, set)
-                            ) else [_pstr(v) for v in w]
-                            for c, w in partition_prune.items()
-                        }}
-                        if partition_prune else {}
-                    ),
-                },
-                "schema": snap["schema"],
-                "n_shards": len(shards),
-                "n_rows": sum(s["n_rows"] for s in shards),
-                "shards": sorted(shards, key=lambda s: s["file"]),
-            }
-            if snap.get("constraints"):
-                snapshot["constraints"] = snap["constraints"]
-            if pb:
-                snapshot["partition_by"] = pb
-            if branch is not None:
-                snapshot["branch"] = branch
-            if _claim_snapshot(table, tmp_dir, snapshot, branch):
-                return version
-            continue  # concurrent commit won: retry on the new base
-        finally:
-            shutil.rmtree(tmp_dir, ignore_errors=True)
-
-
-def _lazy_delete(
-    table: str, condition: str, partition_prune: dict | None = None,
-    branch: str | None = None,
-) -> int:
-    """The metadata-only commit behind ``delete_where(lazy=True)``.
-    ``partition_prune`` narrows the tombstone to the shards whose
-    partition values can match (caller contract as on the CoW path);
-    shards it provably excludes never pay the read-time NOT-filter."""
-    job = uuid.uuid4().hex
-    tmp_dir = os.path.join(table, "_tmp", job)
-    try:
-        while True:
-            current = latest_version(table, branch)
-            if current is None:
-                raise FileNotFoundError(
-                    f"snapshot_table: {table} has no snapshots"
-                    + (f" on branch {branch!r}" if branch is not None else "")
-                )
-            snap = _load_snapshot(table, current, branch)
-            covered, _ = _triage_shards(
-                snap["shards"], None, partition_prune,
-                snap.get("partition_by", []),
-            )
-            if not covered:
-                # tombstone would cover zero shards — nothing any
-                # future read could subtract; no empty commit
-                return current
-            tombstone = {
-                "condition": condition,
-                "shards": sorted(s["file"] for s in covered),
-            }
-            version = current + 1
-            snapshot = {
-                "version": version,
-                "parent": current,
-                "operation": "delete",
-                "properties": {
-                    "delete_condition": condition,
-                    "lazy": True,
-                    "shards_rewritten": 0,
-                    "shards_skipped": len(snap["shards"]),
-                },
-                "schema": snap["schema"],
-                "n_shards": len(snap["shards"]),
-                # physical rows: lazy deletes subtract at read time
-                "n_rows": snap["n_rows"],
-                "shards": snap["shards"],
-                "deletes": snap.get("deletes", []) + [tombstone],
-            }
-            if snap.get("constraints"):
-                snapshot["constraints"] = snap["constraints"]
-            if snap.get("partition_by"):
-                snapshot["partition_by"] = snap["partition_by"]
-            if branch is not None:
-                snapshot["branch"] = branch
-            if _claim_snapshot(table, tmp_dir, snapshot, branch):
-                return version
-    finally:
-        shutil.rmtree(tmp_dir, ignore_errors=True)
+    return _commit(table, branch, tombstone if lazy else rewrite, published)
 
 
 def update_where(
@@ -5340,20 +5053,10 @@ def update_where(
         raise ValueError(
             "snapshot_table: update_where needs at least one SET column"
         )
-    if branch is not None and latest_version(table, branch) is None:
-        raise FileNotFoundError(
-            f"snapshot_table: no branch {branch!r} on {table}; "
-            f"create_branch() first"
-        )
     hit = F.coalesce(F.expr(condition).cast("boolean"), F.lit(False))
-    while True:
-        current = latest_version(table, branch)
-        if current is None:
-            raise FileNotFoundError(
-                f"snapshot_table: {table} has no snapshots"
-                + (f" on branch {branch!r}" if branch is not None else "")
-            )
-        snap = _load_snapshot(table, current, branch)
+    published: list[str] = []
+
+    def apply(snap: dict) -> dict | None:
         if snap.get("deletes") and not mor:
             raise ValueError(
                 "snapshot_table: copy-on-write update with pending lazy "
@@ -5388,148 +5091,81 @@ def update_where(
             # pruning proved no shard overlaps: a no-op UPDATE must not
             # churn a version (condition + SET exprs were already
             # analyzed above) — compact_partitions' no-empty-commit rule
-            return current
+            return None
         stats_cols = sorted({c for s in touched for c in s.get("stats", {})})
         pb = snap.get("partition_by", [])
-        job = uuid.uuid4().hex
-        tmp_dir = os.path.join(table, "_tmp", job)
-        committed = False
-        dv_parts, dv_covers, dv_rows = [], [], 0
-        cached = None
-        try:
-            mine, counts, stats, parts = [], {}, {}, {}
-            if touched and mor:
-                # MoR: only the matched VISIBLE rows' post-images are
-                # written; their pre-images are subtracted by position
-                vis = _scan_with_deletes(
-                    spark, table, schema, touched,
-                    snap.get("deletes", []), with_pos=True,
+        post = [
+            F.expr(set_exprs[f.name]).alias(f.name)
+            if f.name in set_exprs else F.col(f.name)
+            for f in schema.fields
+        ]
+        dv = None
+        if mor:
+            # MoR: only the matched VISIBLE rows' post-images are
+            # written; their pre-images are subtracted by position
+            matched = _scan_with_deletes(
+                spark, table, schema, touched,
+                snap.get("deletes", []), with_pos=True,
+            ).where(hit).persist()
+            try:
+                updated = matched.select(*post)
+                _enforce_constraints(updated, snap.get("constraints", {}))
+                dv = _stage_dv(
+                    matched.select("__file", "__pos"), table, published
                 )
-                matched = cached = vis.where(hit).persist()
-                updated = matched.select(
-                    *[
-                        F.expr(set_exprs[f.name]).alias(f.name)
-                        if f.name in set_exprs
-                        else F.col(f.name)
-                        for f in schema.fields
-                    ]
-                )
-                _enforce_constraints(
-                    updated, snap.get("constraints", {})
-                )
-                dv_parts, dv_covers, dv_rows = _stage_dv(
-                    matched.select("__file", "__pos"), table, tmp_dir
-                )
-                if not dv_parts:
-                    return current  # nothing matched: no-op, no commit
+                if dv is None:
+                    return None  # nothing matched: no-op, no commit
                 mine, counts, stats, parts = _stage_publish(
-                    updated, table, tmp_dir, stats_cols, pb,
+                    updated, table, published, stats_cols, pb,
                 )
-            elif touched:
-                cur = _read_shards(spark, table, touched, schema)
-                rewritten = cur.select(
-                    *[
-                        F.when(hit, F.expr(set_exprs[f.name]))
-                        .otherwise(F.col(f.name))
-                        .alias(f.name)
-                        if f.name in set_exprs
-                        else F.col(f.name)
-                        for f in schema.fields
-                    ]
-                )
-                # validate the post-image of the rows the PRE-image
-                # condition matches: filtering the rewritten frame by
-                # `hit` would re-evaluate the condition on post-image
-                # values, letting an update that moves rows OUT of its
-                # own predicate smuggle constraint-violating rows in
-                updated = cur.where(hit).select(
-                    *[
-                        F.expr(set_exprs[f.name]).alias(f.name)
-                        if f.name in set_exprs
-                        else F.col(f.name)
-                        for f in schema.fields
-                    ]
-                )
-                _enforce_constraints(
-                    updated, snap.get("constraints", {})
-                )
-                # a SET on a partition column is legal: the rewrite
-                # re-partitions through _stage_publish, so moved rows
-                # land in (and are logged under) their NEW partition
-                mine, counts, stats, parts = _stage_publish(
-                    rewritten, table, tmp_dir, stats_cols, pb,
-                    cluster_parts=max(1, len(touched)) if pb else None,
-                )
-            blooms = (
-                _inherited_blooms(spark, table, mine, touched)
-                if mine else {}
+            finally:
+                matched.unpersist()  # incl. constraint-refusal raises
+        else:
+            cur = _read_shards(spark, table, touched, schema)
+            rewritten = cur.select(
+                *[
+                    F.when(hit, F.expr(set_exprs[f.name]))
+                    .otherwise(F.col(f.name))
+                    .alias(f.name)
+                    if f.name in set_exprs
+                    else F.col(f.name)
+                    for f in schema.fields
+                ]
             )
-            def _shard(n):
-                s = {"file": n, "n_rows": counts[n]}
-                if stats[n]:
-                    s["stats"] = stats[n]
-                if blooms.get(n):
-                    s["bloom"] = blooms[n]
-                if parts.get(n):
-                    s["partition"] = parts[n]
-                return s
+            # validate the post-image of the rows the PRE-image
+            # condition matches: filtering the rewritten frame by `hit`
+            # would re-evaluate the condition on post-image values,
+            # letting an update that moves rows OUT of its own
+            # predicate smuggle constraint-violating rows in
+            _enforce_constraints(
+                cur.where(hit).select(*post), snap.get("constraints", {})
+            )
+            # a SET on a partition column is legal: the rewrite
+            # re-partitions through _stage_publish, so moved rows land
+            # in (and are logged under) their NEW partition
+            mine, counts, stats, parts = _stage_publish(
+                rewritten, table, published, stats_cols, pb,
+                cluster_parts=max(1, len(touched)) if pb else None,
+            )
+        blooms = (
+            _inherited_blooms(spark, table, mine, touched) if mine else {}
+        )
+        return {
+            "operation": "update",
+            "properties": {
+                "update_condition": condition,
+                "set": dict(set_exprs),
+                "shards_rewritten": 0 if mor else len(touched),
+                "shards_skipped": len(carried),
+                **({"mor": True, "rows_updated": dv["n_rows"]} if mor else {}),
+            },
+            "schema": snap["schema"],
+            "shards": (snap["shards"] if mor else carried)
+            + _shard_entries(mine, counts, stats, blooms, parts),
+            "deletes": snap.get("deletes", []) + ([dv] if dv else []),
+        }
 
-            old = snap["shards"] if mor else carried
-            shards = list(old) + [_shard(n) for n in mine]
-            deletes = list(snap.get("deletes", []))
-            if dv_parts:
-                deletes.append(
-                    {
-                        "positions": (
-                            dv_parts[0] if len(dv_parts) == 1
-                            else dv_parts
-                        ),
-                        "shards": dv_covers,
-                        "n_rows": dv_rows,
-                    }
-                )
-            version = current + 1
-            snapshot = {
-                "version": version,
-                "parent": current,
-                "operation": "update",
-                "properties": {
-                    "update_condition": condition,
-                    "set": dict(set_exprs),
-                    "shards_rewritten": 0 if mor else len(touched),
-                    "shards_skipped": len(carried),
-                    **(
-                        {"mor": True, "rows_updated": dv_rows}
-                        if mor else {}
-                    ),
-                },
-                "schema": snap["schema"],
-                "n_shards": len(shards),
-                "n_rows": sum(s["n_rows"] for s in shards),
-                "shards": sorted(shards, key=lambda s: s["file"]),
-            }
-            if deletes:
-                snapshot["deletes"] = deletes
-            if snap.get("constraints"):
-                snapshot["constraints"] = snap["constraints"]
-            if pb:
-                snapshot["partition_by"] = pb
-            if branch is not None:
-                snapshot["branch"] = branch
-            if _claim_snapshot(table, tmp_dir, snapshot, branch):
-                committed = True
-                return version
-            continue  # concurrent commit won: retry on the new base
-        finally:
-            if cached is not None:
-                cached.unpersist()  # incl. constraint-refusal raises
-            shutil.rmtree(tmp_dir, ignore_errors=True)
-            if not committed and dv_parts:
-                for n in dv_parts:
-                    try:
-                        os.remove(os.path.join(table, _DATA_DIR, n))
-                    except FileNotFoundError:
-                        pass
+    return _commit(table, branch, apply, published)
 
 
 def rollback(table: str, version: int) -> int:
@@ -5569,37 +5205,22 @@ def rollback(table: str, version: int) -> int:
                 f"live — the kept constraints may no longer resolve; "
                 f"drop the constraints first"
             )
-    job = uuid.uuid4().hex
-    tmp_dir = os.path.join(table, "_tmp", job)
-    try:
-        while True:
-            current = latest_version(table)
-            new_version = (current or 0) + 1
-            snapshot = {
-                "version": new_version,
-                "parent": current,
-                "operation": "rollback",
-                "properties": {"rollback_of": version},
-                "schema": target["schema"],
-                "n_shards": target["n_shards"],
-                "n_rows": target["n_rows"],
-                "shards": target["shards"],
-            }
-            if target.get("deletes"):
-                snapshot["deletes"] = target["deletes"]
-            # the spec travels WITH the data it describes: restoring
-            # pre-repartition shards restores their (absent) spec too
-            if target.get("partition_by"):
-                snapshot["partition_by"] = target["partition_by"]
-            # restore DATA only: the invariants stay whatever they are
-            # NOW (rolled-back rows passed validation at their commit)
-            live = _base_constraints(table)
-            if live:
-                snapshot["constraints"] = live
-            if _claim_snapshot(table, tmp_dir, snapshot):
-                return new_version
-    finally:
-        shutil.rmtree(tmp_dir, ignore_errors=True)
+    # the spec travels WITH the data it describes (restoring
+    # pre-repartition shards restores their absent spec too); the
+    # constraints are not set, so _commit carries the CURRENT ones —
+    # DATA only is restored (rolled-back rows passed validation at
+    # their own commit)
+    return _commit(
+        table, None,
+        lambda snap: {
+            "operation": "rollback",
+            "properties": {"rollback_of": version},
+            "schema": target["schema"],
+            "shards": target["shards"],
+            "deletes": target.get("deletes", []),
+            "partition_by": target.get("partition_by", []),
+        },
+    )
 
 
 def _resolve_change_range(
@@ -6083,106 +5704,71 @@ def compact_partitions(
     per-shard blooms on the rewrite, same as :func:`write_snapshot`.
     Returns the committed version."""
     n = max(1, target_shards)
-    job = uuid.uuid4().hex
-    tmp_dir = os.path.join(table, "_tmp", job)
-    try:
-        while True:
-            current = latest_version(table)
-            if current is None:
-                raise FileNotFoundError(
-                    f"snapshot_table: {table} has no snapshots"
-                )
-            snap = _load_snapshot(table, current)
-            if snap.get("deletes"):
-                raise ValueError(
-                    "snapshot_table: partition-scoped compaction with "
-                    "pending lazy deletes would detach them; run "
-                    "compact_table first"
-                )
-            pb = snap.get("partition_by", [])
-            probes = {
-                c: _transform_probes(pb, c, w) for c, w in matching.items()
-            }
-            selected, kept = [], []
-            for s in snap["shards"]:
-                rec = s.get("partition", {})
-                unstamped = any(c not in rec for c in matching)
-                hit = all(
-                    _partition_match(s, c, t) for c, t in probes.items()
-                )
-                (selected if unstamped or hit else kept).append(s)
-            if not selected:
-                return current  # nothing to do; no empty commit
-            schema = StructType.fromJson(snap["schema"])
-            scols = stats_cols if stats_cols is not None else sorted(
-                {c for s in selected for c in s.get("stats", {})}
-            )
-            df = _read_shards(spark, table, selected, schema)
-            if cluster_by:
-                # the per-tuple re-split shuffles anyway; the key
-                # locality that makes stats selective is restored by
-                # cluster_within's in-partition sort
-                scols = list(dict.fromkeys(scols + list(cluster_by)))
-            else:
-                df = df.coalesce(n)
-            mine, counts, stats, parts = _stage_publish(
-                df, table, tmp_dir, scols, pb,
-                cluster_within=list(cluster_by or []),
-                cluster_parts=n,
-            )
-            # blooms inherit like stats (recomputed for every column
-            # the rewritten shards carried one for) unless the caller
-            # names an explicit set
-            if bloom_cols is None:
-                blooms = _inherited_blooms(spark, table, mine, selected)
-            else:
-                blooms = _compute_blooms(
-                    spark, table, mine, bloom_cols, bloom_bits, bloom_k,
-                )
-            def _shard(m):
-                s = {"file": m, "n_rows": counts[m]}
-                if stats[m]:
-                    s["stats"] = stats[m]
-                if blooms.get(m):
-                    s["bloom"] = blooms[m]
-                if parts.get(m):
-                    s["partition"] = parts[m]
-                return s
+    published: list[str] = []
 
-            shards = list(kept) + [_shard(m) for m in mine]
-            version = current + 1
-            snapshot = {
-                "version": version,
-                "parent": current,
-                "operation": "compaction",
-                "properties": {
-                    "compaction": True,
-                    "partition": {
-                        c: (
-                            [_pstr(v) for v in w]
-                            if isinstance(w, (list, tuple, set))
-                            else _pstr(w)
-                        )
-                        for c, w in matching.items()
-                    },
-                    "shards_rewritten": len(selected),
-                    "shards_skipped": len(kept),
-                    "cluster_by": list(cluster_by or []),
-                },
-                "schema": snap["schema"],
-                "n_shards": len(shards),
-                "n_rows": sum(s["n_rows"] for s in shards),
-                "shards": sorted(shards, key=lambda s: s["file"]),
-            }
-            if snap.get("constraints"):
-                snapshot["constraints"] = snap["constraints"]
-            if pb:
-                snapshot["partition_by"] = pb
-            if _claim_snapshot(table, tmp_dir, snapshot):
-                return version
-            # lost the race: recompute selection on the new base
-    finally:
-        shutil.rmtree(tmp_dir, ignore_errors=True)
+    def apply(snap: dict) -> dict | None:
+        if snap.get("deletes"):
+            raise ValueError(
+                "snapshot_table: partition-scoped compaction with "
+                "pending lazy deletes would detach them; run "
+                "compact_table first"
+            )
+        pb = snap.get("partition_by", [])
+        probes = {
+            c: _transform_probes(pb, c, w) for c, w in matching.items()
+        }
+        selected, kept = [], []
+        for s in snap["shards"]:
+            rec = s.get("partition", {})
+            unstamped = any(c not in rec for c in matching)
+            hit = all(
+                _partition_match(s, c, t) for c, t in probes.items()
+            )
+            (selected if unstamped or hit else kept).append(s)
+        if not selected:
+            return None  # nothing to do; no empty commit
+        schema = StructType.fromJson(snap["schema"])
+        scols = stats_cols if stats_cols is not None else sorted(
+            {c for s in selected for c in s.get("stats", {})}
+        )
+        df = _read_shards(spark, table, selected, schema)
+        if cluster_by:
+            # the per-tuple re-split shuffles anyway; the key locality
+            # that makes stats selective is restored by cluster_within's
+            # in-partition sort
+            scols = list(dict.fromkeys(scols + list(cluster_by)))
+        else:
+            df = df.coalesce(n)
+        mine, counts, stats, parts = _stage_publish(
+            df, table, published, scols, pb,
+            cluster_within=list(cluster_by or []),
+            cluster_parts=n,
+        )
+        # blooms inherit like stats (recomputed for every column the
+        # rewritten shards carried one for) unless the caller names an
+        # explicit set
+        if bloom_cols is None:
+            blooms = _inherited_blooms(spark, table, mine, selected)
+        else:
+            blooms = _compute_blooms(
+                spark, table, mine, bloom_cols, bloom_bits, bloom_k,
+            )
+        return {
+            "operation": "compaction",
+            "properties": {
+                "compaction": True,
+                "partition": _probe_log(matching),
+                "shards_rewritten": len(selected),
+                "shards_skipped": len(kept),
+                "cluster_by": list(cluster_by or []),
+            },
+            "schema": snap["schema"],
+            "shards": kept
+            + _shard_entries(mine, counts, stats, blooms, parts),
+        }
+
+    # a lost claim recomputes the selection on the new base
+    return _commit(table, None, apply, published)
 
 
 def compact_table(

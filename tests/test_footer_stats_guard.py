@@ -43,14 +43,14 @@ def test_footer_stats_refused_under_truncation_conf(spark, trunc_conf, tmp_path)
     names = [s["file"] for s in snap["shards"]]
     schema = _docs(spark).schema
     # default conf: fast path proves the bounds and returns them
-    got = st._footer_stats(table, names, schema, ["s"])
+    got = st._footer_stats(spark, table, names, schema, ["s"])
     assert got is not None
     # any finite truncation length -> the fast path must refuse
     trunc_conf.set(TRUNC_KEY, "64")
-    assert st._footer_stats(table, names, schema, ["s"]) is None
+    assert st._footer_stats(spark, table, names, schema, ["s"]) is None
     # non-string stats stay on the fast path (truncation only affects
     # binary/string bounds)
-    assert st._footer_stats(table, names, schema, ["id"]) is not None
+    assert st._footer_stats(spark, table, names, schema, ["id"]) is not None
 
 
 def test_commit_under_truncation_conf_records_exact_stats(
@@ -70,3 +70,25 @@ def test_commit_under_truncation_conf_records_exact_stats(
             his.append(hi)
     exp = _docs(spark).agg(F.min("s"), F.max("s")).collect()[0]
     assert min(los) == exp[0] and max(his) == exp[1]
+
+
+def test_footer_stats_from_thread_pool_worker(spark, tmp_path):
+    """The fast path takes the writer's session as an argument: called
+    from a thread-pool worker (where MV refreshes commit, and where
+    ``SparkSession.getActiveSession()`` can be None) it still proves
+    string bounds instead of silently refusing."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    table = str(tmp_path / "t")
+    st.write_snapshot(_docs(spark), table, stats_cols=["s"])
+    names = [s["file"] for s in st._load_snapshot(table, 1)["shards"]]
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        got = pool.submit(
+            st._footer_stats, spark, table, names, _docs(spark).schema,
+            ["s"],
+        ).result()
+    assert got is not None
+    counts, stats = got
+    assert sum(counts.values()) == 3
+    assert min(stats[n]["s"][0] for n in names) == "alpha"
+    assert max(stats[n]["s"][1] for n in names) == "omega"

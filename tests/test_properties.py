@@ -238,6 +238,7 @@ def test_iterative_queries_invariant_under_executor_count(spark, sf_dir):
     import json
     import subprocess
     import sys
+    import tempfile
 
     import __spark_entry__ as m
 
@@ -278,14 +279,25 @@ spark.stop()
     # construction (that independence IS the property under test), so
     # overlapping them halves this test's wall time without touching
     # what it asserts
-    proc = subprocess.Popen(
-        [sys.executable, "-c", script],
-        stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
-    )
-    here = {n: canon(qs[n](spark, sf_dir).collect()) for n in NAMES}
-    stdout, stderr = proc.communicate(timeout=900)
-    lines = [ln for ln in stdout.splitlines() if ln.startswith("RESULT::")]
-    assert lines, f"subprocess failed: {stderr[-2000:]}"
+    # the child's stderr goes to a temp file, not a pipe: nothing reads
+    # a pipe while the in-session half computes, and a full pipe buffer
+    # would block the child. It is read back only if the child fails.
+    with tempfile.TemporaryFile("w+") as errf:
+        proc = subprocess.Popen(
+            [sys.executable, "-c", script],
+            stdout=subprocess.PIPE, stderr=errf, text=True,
+        )
+        here = {n: canon(qs[n](spark, sf_dir).collect()) for n in NAMES}
+        stdout, _ = proc.communicate(timeout=900)
+
+        def stderr_tail():
+            errf.seek(0)
+            return errf.read()[-2000:]
+
+        lines = [
+            ln for ln in stdout.splitlines() if ln.startswith("RESULT::")
+        ]
+        assert lines, f"subprocess failed: {stderr_tail()}"
     other = json.loads(lines[0][len("RESULT::"):])
     for n in NAMES:
         assert here[n] == other[n], f"{n} changed between local[4] and local[32]"

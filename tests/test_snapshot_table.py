@@ -5977,3 +5977,76 @@ def test_session_tz_fixed_offsets_and_probe_guards(spark, tmp_path):
     assert st._parse_partition_spec("months(ts)")["py"](
         d.date(2024, 3, 1)
     ) == "2024-03"
+
+
+@pytest.mark.parametrize(
+    "op", ["delete_where", "merge_cow", "merge_mor", "update_where",
+           "write_snapshot"],
+)
+def test_lost_attempt_publishes_no_orphans(spark, docs, tmp_path,
+                                           monkeypatch, op):
+    """A rival append wins the version between the operation's staging
+    and its claim: the operation retries on the new base and commits,
+    and every file its lost attempt published (rewritten shards, new
+    rows, deletion-vector parts) is reclaimed — vacuum finds nothing."""
+    table = str(tmp_path / "t")
+    en = docs.where(F.col("lang") == "en")
+    de = docs.where(F.col("lang") == "de")
+    write_snapshot(en, table)
+    key = en.select("doc_id").limit(1).collect()[0]["doc_id"]
+    upd = spark.createDataFrame(
+        [(key, "en", 4242)], "doc_id long, lang string, n_chars long"
+    )
+    run = {
+        "delete_where": lambda: st.delete_where(
+            spark, table, "doc_id % 3 = 0"
+        ),
+        "merge_cow": lambda: st.merge_upsert(upd, table, key_cols=["doc_id"]),
+        "merge_mor": lambda: st.merge_upsert(
+            upd, table, key_cols=["doc_id"], mor=True
+        ),
+        "update_where": lambda: st.update_where(
+            spark, table, {"n_chars": "n_chars + 1"}, "doc_id % 2 = 0"
+        ),
+        "write_snapshot": lambda: write_snapshot(
+            docs.where(F.col("lang") == "fr"), table
+        ),
+    }[op]
+
+    real_link = os.link
+    state = {"raced": False}
+
+    def racing_link(src, dst):
+        if not state["raced"] and "_snapshots" in dst:
+            state["raced"] = True
+            write_snapshot(de, table, mode="append")  # rival wins v2
+        return real_link(src, dst)
+
+    monkeypatch.setattr(st.os, "link", racing_link)
+    assert run() == 3  # lost v2, retried, claimed v3
+    monkeypatch.undo()
+    assert state["raced"]
+    assert st.vacuum(table, dry_run=True)["orphans_removed"] == 0
+
+
+def test_refused_append_reclaims_its_staged_shards(spark, docs, tmp_path):
+    """An append whose rebase guard refuses (a rename committed while it
+    staged) removes the shards it published instead of leaving them
+    for vacuum."""
+    table = str(tmp_path / "t")
+    write_snapshot(docs.where(F.col("lang") == "en"), table)
+    real_stage = st._stage_publish
+
+    def renaming_stage(*a, **k):
+        out = real_stage(*a, **k)
+        st.rename_column(spark, table, "n_chars", "chars")
+        return out
+
+    st._stage_publish = renaming_stage
+    try:
+        with pytest.raises(ValueError, match="schema evolved"):
+            write_snapshot(docs.where(F.col("lang") == "de"), table)
+    finally:
+        st._stage_publish = real_stage
+    assert latest_version(table) == 2  # only the rename committed
+    assert st.vacuum(table, dry_run=True)["orphans_removed"] == 0

@@ -1,0 +1,68 @@
+"""Structural guards over the package source: checks that read the
+code (AST, registry) rather than run queries, so a regression in the
+engine's shape fails fast and names the offending site."""
+
+import ast
+import os
+
+PKG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "svdmovie_lens_parallel_apache_spark_spark",
+)
+
+# _commit is the one retry loop; create_branch makes a single claim that
+# must not retry, and _ledger_append claims ledger entries, which are
+# not snapshots
+CLAIM_CALLERS = {"_commit", "create_branch", "_ledger_append"}
+
+
+def _claim_call_sites():
+    """(file, enclosing top-level function, line) of every call to
+    ``_claim_snapshot`` in the package, however it is spelled
+    (``_claim_snapshot(...)`` or ``st._claim_snapshot(...)``)."""
+    sites = []
+    for root, _dirs, files in os.walk(PKG):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            for top in tree.body:
+                owner = getattr(top, "name", "<module>")
+                for node in ast.walk(top):
+                    if not isinstance(node, ast.Call):
+                        continue
+                    fn = node.func
+                    name = (
+                        fn.id if isinstance(fn, ast.Name)
+                        else fn.attr if isinstance(fn, ast.Attribute)
+                        else None
+                    )
+                    if name == "_claim_snapshot":
+                        sites.append(
+                            (os.path.relpath(path, PKG), owner, node.lineno)
+                        )
+    return sites
+
+
+def test_claim_snapshot_called_only_from_commit():
+    """Every snapshot writer commits through ``_commit``; a copied
+    ``while True`` claim loop anywhere else fails here."""
+    sites = _claim_call_sites()
+    stray = [s for s in sites if s[1] not in CLAIM_CALLERS]
+    assert stray == [], f"_claim_snapshot called outside _commit: {stray}"
+    assert {owner for _f, owner, _l in sites} == CLAIM_CALLERS
+    assert {f for f, _o, _l in sites} == {
+        os.path.join("sources", "snapshot_table.py")
+    }
+
+
+def test_catalog_registry_size_is_pinned():
+    """Every catalog module is imported unconditionally, so a broken
+    import fails loudly; these counts catch a module whose queries
+    silently stop registering."""
+    import __spark_entry__ as m
+
+    assert len(m.queries()) == 224
+    assert len(m.oracle_sql()) == 223
