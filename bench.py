@@ -286,23 +286,11 @@ def main() -> None:
     full["sum_query_normalized"] = round(
         sum(timings.values()) / kernel_sec, 3
     )
-    # scaling rehearsal (tools/scale_rehearsal.py writes SCALING.json:
-    # per-query empirical exponents sf0.1 -> 10x replica fixture); embed
-    # so the committed full artifact carries the latest rehearsal
-    scaling_path = os.path.join(repo_dir, "SCALING.json")
-    if os.path.exists(scaling_path):
-        with open(scaling_path) as f:
-            full["scaling_rehearsal"] = json.load(f)
-    # the two-consecutive-runs re-baseline evidence (r9 verdict item 4)
-    # is recorded once on an idle host and carried forward verbatim —
-    # a single fresh run must not silently drop it
     prior_path = os.path.join(repo_dir, "BENCH_FULL.json")
     if os.path.exists(prior_path):
         try:
             with open(prior_path) as f:
                 prior = json.load(f)
-            if "rebaseline" in prior:
-                full["rebaseline"] = prior["rebaseline"]
             # host-drift factor vs the previous committed artifact:
             # >1 means this host/run is that much slower per unit of
             # pure-JVM compute than last time — absolute per-query

@@ -26,6 +26,7 @@ from .functions.scalar import portable_round as _r
 from .functions.text import token_count
 from .functions.vectors import to_double
 from .operators.sketches import bloom_positions, bloom_prune, cms_build, cms_estimate
+from .streaming.jobs import drain
 
 # DuckDB twin of functions.text.tokens (single-space corpus; parity proven
 # by the text_stats/doc_chunks oracles in catalog_text).
@@ -186,6 +187,37 @@ def _multiset_diff(a, b):
         .agg(F.sum(sign).alias(sign))
         .where(F.col(sign) != 0)
         .select(*cols)
+    )
+
+
+def _lang_fp(df):
+    """Per-``lang`` fingerprint of a documents-shaped frame: row count,
+    ``n_chars`` sum and the order-free ``text`` hash sum — the three
+    columns the snapshot/stream oracles compare at atol=0."""
+    return df.groupBy("lang").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_chars").cast("long").alias("sum_chars"),
+        F.sum(portable_hash64(F.col("text"))).cast("long").alias("text_fp"),
+    )
+
+
+def _file_replay(spark, frames, prefix):
+    """A file stream replaying ``frames`` as one micro-batch each: every
+    frame is written as one parquet file under a fresh temp dir (a short
+    sleep between writes gives distinct mtimes, which fixes the batch
+    order) and read back with ``maxFilesPerTrigger=1`` under
+    ``frames[0]``'s schema."""
+    import tempfile
+    import time
+
+    src = tempfile.mkdtemp(prefix=prefix)
+    for df in frames:
+        df.coalesce(1).write.mode("append").parquet(src)
+        time.sleep(0.05)  # distinct mtimes -> deterministic batch order
+    return (
+        spark.readStream.schema(frames[0].schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
     )
 
 
@@ -2501,15 +2533,8 @@ def q_snapshot_time_travel(spark, sf_dir):
     v2 = write_snapshot(docs.where(F.col("lang") == "de"), table, mode="append")
 
     def stats(version):
-        return (
-            read_snapshot(spark, table, version)
-            .groupBy("lang")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum("n_chars").cast("long").alias("sum_chars"),
-                F.sum(portable_hash64(F.col("text"))).cast("long").alias("text_fp"),
-            )
-            .select(F.lit(version).alias("version"), "lang", "n_docs", "sum_chars", "text_fp")
+        return _lang_fp(read_snapshot(spark, table, version)).select(
+            F.lit(version).alias("version"), "lang", "n_docs", "sum_chars", "text_fp"
         )
 
     return stats(v1).unionByName(stats(v2))
@@ -2567,15 +2592,8 @@ def q_snapshot_time_travel_ts(spark, sf_dir):
         # snapshot-JSON walks on a private two-commit table; a real
         # consumer resolves once and reads by the pinned version
         v = version_as_of(table, ts)
-        return (
-            read_snapshot(spark, table, as_of=ts)
-            .groupBy("lang")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum("n_chars").cast("long").alias("sum_chars"),
-                F.sum(portable_hash64(F.col("text"))).cast("long").alias("text_fp"),
-            )
-            .select(F.lit(v).alias("version"), "lang", "n_docs", "sum_chars", "text_fp")
+        return _lang_fp(read_snapshot(spark, table, as_of=ts)).select(
+            F.lit(v).alias("version"), "lang", "n_docs", "sum_chars", "text_fp"
         )
 
     return stats(stamps[1]).unionByName(stats(stamps[2]))
@@ -2926,18 +2944,9 @@ def q_snapshot_merge_mor(spark, sf_dir):
     n_dv = len([d for d in snap.get("deletes", []) if "positions" in d])
     no_rewrites = files_v1 <= {s["file"] for s in snap["shards"]}
     before = read_snapshot(spark, table)
-    agg = lambda df: (  # noqa: E731 — one aggregation, two uses
-        df.groupBy("lang").agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.sum(portable_hash64(F.col("text"))).cast("long").alias(
-                "text_fp"
-            ),
-        )
-    )
-    pre_compact = {tuple(r) for r in agg(before).collect()}
+    pre_compact = {tuple(r) for r in _lang_fp(before).collect()}
     compact_table(spark, table, target_shards=4)
-    final = agg(read_snapshot(spark, table))
+    final = _lang_fp(read_snapshot(spark, table))
     mor_ok = bool(
         n_dv == 2
         and no_rewrites
@@ -2995,15 +3004,7 @@ def q_snapshot_merge_upsert(spark, sf_dir):
         "n_chars", F.col("n_chars") * 2
     ).unionByName(docs.where(F.col("lang") == "de"))
     merge_upsert(upd, table, key_cols=["doc_id"])
-    return (
-        read_snapshot(spark, table)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.sum(portable_hash64(F.col("text"))).cast("long").alias("text_fp"),
-        )
-    )
+    return _lang_fp(read_snapshot(spark, table))
 
 
 @register(
@@ -3029,9 +3030,6 @@ def q_snapshot_merge_upsert(spark, sf_dir):
 )
 def q_snapshot_stream_ingest(spark, sf_dir):
     import tempfile
-    import time as _time
-
-    from pyspark.sql import types as T
 
     from .sources.snapshot_table import (
         latest_version,
@@ -3040,41 +3038,20 @@ def q_snapshot_stream_ingest(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text", "n_chars")
-    src_dir = tempfile.mkdtemp(prefix="svdml-snapingest-src-")
-    for i in range(3):
-        docs.where(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-        _time.sleep(0.05)  # distinct mtimes -> deterministic batch order
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
+    src = _file_replay(
+        spark, [docs.where(F.col("doc_id") % 3 == i) for i in range(3)],
+        "svdml-snapingest-src-",
     )
     table = tempfile.mkdtemp(prefix="svdml-snapingest-table-")
     ckpt = tempfile.mkdtemp(prefix="svdml-snapingest-ckpt-")
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-        .writeStream.foreachBatch(streaming_snapshot_sink(table))
+    drain(
+        src.writeStream.foreachBatch(streaming_snapshot_sink(table))
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
-    return (
-        read_snapshot(spark, table)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.sum(portable_hash64(F.col("text"))).cast("long").alias("text_fp"),
-        )
-        .withColumn("n_snapshots", F.lit(latest_version(table)).cast("long"))
+    return _lang_fp(read_snapshot(spark, table)).withColumn(
+        "n_snapshots", F.lit(latest_version(table)).cast("long")
     )
 
 
@@ -3120,9 +3097,6 @@ def q_snapshot_stream_ingest(spark, sf_dir):
 )
 def q_snapshot_stream_upsert(spark, sf_dir):
     import tempfile
-    import time as _time
-
-    from pyspark.sql import types as T
 
     from .sources.snapshot_table import (
         latest_version,
@@ -3149,30 +3123,15 @@ def q_snapshot_stream_upsert(spark, sf_dir):
             "n_chars", F.col("n_chars") + 3000
         ),
     ]
-    src_dir = tempfile.mkdtemp(prefix="svdml-streamupsert-src-")
-    for b in batches:
-        b.coalesce(1).write.mode("append").parquet(src_dir)
-        _time.sleep(0.05)  # distinct mtimes -> deterministic batch order
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
-    )
+    src = _file_replay(spark, batches, "svdml-streamupsert-src-")
     ckpt = tempfile.mkdtemp(prefix="svdml-streamupsert-ckpt-")
     sink = streaming_merge_sink(table, ["doc_id"], app_id="cdc")
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-        .writeStream.foreachBatch(sink)
+    drain(
+        src.writeStream.foreachBatch(sink)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
     head = latest_version(table)
     merges = [s for s in snapshot_history(table) if s["operation"] == "merge"]
     n_dv = len(
@@ -3194,17 +3153,8 @@ def q_snapshot_stream_upsert(spark, sf_dir):
         )
         and n_dv == 3
     )
-    return (
-        read_snapshot(spark, table)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.sum(portable_hash64(F.col("text"))).cast("long").alias(
-                "text_fp"
-            ),
-        )
-        .withColumn("stream_ok", F.lit(stream_ok))
+    return _lang_fp(read_snapshot(spark, table)).withColumn(
+        "stream_ok", F.lit(stream_ok)
     )
 
 
@@ -3299,7 +3249,7 @@ def q_snapshot_cdc_stream(spark, sf_dir):
     def sink(batch_df, batch_id):
         batch_df.write.mode("append").parquet(out)
 
-    q = (
+    drain(
         spark.readStream.format("snapshot_cdc")
         .option("path", table)
         .option("start_version", 0)
@@ -3309,7 +3259,6 @@ def q_snapshot_cdc_stream(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
     feed_schema = (
         "doc_id long, lang string, n_chars long, "
         "_change_type string, _commit_version long"
@@ -3425,7 +3374,7 @@ def q_snapshot_cdc_replication(spark, sf_dir):
     register_snapshot_cdc(spark)
     ckpt = tempfile.mkdtemp(prefix="svdml-cdcrepl-ckpt-")
     sink = streaming_cdc_apply_sink(down, ["doc_id"], app_id="repl")
-    q = (
+    drain(
         spark.readStream.format("snapshot_cdc")
         .option("path", up)
         .option("start_version", 1)
@@ -3435,7 +3384,6 @@ def q_snapshot_cdc_replication(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
     replica = read_snapshot(spark, down)
     upstream = read_snapshot(spark, up)
     v_now = latest_version(down)
@@ -3483,36 +3431,20 @@ def q_snapshot_cdc_replication(spark, sf_dir):
 )
 def q_snapshot_sink_ingest(spark, sf_dir):
     import tempfile
-    import time as _time
-
-    from pyspark.sql import types as T
 
     from .sources.snapshot_sink import register_snapshot_sink
     from .sources.snapshot_table import latest_version, read_snapshot
 
     register_snapshot_sink(spark)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text", "n_chars")
-    src_dir = tempfile.mkdtemp(prefix="svdml-sinkingest-src-")
-    for i in range(3):
-        docs.where(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-        _time.sleep(0.05)  # distinct mtimes -> deterministic batch order
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
+    src = _file_replay(
+        spark, [docs.where(F.col("doc_id") % 3 == i) for i in range(3)],
+        "svdml-sinkingest-src-",
     )
     table = tempfile.mkdtemp(prefix="svdml-sinkingest-table-") + "/t"
     ckpt = tempfile.mkdtemp(prefix="svdml-sinkingest-ckpt-")
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-        .writeStream.format("snapshot_sink")
+    drain(
+        src.writeStream.format("snapshot_sink")
         .option("path", table)
         .option("app_id", "snapshot_sink_ingest")
         .option("stats_cols", "doc_id")
@@ -3520,16 +3452,8 @@ def q_snapshot_sink_ingest(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
-    return (
-        read_snapshot(spark, table)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.sum(portable_hash64(F.col("text"))).cast("long").alias("text_fp"),
-        )
-        .withColumn("n_snapshots", F.lit(latest_version(table)).cast("long"))
+    return _lang_fp(read_snapshot(spark, table)).withColumn(
+        "n_snapshots", F.lit(latest_version(table)).cast("long")
     )
 
 
@@ -3580,15 +3504,8 @@ def q_snapshot_delete_where(spark, sf_dir):
         spark, table, f"doc_id <= {thr}", prune=("doc_id", -(2**62), thr)
     )
     props = snapshot_history(table)[-1]["properties"]
-    return (
-        read_snapshot(spark, table)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.sum(portable_hash64(F.col("text"))).cast("long").alias("text_fp"),
-        )
-        .withColumn("skipped_ok", F.lit(bool(props["shards_skipped"] > 0)))
+    return _lang_fp(read_snapshot(spark, table)).withColumn(
+        "skipped_ok", F.lit(bool(props["shards_skipped"] > 0))
     )
 
 
@@ -3647,15 +3564,8 @@ def q_snapshot_update_where(spark, sf_dir):
         f"doc_id <= {thr}", prune=("doc_id", -(2**62), thr),
     )
     props = snapshot_history(table)[-1]["properties"]
-    return (
-        read_snapshot(spark, table)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.sum(portable_hash64(F.col("text"))).cast("long").alias("text_fp"),
-        )
-        .withColumn("skipped_ok", F.lit(bool(props["shards_skipped"] > 0)))
+    return _lang_fp(read_snapshot(spark, table)).withColumn(
+        "skipped_ok", F.lit(bool(props["shards_skipped"] > 0))
     )
 
 
@@ -3826,17 +3736,11 @@ def q_snapshot_source_pushdown(spark, sf_dir):
     register_snapshot_table_source(spark)
     thr = int(docs.agg(F.max("doc_id")).collect()[0][0] // 4)
     log = tempfile.mktemp(prefix="svdml-snapsrc-plan-")
-    out = (
+    out = _lang_fp(
         spark.read.format("snapshot_table")
         .option("path", table).option("plan_log", log)
         .load()
         .where(F.col("doc_id") <= thr)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.sum(portable_hash64(F.col("text"))).cast("long").alias("text_fp"),
-        )
     )
     rows = out.collect()  # materialise so the plan log exists
     plan = json.load(open(log))
@@ -3890,17 +3794,11 @@ def q_snapshot_roundtrip_official(spark, sf_dir):
     )
     thr = int(docs.agg(F.max("doc_id")).collect()[0][0] // 4)
     log = tempfile.mktemp(prefix="svdml-snapofficial-plan-")
-    out = (
+    out = _lang_fp(
         spark.read.format("snapshot_table")
         .option("path", table).option("plan_log", log)
         .load()
         .where(F.col("doc_id") <= thr)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.sum(portable_hash64(F.col("text"))).cast("long").alias("text_fp"),
-        )
     )
     rows = out.collect()  # materialise so the plan log exists
     plan = json.load(open(log))
@@ -4040,21 +3938,12 @@ def q_snapshot_partition_prune(spark, sf_dir):
             s["n_rows"] for s in kept if s["partition"]["lang"] == "en"
         )
     )
-    return (
+    return _lang_fp(
         read_snapshot(
             spark, table, partition_filter={"lang": ["en", "de"]}
         )
         .where(F.col("lang").isin("en", "de"))
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.sum(portable_hash64(F.col("text"))).cast("long").alias(
-                "text_fp"
-            ),
-        )
-        .withColumn("partition_pruned_ok", F.lit(pruned_ok))
-    )
+    ).withColumn("partition_pruned_ok", F.lit(pruned_ok))
 
 
 @register(
@@ -4118,17 +4007,8 @@ def q_snapshot_spec_evolution(spark, sf_dir):
         and sum(p["n_rows"] for p in parts) == s3["n_rows"]
         and any(p["partition"] is None for p in parts)  # old spec visible
     )
-    return (
-        read_snapshot(spark, table)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.sum(portable_hash64(F.col("text"))).cast("long").alias(
-                "text_fp"
-            ),
-        )
-        .withColumn("spec_ok", F.lit(spec_ok))
+    return _lang_fp(read_snapshot(spark, table)).withColumn(
+        "spec_ok", F.lit(spec_ok)
     )
 
 
@@ -4200,19 +4080,9 @@ def q_snapshot_partition_compaction(spark, sf_dir):
     # the result reads the WHOLE table (en duplicated by the appends is
     # part of the layout story, not the rows: dedupe back to the base
     # set so the oracle is the plain documents aggregate)
-    return (
-        read_snapshot(spark, table)
-        .dropDuplicates(["doc_id"])
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.sum(portable_hash64(F.col("text"))).cast("long").alias(
-                "text_fp"
-            ),
-        )
-        .withColumn("scoped_ok", F.lit(scoped_ok))
-    )
+    return _lang_fp(
+        read_snapshot(spark, table).dropDuplicates(["doc_id"])
+    ).withColumn("scoped_ok", F.lit(scoped_ok))
 
 
 @register(
@@ -4357,17 +4227,8 @@ def q_snapshot_drop_partition(spark, sf_dir):
         .where(F.col("lang") == "zh")
         .count() == n_zh
     )
-    return (
-        read_snapshot(spark, table)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.sum(portable_hash64(F.col("text"))).cast("long").alias(
-                "text_fp"
-            ),
-        )
-        .withColumn("drop_ok", F.lit(drop_ok))
+    return _lang_fp(read_snapshot(spark, table)).withColumn(
+        "drop_ok", F.lit(drop_ok)
     )
 
 
@@ -4440,17 +4301,8 @@ def q_snapshot_replace_partition(spark, sf_dir):
         .where(F.col("lang") == "en")
         .count() == n_en
     )
-    return (
-        read_snapshot(spark, table)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.sum(portable_hash64(F.col("text"))).cast("long").alias(
-                "text_fp"
-            ),
-        )
-        .withColumn("replace_ok", F.lit(replace_ok))
+    return _lang_fp(read_snapshot(spark, table)).withColumn(
+        "replace_ok", F.lit(replace_ok)
     )
 
 
@@ -4489,15 +4341,7 @@ def q_snapshot_incremental_read(spark, sf_dir):
     write_snapshot(docs.where(F.col("doc_id") % 3 == 1), table, mode="append")
     compact_table(spark, table, target_shards=2)
     write_snapshot(docs.where(F.col("doc_id") % 3 == 2), table, mode="append")
-    return (
-        read_changes(spark, table, start_version=1)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.sum(portable_hash64(F.col("text"))).cast("long").alias("text_fp"),
-        )
-    )
+    return _lang_fp(read_changes(spark, table, start_version=1))
 
 
 @register(
@@ -4534,15 +4378,8 @@ def q_snapshot_rollback(spark, sf_dir):
     write_snapshot(docs.where(F.col("lang") == "en"), table, mode="append")
     write_snapshot(docs.where(F.col("lang") == "fr"), table, mode="overwrite")
     rollback(table, 1)
-    return (
-        read_snapshot(spark, table)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.sum(portable_hash64(F.col("text"))).cast("long").alias("text_fp"),
-        )
-        .withColumn("n_versions", F.lit(latest_version(table)).cast("long"))
+    return _lang_fp(read_snapshot(spark, table)).withColumn(
+        "n_versions", F.lit(latest_version(table)).cast("long")
     )
 
 
@@ -4583,7 +4420,7 @@ def q_snapshot_changes_stream(spark, sf_dir):
     write_snapshot(docs.where(F.col("doc_id") % 3 == 2), table, mode="append")
     register_snapshot_changes(spark)
     sink = f"snapchg_{_uuid.uuid4().hex[:8]}"
-    q = (
+    drain(
         spark.readStream.format("snapshot_changes")
         .option("path", table)
         .option("start_version", 1)
@@ -4594,16 +4431,7 @@ def q_snapshot_changes_stream(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
-    return (
-        spark.table(sink)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.sum(portable_hash64(F.col("text"))).cast("long").alias("text_fp"),
-        )
-    )
+    return _lang_fp(spark.table(sink))
 
 
 @register(
@@ -4632,45 +4460,28 @@ def q_snapshot_changes_stream(spark, sf_dir):
 )
 def q_snapshot_table_chain(spark, sf_dir):
     import tempfile
-    import time as _time
-
-    from pyspark.sql import types as T
 
     from .sources.snapshot_stream import register_snapshot_changes
     from .sources.snapshot_table import read_snapshot, streaming_snapshot_sink
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text", "n_chars")
-    src_dir = tempfile.mkdtemp(prefix="svdml-chain-src-")
-    for i in range(3):
-        docs.where(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-        _time.sleep(0.05)  # distinct mtimes -> deterministic batch order
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
+    src = _file_replay(
+        spark, [docs.where(F.col("doc_id") % 3 == i) for i in range(3)],
+        "svdml-chain-src-",
     )
     table_a = tempfile.mkdtemp(prefix="svdml-chain-a-")
     table_b = tempfile.mkdtemp(prefix="svdml-chain-b-")
     # stage 1: raw files -> table A (exactly-once snapshot ingest)
-    q1 = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-        .writeStream.foreachBatch(streaming_snapshot_sink(table_a))
+    drain(
+        src.writeStream.foreachBatch(streaming_snapshot_sink(table_a))
         .option("checkpointLocation", tempfile.mkdtemp(prefix="svdml-chain-ck1-"))
         .trigger(availableNow=True)
         .start()
     )
-    q1.awaitTermination()
     # stage 2: table A as a stream -> filter -> table B
     register_snapshot_changes(spark)
     sink_b = streaming_snapshot_sink(table_b)
-    q2 = (
+    drain(
         spark.readStream.format("snapshot_changes")
         .option("path", table_a)
         .option("start_version", 0)
@@ -4682,16 +4493,7 @@ def q_snapshot_table_chain(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q2.awaitTermination()
-    return (
-        read_snapshot(spark, table_b)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.sum(portable_hash64(F.col("text"))).cast("long").alias("text_fp"),
-        )
-    )
+    return _lang_fp(read_snapshot(spark, table_b))
 
 
 @register(
@@ -4756,19 +4558,10 @@ def q_snapshot_lazy_delete(spark, sf_dir):
     write_snapshot(docs.where(F.col("lang") == "de"), table, mode="append")
 
     def stats(version, label):
-        return (
-            read_snapshot(spark, table, version)
-            .groupBy("lang")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum("n_chars").cast("long").alias("sum_chars"),
-                F.sum(portable_hash64(F.col("text"))).cast("long").alias("text_fp"),
-            )
-            .select(
-                F.lit(label).alias("version"),
-                F.lit(bool(metadata_only)).alias("metadata_only_ok"),
-                "lang", "n_docs", "sum_chars", "text_fp",
-            )
+        return _lang_fp(read_snapshot(spark, table, version)).select(
+            F.lit(label).alias("version"),
+            F.lit(bool(metadata_only)).alias("metadata_only_ok"),
+            "lang", "n_docs", "sum_chars", "text_fp",
         )
 
     mor = stats(3, 3)  # merge-on-read: tombstone applied at scan time
@@ -5218,17 +5011,7 @@ def q_snapshot_tiered_pruning(spark, sf_dir):
         prune=("doc_id", probe, probe),
         bloom_point=("doc_id", probe),
     ).where((F.col("lang") == "en") & (F.col("doc_id") == probe))
-    return (
-        out.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.sum(portable_hash64(F.col("text"))).cast("long").alias(
-                "text_fp"
-            ),
-        )
-        .withColumn("tiers_ok", F.lit(tiers_ok))
-    )
+    return _lang_fp(out).withColumn("tiers_ok", F.lit(tiers_ok))
 
 
 @register(
@@ -6250,17 +6033,8 @@ def q_snapshot_manifest_scale(spark, sf_dir):
             inline_bounded and carried and amortized and partial_carry
             and compacted and full_history and segment_prune
         )
-        return (
-            read_snapshot(spark, table)
-            .groupBy("lang")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum("n_chars").cast("long").alias("sum_chars"),
-                F.sum(portable_hash64(F.col("text"))).cast("long").alias(
-                    "text_fp"
-                ),
-            )
-            .withColumn("manifest_ok", F.lit(manifest_ok))
+        return _lang_fp(read_snapshot(spark, table)).withColumn(
+            "manifest_ok", F.lit(manifest_ok)
         )
     finally:
         st._MANIFEST_INLINE_MAX = keep
@@ -6322,15 +6096,7 @@ def q_snapshot_stream_paced(spark, sf_dir):
         .trigger(processingTime="50 milliseconds")
         .start()
     )
-    try:
-        # event-driven drain: blocks on the stream's progress lock until
-        # every available offset is committed — zero Spark jobs, unlike
-        # the former spark.table(sink).count() poll (a full job per
-        # 100 ms that contended with the stream's own micro-batches)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
+    drain(q)
     fed = [p for p in q.recentProgress if p["numInputRows"] > 0]
     bounded = True
     for p in fed:
@@ -6348,17 +6114,8 @@ def q_snapshot_stream_paced(spark, sf_dir):
         and bounded
         and spark.table(sink).count() == n_expected
     )
-    return (
-        spark.table(sink)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.sum(portable_hash64(F.col("text"))).cast("long").alias(
-                "text_fp"
-            ),
-        )
-        .withColumn("paced_ok", F.lit(paced_ok))
+    return _lang_fp(spark.table(sink)).withColumn(
+        "paced_ok", F.lit(paced_ok)
     )
 
 
@@ -6441,14 +6198,7 @@ def q_snapshot_cdc_paged(spark, sf_dir):
         .trigger(processingTime="50 milliseconds")
         .start()
     )
-    try:
-        # event-driven drain (no Spark jobs) replacing the former
-        # 100 ms spark.table(sink).count() poll — each poll was a full
-        # job racing the stream's own micro-batches on the scheduler
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
+    drain(q)
     fed = [p for p in q.recentProgress if p["numInputRows"] > 0]
     paged = [
         p for p in fed
@@ -6488,17 +6238,7 @@ def q_snapshot_cdc_paged(spark, sf_dir):
         )
         .drop("_mx", "_change_type", "_commit_version")
     )
-    return (
-        final.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.sum(portable_hash64(F.col("text"))).cast("long").alias(
-                "text_fp"
-            ),
-        )
-        .withColumn("paged_ok", F.lit(paged_ok))
-    )
+    return _lang_fp(final).withColumn("paged_ok", F.lit(paged_ok))
 
 
 @register(
@@ -6569,19 +6309,10 @@ def q_snapshot_analyze(spark, sf_dir):
         and 0 < overlapping < len(snap["shards"])
         and noop
     )
-    return (
+    return _lang_fp(
         st.read_snapshot(spark, table, prune=("doc_id", None, thr))
         .where(F.col("doc_id") <= thr)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.sum(portable_hash64(F.col("text"))).cast("long").alias(
-                "text_fp"
-            ),
-        )
-        .withColumn("analyzed_ok", F.lit(analyzed_ok))
-    )
+    ).withColumn("analyzed_ok", F.lit(analyzed_ok))
 
 
 @register(
@@ -6748,17 +6479,8 @@ def q_snapshot_vacuum_grace(spark, sf_dir):
         and live_after == live_before
         and all(os.path.exists(os.path.join(data, f)) for f in live_after)
     )
-    return (
-        st.read_snapshot(spark, table)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.sum(portable_hash64(F.col("text"))).cast("long").alias(
-                "text_fp"
-            ),
-        )
-        .withColumn("vacuum_ok", F.lit(vacuum_ok))
+    return _lang_fp(st.read_snapshot(spark, table)).withColumn(
+        "vacuum_ok", F.lit(vacuum_ok)
     )
 
 

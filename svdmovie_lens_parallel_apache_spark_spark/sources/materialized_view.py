@@ -461,18 +461,15 @@ def refresh_aggregate_view(
             f"table's history; rebuild with force_rebuild=True"
         )
 
-    if _delta_cache is not None and (last, cur) in _delta_cache:
-        delta = _delta_cache[(last, cur)]
-    else:
+    # multi-view refresh: refresh_aggregate_views pins each shared
+    # range's CDC frame up front and owns it (unpersist); this only
+    # READS the cache, so concurrent refreshes never write to it, and a
+    # miss (the head moved after the pre-build) reads CDC unpinned
+    delta = (_delta_cache or {}).get((last, cur))
+    if delta is None:
         delta = st.read_cdc(
             spark, source, start_version=last, end_version=cur
         )
-        if _delta_cache is not None:
-            # multi-view refresh: pin the raw CDC frame so each view's
-            # fold reuses ONE multiset diff instead of recomputing it;
-            # ownership (unpersist) stays with refresh_aggregate_views
-            delta = delta.persist()
-            _delta_cache[(last, cur)] = delta
     if filter is not None:
         delta = delta.where(filter)
     ins = F.col("_change_type") == "insert"
@@ -707,7 +704,8 @@ def refresh_aggregate_views(
 
     ``views`` maps view path -> the keyword spec
     :func:`refresh_aggregate_view` takes (``group_by``/``sums``/...).
-    Views refresh sequentially (each commit is its own atomic merge
+    Views refresh on up to 3 pool threads, reading the pinned frames
+    but never adding to them (each commit is its own atomic merge
     with its own watermark stamp — a failure in one view leaves the
     others' committed refreshes standing; the failed view re-runs
     safely from its unchanged watermark). Returns
@@ -715,6 +713,7 @@ def refresh_aggregate_views(
     as the single-view form.
     """
     from collections import Counter
+    from concurrent.futures import ThreadPoolExecutor
 
     # pre-read each view's watermark (cheap metadata walk) so only
     # ranges with TWO OR MORE consumers get pinned — persisting a
@@ -752,30 +751,20 @@ def refresh_aggregate_views(
         # concurrent actions; 2-3 in flight is enough to hide the
         # per-commit fixed costs, more would fight for executors)
         names = list(views)
-        if len(names) <= 1:
-            for view in names:
-                out[view] = refresh_aggregate_view(
-                    spark, source, view, **views[view],
-                    _delta_cache=(
-                        cache if lasts.get(view) in shared else None
-                    ),
-                )
-        else:
-            from concurrent.futures import ThreadPoolExecutor
 
-            def _one(view):
-                return refresh_aggregate_view(
-                    spark, source, view, **views[view],
-                    _delta_cache=(
-                        cache if lasts.get(view) in shared else None
-                    ),
-                )
+        def _one(view):
+            return refresh_aggregate_view(
+                spark, source, view, **views[view],
+                _delta_cache=(
+                    cache if lasts.get(view) in shared else None
+                ),
+            )
 
-            with ThreadPoolExecutor(
-                max_workers=min(3, len(names))
-            ) as pool:
-                for view, got in zip(names, pool.map(_one, names)):
-                    out[view] = got
+        with ThreadPoolExecutor(
+            max_workers=max(1, min(3, len(names)))
+        ) as pool:
+            for view, got in zip(names, pool.map(_one, names)):
+                out[view] = got
         return out
     finally:
         for df in cache.values():

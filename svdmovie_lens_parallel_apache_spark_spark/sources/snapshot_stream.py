@@ -120,6 +120,7 @@ from dataclasses import dataclass
 
 from pyspark.sql.types import StructType
 
+from ..streaming.jobs import drain
 from .snapshot_table import (
     _added_files,
     _load_snapshot,
@@ -618,10 +619,12 @@ def drain_available_now(
     ``StreamingQuery`` whose sink checkpoints at ``checkpoint_dir``
     (build the whole readStream→writeStream chain inside it — a
     StreamingQuery object is single-use). Runs sequentially; returns
-    the number of runs that made progress. Raises if ``max_runs``
-    invocations were all progressing (backlog still growing faster
-    than the budget drains it — raise the budget or keep a continuous
-    trigger instead).
+    the number of runs that made progress. Each run goes through
+    :func:`streaming.jobs.drain`, so a run that commits no batch for
+    ``_DRAIN_STALL_S`` seconds is stopped and raises ``TimeoutError``.
+    Raises if ``max_runs`` invocations were all progressing (backlog
+    still growing faster than the budget drains it — raise the budget
+    or keep a continuous trigger instead).
 
     When the upstream bridge grows ``SupportsTriggerAvailableNow``,
     per-batch caps activate inside a single run (``_capped_end_*``
@@ -651,7 +654,7 @@ def drain_available_now(
     for _ in range(max_runs):
         first = prev is None  # fresh checkpoint: no offsets yet
         q = start_run()
-        q.awaitTermination()
+        drain(q)
         cur = _offset_fingerprint()
         if cur == prev:
             return progressed

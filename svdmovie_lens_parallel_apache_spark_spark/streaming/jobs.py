@@ -17,10 +17,97 @@ parquet file source here exercises identical operators.
 from __future__ import annotations
 
 import tempfile
+import threading
+import time
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+# every stream the package starts is drained through drain(); a drain
+# that makes no headway for this many seconds (no micro-batch commits
+# and no Spark task finishes) is stopped and reported. It bounds a
+# stall, not the drain: a large backlog keeps finishing tasks, so it is
+# never cut short however long it runs. On local[4] with a 6 GB heap
+# the longest stretch without headway in any streaming catalog query
+# at sf10 was 36 s (streaming_stateful_user_totals: its 8 state
+# partitions make each task grow linearly with the data, so ~360 s at
+# sf100, under a third of this limit).
+_DRAIN_STALL_S = 1200
+
+
+def _headway(q, tracker):
+    """A value that changes whenever ``q`` makes headway: its last
+    committed batch, and the finished tasks of every active stage (one
+    large availableNow batch commits only at its end, but its tasks
+    keep finishing). Stages of other work on the same context count
+    too, so a busy context can only delay a stall report, never cause
+    one. ``tracker`` is the context's ``StatusTracker``."""
+    stages = []
+    for sid in tracker.getActiveStageIds():
+        info = tracker.getStageInfo(sid)
+        if info is not None:
+            stages.append((sid, info.numCompletedTasks))
+    p = q.lastProgress
+    return p["batchId"] if p else None, sorted(stages)
+
+
+def drain(q) -> None:
+    """Process everything available to the started query ``q``, then
+    stop it. ``processAllAvailable`` returns once every available offset
+    is committed, or once an availableNow query terminates, so one path
+    serves availableNow and processingTime triggers alike; it waits on
+    the stream's progress lock and issues no Spark job of its own (a
+    ``count()`` poll of the sink would race the micro-batches).
+
+    Bounded by headway, not by total time: a watcher thread samples
+    :func:`_headway` once a second and, once it has not changed for
+    ``_DRAIN_STALL_S`` seconds, stops the query; the drain then raises
+    ``TimeoutError`` naming it (chained to the query's own error, if
+    stopping it raised one). Whether the drain finished or stalled is
+    decided once, under a lock: a drain that has returned is never
+    reported as stalled. A query that died on its own raises its
+    ``StreamingQueryException``. A source that always has another batch
+    (e.g. ``rate``) never stalls, so its drain never returns."""
+    tracker = SparkSession.active().sparkContext.statusTracker()
+    lock, done = threading.Lock(), threading.Event()
+    stalled = False
+
+    def watch():
+        nonlocal stalled
+        seen, since = None, time.monotonic()
+        while not done.wait(1.0):
+            now = _headway(q, tracker)
+            if now != seen:
+                seen, since = now, time.monotonic()
+            elif time.monotonic() - since >= _DRAIN_STALL_S:
+                with lock:
+                    if done.is_set():
+                        return
+                    stalled = True
+                q.stop()
+                return
+
+    threading.Thread(target=watch, daemon=True).start()
+    cause = None
+    try:
+        q.processAllAvailable()
+    except StreamingQueryException as exc:
+        cause = exc
+    finally:
+        with lock:
+            done.set()
+        q.stop()
+    if stalled:
+        raise TimeoutError(
+            f"stream {q.name or q.id} made no headway for "
+            f"{_DRAIN_STALL_S}s; stopped"
+        ) from cause
+    if cause is not None:
+        raise cause
+    q.awaitTermination()
+
 
 def _events_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
@@ -70,8 +157,10 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def run_available_now(result: DataFrame, query_name: str, mode: str = "complete",
                       state_partitions: int = 8) -> None:
     """Drain the stream with the available-now trigger into a memory sink
-    (read back via ``spark.table(query_name)``). Fresh checkpoint per run
-    so re-invocations are reproducible.
+    (read back via ``spark.table(query_name)``) through :func:`drain`, so
+    a run that commits no batch for ``_DRAIN_STALL_S`` seconds is stopped
+    and raises ``TimeoutError``. Fresh checkpoint per run so re-invocations
+    are reproducible.
 
     ``state_partitions`` pins the stateful-operator partition count for THIS
     query (streaming state partitioning is fixed by ``spark.sql.shuffle.
@@ -93,7 +182,7 @@ def run_available_now(result: DataFrame, query_name: str, mode: str = "complete"
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        drain(q)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
@@ -467,13 +556,12 @@ def stream_incremental_rollup(spark: SparkSession, source_dir: str,
         merged.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id:06d}")
 
     ckpt = tempfile.mkdtemp(prefix="svdml-ckpt-incr-rollup-")
-    q = (
+    drain(
         ev.writeStream.foreachBatch(merge_batch)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
     import glob as _g
 
     versions = sorted(_g.glob(f"{state_dir}/v*"))

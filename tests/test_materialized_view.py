@@ -518,3 +518,23 @@ def test_multi_view_refresh_shares_one_cdc_read(spark, orders, tmp_path,
     assert len(calls) == 1  # one diff, two folds
     _assert_equiv(spark, src, v1, spec1)
     _assert_equiv(spark, src, v2, spec2)
+
+
+def test_delta_cache_miss_reads_unpinned_and_leaves_cache(spark, orders,
+                                                         tmp_path):
+    """The shared CDC cache is filled only by refresh_aggregate_views
+    before its pool starts; a refresh whose range misses it (the head
+    moved after the pre-build) reads the change feed itself and must
+    not write the cache, which pool threads share."""
+    src = str(tmp_path / "src")
+    view = str(tmp_path / "view")
+    st.write_snapshot(orders.where("o_orderkey % 2 = 0"), src)
+    mv.refresh_aggregate_view(spark, src, view, **SPEC)
+    st.write_snapshot(orders.where("o_orderkey % 2 = 1"), src, mode="append")
+
+    cache = {}
+    assert mv.refresh_aggregate_view(
+        spark, src, view, **SPEC, _delta_cache=cache
+    ) == 2
+    assert cache == {}
+    _assert_equiv(spark, src, view)

@@ -247,3 +247,138 @@ def test_transform_with_state_plan_and_parity(spark, sf_dir):
         .collect()
     }
     assert got == exact
+
+
+def test_drain_stops_a_stalled_stream(spark, tmp_path, monkeypatch):
+    """A batch whose tasks never finish makes no headway; drain must
+    stop the query once the stall limit passes and raise TimeoutError
+    instead of hanging."""
+    import time
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    from svdmovie_lens_parallel_apache_spark_spark.streaming import jobs
+
+    @F.udf("long")
+    def hang(v):
+        time.sleep(600)
+        return v
+
+    monkeypatch.setattr(jobs, "_DRAIN_STALL_S", 3)
+    q = (
+        spark.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", 10)
+        .load()
+        .select(hang("value").alias("value"))
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(processingTime="100 milliseconds")
+        .start()
+    )
+    t0 = time.monotonic()
+    with pytest.raises(TimeoutError, match="no headway for 3s"):
+        jobs.drain(q)
+    assert time.monotonic() - t0 < 30
+    assert not q.isActive
+
+
+def test_drain_outlasts_the_stall_limit_while_batches_commit(
+    spark, tmp_path, monkeypatch
+):
+    """The limit bounds a stall, not the drain: a backlog whose batches
+    each commit within it drains in full even when the whole drain
+    takes longer than the limit."""
+    import time
+
+    from svdmovie_lens_parallel_apache_spark_spark.catalog_pipeline import (
+        _file_replay,
+    )
+    from svdmovie_lens_parallel_apache_spark_spark.streaming import jobs
+
+    monkeypatch.setattr(jobs, "_DRAIN_STALL_S", 5)
+    seen = []
+
+    def slow(batch_df, batch_id):
+        time.sleep(1.5)
+        seen.append(batch_id)
+
+    frames = [spark.range(10 * i, 10 * i + 10) for i in range(7)]
+    q = (
+        _file_replay(spark, frames, "svdml-drain-slow-")
+        .writeStream.foreachBatch(slow)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    t0 = time.monotonic()
+    jobs.drain(q)
+    assert time.monotonic() - t0 > jobs._DRAIN_STALL_S
+    assert seen == list(range(7))
+    assert not q.isActive
+
+
+def test_drain_outlasts_the_stall_limit_in_one_batch_while_tasks_finish(
+    spark, tmp_path, monkeypatch
+):
+    """One availableNow batch commits only at its end; its finishing
+    tasks are headway, so a single batch longer than the limit still
+    drains."""
+    import time
+
+    from svdmovie_lens_parallel_apache_spark_spark.catalog_pipeline import (
+        _file_replay,
+    )
+    from svdmovie_lens_parallel_apache_spark_spark.streaming import jobs
+
+    monkeypatch.setattr(jobs, "_DRAIN_STALL_S", 5)
+    seen = []
+
+    def tick(_row):
+        time.sleep(0.5)
+
+    def long_batch(batch_df, batch_id):
+        # 64 half-second tasks on 4 slots: about 8 s, tasks finishing
+        # twice a second once the Python workers are up
+        batch_df.sparkSession.range(0, 64, 1, 64).foreach(tick)
+        seen.append(batch_id)
+
+    q = (
+        _file_replay(spark, [spark.range(10)], "svdml-drain-one-")
+        .writeStream.foreachBatch(long_batch)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    t0 = time.monotonic()
+    jobs.drain(q)
+    assert time.monotonic() - t0 > jobs._DRAIN_STALL_S
+    assert seen == [0]
+    assert not q.isActive
+
+
+def test_drain_surfaces_the_query_own_failure(spark, tmp_path, monkeypatch):
+    """A query that dies on its own raises its StreamingQueryException
+    out of drain, not a TimeoutError."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from svdmovie_lens_parallel_apache_spark_spark.streaming import jobs
+
+    monkeypatch.setattr(jobs, "_DRAIN_STALL_S", 60)
+
+    def boom(batch_df, batch_id):
+        raise ValueError("batch sink refused")
+
+    q = (
+        spark.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", 10)
+        .load()
+        .writeStream.foreachBatch(boom)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(processingTime="100 milliseconds")
+        .start()
+    )
+    with pytest.raises(StreamingQueryException, match="batch sink refused"):
+        jobs.drain(q)
+    assert not q.isActive

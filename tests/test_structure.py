@@ -16,10 +16,10 @@ PKG = os.path.join(
 CLAIM_CALLERS = {"_commit", "create_branch", "_ledger_append"}
 
 
-def _claim_call_sites():
-    """(file, enclosing top-level function, line) of every call to
-    ``_claim_snapshot`` in the package, however it is spelled
-    (``_claim_snapshot(...)`` or ``st._claim_snapshot(...)``)."""
+def _call_sites(*names):
+    """(file, enclosing top-level function, line) of every call to one
+    of ``names`` in the package, however it is spelled (``f(...)`` or
+    ``obj.f(...)``)."""
     sites = []
     for root, _dirs, files in os.walk(PKG):
         for f in files:
@@ -39,7 +39,7 @@ def _claim_call_sites():
                         else fn.attr if isinstance(fn, ast.Attribute)
                         else None
                     )
-                    if name == "_claim_snapshot":
+                    if name in names:
                         sites.append(
                             (os.path.relpath(path, PKG), owner, node.lineno)
                         )
@@ -49,13 +49,24 @@ def _claim_call_sites():
 def test_claim_snapshot_called_only_from_commit():
     """Every snapshot writer commits through ``_commit``; a copied
     ``while True`` claim loop anywhere else fails here."""
-    sites = _claim_call_sites()
+    sites = _call_sites("_claim_snapshot")
     stray = [s for s in sites if s[1] not in CLAIM_CALLERS]
     assert stray == [], f"_claim_snapshot called outside _commit: {stray}"
     assert {owner for _f, owner, _l in sites} == CLAIM_CALLERS
     assert {f for f, _o, _l in sites} == {
         os.path.join("sources", "snapshot_table.py")
     }
+
+
+def test_stream_waits_go_through_drain():
+    """Every stream the package starts is waited on by
+    ``streaming.jobs.drain``, the one wait with a stall limit; a bare
+    ``awaitTermination()``/``processAllAvailable()`` anywhere else could
+    hang a query forever and fails here."""
+    sites = _call_sites("awaitTermination", "processAllAvailable")
+    assert {(f, owner) for f, owner, _l in sites} == {
+        (os.path.join("streaming", "jobs.py"), "drain")
+    }, sites
 
 
 def test_catalog_registry_size_is_pinned():
