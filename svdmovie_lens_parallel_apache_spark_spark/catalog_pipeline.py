@@ -1069,7 +1069,7 @@ def _bpe_train(spark, sf_dir, rounds: int = 3, round_times: list | None = None):
     the depth-rehearsal evidence that cost per merge round stays FLAT as
     rounds accumulate (localCheckpoint truncates lineage each round, so
     round 50 pays the same one pair-count shuffle + one bounded limit(1)
-    collect as round 1; tools/bpe_depth_rehearsal.py records it and
+    collect as round 1; SCALING.json["bpe_depth"] records it and
     tests/test_scale_ops.py gates it)."""
     import time as _time
 

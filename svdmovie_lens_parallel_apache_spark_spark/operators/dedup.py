@@ -326,25 +326,66 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 20,
     """Connected components over near-dup pairs → (doc_id, cluster_id).
 
     Completes the dedup pipeline: pair detection (Jaccard/MinHash/SimHash)
-    gives EDGES; keep-one-per-group needs the transitive CLOSURE. Min-label
-    propagation: every node starts labelled with itself; each iteration
-    pushes labels across edges and keeps the minimum; converges in
-    O(component diameter) iterations (near-dup clusters are shallow).
+    gives EDGES; keep-one-per-group needs the transitive CLOSURE, labelled
+    by the smallest doc_id in each component.
 
-    Driver-loop-with-fixpoint-check — the iterative-algorithm pattern the
-    reference used for training epochs (SVDMovieLensSparkJava.java:416-420),
-    here over DataFrames with a convergence count per round. At scale this
-    is the standard large-graph CC (alternating large/small-star joins are
-    the heavy-duty variant); localCheckpoint would truncate lineage for
-    deep graphs.
+    Two paths, chosen by ONE bounded read: ``limit(driver_edge_threshold
+    + 1).collect()`` of the pairs.
+
+    - Driver (the common case — near-dup edge lists are orders of
+      magnitude smaller than the corpus): at most
+      ``driver_edge_threshold`` pair rows came back, so a linear
+      union-find runs over them and the result returns as an Arrow table
+      (a local relation: no Python-RDD job, no further Spark job).
+    - Distributed (pathological dup-heavy crawls): the symmetrised edge
+      set is localCheckpointed once and min-label propagation runs as a
+      driver loop with a fixpoint check, the iterative-algorithm pattern
+      the reference used for training epochs
+      (SVDMovieLensSparkJava.java:416-420); it converges in O(component
+      diameter) iterations (near-dup clusters are shallow).
+
+    Both paths give the same labelling (pytest-gated).
     """
-    # materialise the edge set ONCE — the upstream pair detection (LSH /
-    # posting-list joins) must not re-run per iteration; localCheckpoint
-    # also truncates lineage so plans don't grow with the loop.
+    import pyarrow as pa
+
+    # Spark's limit is an int: a threshold past it means "always driver"
+    head = (
+        pairs.select("doc_a", "doc_b")
+        .limit(min(driver_edge_threshold + 1, 2**31 - 1))
+        .collect()
+    )
+    if len(head) <= driver_edge_threshold:
+        parent: dict = {}
+
+        def find(x):
+            r = x
+            while parent.get(r, r) != r:
+                r = parent[r]
+            while parent.get(x, x) != x:  # path compression
+                parent[x], x = r, parent[x]
+            return r
+
+        for a, b in head:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                # min-label union: the representative is the smallest id,
+                # matching the min-label-propagation fixpoint exactly
+                lo, hi = (ra, rb) if ra < rb else (rb, ra)
+                parent[hi] = lo
+        nodes = sorted({n for edge in head for n in edge})
+        return pairs.sparkSession.createDataFrame(
+            pa.table({
+                "doc_id": pa.array(nodes, pa.int64()),
+                "cluster_id": pa.array([find(n) for n in nodes], pa.int64()),
+            }),
+            schema="doc_id long, cluster_id long",
+        )
     # Symmetrise with a single-pass explode rather than union(swap):
     # union branches are separate plan subtrees, so the (expensive) pair
     # lineage would execute TWICE in the checkpoint job — at sf0.1 that
-    # union shape alone doubled this operator's cost.
+    # union shape alone doubled this operator's cost. The checkpoint
+    # keeps the pair detection from re-running per iteration and
+    # truncates lineage so plans don't grow with the loop.
     edges_sym = (
         pairs.select(
             F.explode(
@@ -362,36 +403,6 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 20,
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # Near-dup EDGE lists are orders of magnitude smaller than the corpus
-    # (dups are the exception); when the materialised edge set fits the
-    # driver comfortably, a linear union-find beats paying N_iter× per-round
-    # distributed-job overhead. The distributed min-label loop below remains
-    # the path for genuinely huge edge sets (pathological dup-heavy crawls).
-    n_edges = edges_sym.count()
-    if n_edges <= driver_edge_threshold:
-        rows = edges_sym.collect()
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent.get(r, r) != r:
-                r = parent[r]
-            while parent.get(x, x) != x:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
-        for row in rows:
-            ra, rb = find(row.src), find(row.dst)
-            if ra != rb:
-                # min-label union: the representative is the smallest id,
-                # matching the min-label-propagation fixpoint exactly
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        nodes = {r.src for r in rows}
-        out = [(int(n), int(find(n))) for n in sorted(nodes)]
-        return edges_sym.sparkSession.createDataFrame(
-            out, schema="doc_id long, cluster_id long"
-        )
     labels = (
         edges_sym.select(F.col("src").alias("node")).distinct()
         .withColumn("cluster_id", F.col("node"))

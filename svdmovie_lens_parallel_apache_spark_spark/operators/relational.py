@@ -30,18 +30,37 @@ def spread_small(df: DataFrame) -> DataFrame:
     once to light every core."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
-    # exchange-carrying plans are left alone WITHOUT touching .rdd:
-    # the shuffle already sets downstream parallelism, and accessing
-    # .rdd on an adaptive plan with exchanges finalizes the AQE plan —
-    # eagerly executing its shuffle stages just to read a partition
-    # count, work that is NOT reused by the later action (round-14,
-    # ADVICE item). sparkPlan() is the non-adaptive physical plan — a
-    # pure planning artifact, never executed by inspecting it.
-    if "Exchange" in df._jdf.queryExecution().sparkPlan().toString():
+    # a shuffle already sets downstream parallelism, so shuffled plans are
+    # left alone WITHOUT touching .rdd: accessing .rdd on an adaptive plan
+    # with exchanges finalizes the AQE plan — eagerly executing its
+    # shuffle stages just to read a partition count, work that is NOT
+    # reused by the later action.
+    if _has_shuffle(df):
         return df
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+def _has_shuffle(df: DataFrame) -> bool:
+    """Whether the rows of ``df`` come through a shuffle exchange. Walks
+    the physical plan as planned — an ``AdaptiveSparkPlanExec`` is read
+    through its ``initialPlan`` (exchanges inserted, nothing executed) —
+    and into cached relations. Only ``ShuffleExchangeExec`` counts, and
+    the walk does not enter a ``BroadcastExchangeExec``: a broadcast side
+    feeds a hash table, not the output's partitioning."""
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "ShuffleExchangeExec":
+            return True
+        if kind == "AdaptiveSparkPlanExec":
+            stack.append(node.initialPlan())
+        elif kind != "BroadcastExchangeExec":
+            for seq in (node.children(), node.innerChildren()):
+                stack.extend(seq.apply(i) for i in range(seq.size()))
+    return False
 
 
 def semi_join(left: DataFrame, right: DataFrame, on) -> DataFrame:

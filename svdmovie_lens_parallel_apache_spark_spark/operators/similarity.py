@@ -14,10 +14,15 @@ Scale shapes:
   compares within-bucket (equi-join on bucket). Hyperplanes are derived
   from the portable md5 hash family, so bucket assignment is replayable
   in the DuckDB oracle and across runs/engines.
+- IVF: k-means cells; one Arrow-batched scan of the corpus scores each
+  vector against only the queries that probe its cell (GEMM per cell).
 
-All dot/norm math is sequential-fold ``aggregate`` over array<double> —
-JVM-side, whole-stage-codegen'd, and bit-reproducible against DuckDB's
-``list_reduce`` (same fold order).
+The oracle-replayed dot/norm math is sequential-fold ``aggregate`` over
+array<double> — JVM-side and bit-reproducible against DuckDB's
+``list_reduce`` (same fold order), but interpreted per element:
+higher-order functions (``zip_with``/``aggregate``) are CodegenFallback,
+not whole-stage codegen. Rows-only operators (IVF, PQ encode, multi-table
+LSH) do their dense math in NumPy inside Arrow UDFs instead.
 """
 
 from __future__ import annotations
@@ -317,6 +322,38 @@ def _lloyd(X: "np.ndarray", k: int, seed: int, iters: int = 20) -> "np.ndarray":
     return C
 
 
+# float64 elements in one GEMM output buffer: ~32 MB
+_GEMM_ELEMS = 4 << 20
+
+
+def _argmin_blas(x: "np.ndarray", mat: "np.ndarray", c2: "np.ndarray") -> "np.ndarray":
+    """Row-wise nearest centroid index in the BLAS form ``‖c‖² − 2·x·cᵀ``
+    (``‖x‖²`` is constant per row, so the argmin drops it): one GEMM per
+    row chunk, the chunk sized so the (chunk × k) output stays ~32 MB of
+    float64 whatever k is. ``np.argmin`` keeps the first minimum, so
+    ties go to the lower index."""
+    out = np.empty(len(x), dtype=np.int64)
+    chunk = max(1, _GEMM_ELEMS // max(1, len(mat)))
+    for s in range(0, len(x), chunk):
+        d = x[s : s + chunk] @ mat.T  # (chunk, k) GEMM — the whole point
+        d *= -2.0
+        d += c2[None, :]
+        out[s : s + chunk] = np.argmin(d, axis=1)
+    return out
+
+
+def _top_k(qid: "np.ndarray", nid: "np.ndarray", score: "np.ndarray", k: int):
+    """The first ``k`` (qid, nid, score) triples of each qid by (score
+    desc, nid asc) — the same order as the final ranking window, so a
+    partial top-k never drops a row the window would keep."""
+    order = np.lexsort((nid, -score, qid))
+    qid, nid, score = qid[order], nid[order], score[order]
+    starts = np.flatnonzero(np.r_[True, qid[1:] != qid[:-1]])
+    rank = np.arange(len(qid)) - np.repeat(starts, np.diff(np.r_[starts, len(qid)]))
+    keep = rank < k
+    return qid[keep], nid[keep], score[keep]
+
+
 def knn_ivf(emb: DataFrame, query_ids_below: int = 10, k: int = 5,
             n_clusters: int = 16, n_probe: int = 4, seed: int = 42,
             train_sample: int = 20000) -> DataFrame:
@@ -326,60 +363,98 @@ def knn_ivf(emb: DataFrame, query_ids_below: int = 10, k: int = 5,
 
     The clustering-based alternative to hash-based LSH: cells adapt to the
     data distribution, and probe count trades recall for compute. Scale
-    shape: centroids train on a BOUNDED driver-side sample (FAISS
-    practice, O(sample) whatever the corpus size); cell assignment is one
-    Arrow-batched vectorized pass (broadcast centers); candidate
-    generation is an equi-join on cell id; only candidates pay the exact
-    distance. Rows-only (k-means internals are engine-specific); recall vs
-    brute force asserted in tests.
+    shape:
+
+    - centroids train on a BOUNDED driver-side sample (FAISS practice,
+      O(sample) whatever the corpus size);
+    - the query block (``vec_id < query_ids_below``) is collected once;
+      each query's ``n_probe`` nearest cells (squared L2 folded over
+      dimensions in order, ties to the lower cell id) are found in NumPy
+      on the driver, and queries, probe lists and centroids ship to the
+      executors in one ``SparkContext.broadcast``;
+    - ONE ``mapInPandas`` scan over the corpus assigns each vector its
+      cell (BLAS argmin), and for each cell present in the batch scores
+      the batch's vectors in that cell against only the queries probing
+      it — one GEMM per (cell, query chunk), every buffer ~32 MB at most
+      — then keeps a per-batch top-k per query;
+    - a ``row_number`` window over those few rows gives the final top-k.
+
+    No candidate join and no per-pair interpreted fold: the corpus is read
+    once and each vector meets only its cell's probers. Candidates are the
+    vectors in the query's probed cells, the query itself excluded; ranking
+    is (cosine desc, neighbor_id asc), a zero norm scores 0. Cosines come
+    from a GEMM, so they can differ from the sequential fold of
+    :func:`knn_brute_force` in the last ulp. Rows-only (k-means internals
+    are engine-specific); recall vs brute force asserted in tests.
     """
+    from pyspark.sql import Window
+
     from .relational import spread_small
 
-    emb = spread_small(emb)  # no-op unless the scan is under-parallel
-    from pyspark.sql import Window
-    from pyspark.sql.functions import pandas_udf
-
-    base = emb.select("vec_id", to_double(F.col("embedding")).alias("vec"))
+    base = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("vec"))
     C = _lloyd(_sample_matrix(base, "vec", train_sample), n_clusters, seed)
     c_sq = (C ** 2).sum(1)
 
-    @pandas_udf("int")
-    def assign_cell(batch: pd.Series) -> pd.Series:
-        V = np.array([np.asarray(v, dtype=np.float64) for v in batch])
-        if len(V) == 0:
-            return pd.Series([], dtype="int32")
-        d2 = c_sq[None, :] - 2.0 * (V @ C.T)
-        return pd.Series(d2.argmin(1).astype("int32"))
+    q_rows = base.where(F.col("vec_id") < query_ids_below).collect()  # query block
+    qids = np.array([r[0] for r in q_rows], dtype=np.int64)
+    Q = np.array([r[1] for r in q_rows], dtype=np.float64).reshape(len(q_rows), C.shape[1])
+    q_norm = np.sqrt(np.einsum("ij,ij->i", Q, Q))
+    d2 = np.zeros((len(Q), len(C)))
+    for j in range(C.shape[1]):  # dims IN ORDER, like the aggregate fold
+        d2 += (Q[:, j, None] - C[None, :, j]) ** 2
+    probe = np.argsort(d2, axis=1, kind="stable")[:, :n_probe]  # ties: lower cell
+    # cell -> the queries probing it, as CSR over the flattened probe lists
+    by_cell = np.argsort(probe.ravel(), kind="stable")
+    cell_start = np.searchsorted(probe.ravel()[by_cell], np.arange(len(C) + 1))
+    probers = by_cell // max(1, probe.shape[1])
+    bc = emb.sparkSession.sparkContext.broadcast(
+        (qids, Q, q_norm, probers, cell_start, C, c_sq)
+    )
+    elems = _GEMM_ELEMS  # the closure ships this value to the workers
 
-    assigned = base.withColumn("cell", assign_cell(F.col("vec")))
+    def scan(batches):
+        b_qids, b_Q, b_qn, b_probers, b_start, b_C, b_c2 = bc.value
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            ids = pdf["vec_id"].to_numpy(np.int64)
+            V = np.stack(pdf["vec"].to_numpy())
+            v_norm = np.sqrt(np.einsum("ij,ij->i", V, V))
+            cell = _argmin_blas(V, b_C, b_c2)
+            by = np.argsort(cell, kind="stable")
+            cells, at = np.unique(cell[by], return_index=True)
+            parts = []
+            for c, lo, hi in zip(cells, at, np.r_[at[1:], len(by)]):
+                qi = b_probers[b_start[c] : b_start[c + 1]]
+                if not len(qi):
+                    continue
+                rows = by[lo:hi]
+                Vc, idc, vnc = V[rows], ids[rows], v_norm[rows]
+                step = max(1, elems // len(rows))  # (step × rows) buffers
+                for s in range(0, len(qi), step):
+                    qs = qi[s : s + step]
+                    cos = b_Q[qs] @ Vc.T
+                    denom = np.multiply.outer(b_qn[qs], vnc)
+                    np.divide(cos, denom, out=cos, where=denom != 0.0)
+                    cos[denom == 0.0] = 0.0
+                    cos[b_qids[qs][:, None] == idc[None, :]] = -np.inf  # self
+                    # prune to each query's k-th best here, ties kept
+                    kth = min(k, cos.shape[1]) - 1
+                    floor = -np.partition(-cos, kth, axis=1)[:, kth]
+                    r, col = np.nonzero((cos >= floor[:, None]) & (cos > -np.inf))
+                    parts.append(_top_k(b_qids[qs][r], idc[col], cos[r, col], k))
+            if parts:
+                qid, nid, score = _top_k(*(np.concatenate(p) for p in zip(*parts)), k)
+                yield pd.DataFrame({"query_id": qid, "neighbor_id": nid, "cos_raw": score})
 
-    centers_df = emb.sparkSession.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(C)],
-        "cell int, center array<double>",
+    id_type = base.schema["vec_id"].dataType.simpleString()
+    # spread only the scan: the two bounded collects above read the source as is
+    scored = spread_small(base).mapInPandas(
+        scan, f"query_id {id_type}, neighbor_id {id_type}, cos_raw double"
     )
-    q = assigned.where(F.col("vec_id") < query_ids_below).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("q_vec")
-    )
-    # n_probe nearest cells per query (squared L2 to each centroid)
-    diff_sq = F.aggregate(
-        F.zip_with(F.col("q_vec"), F.col("center"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    wc = Window.partitionBy("query_id").orderBy(F.asc("dist_sq"), F.asc("cell"))
-    probed = (
-        F.broadcast(q).crossJoin(F.broadcast(centers_df))
-        .select("query_id", "q_vec", "cell", diff_sq.alias("dist_sq"))
-        .withColumn("crank", F.row_number().over(wc))
-        .where(F.col("crank") <= n_probe)
-        .select("query_id", "q_vec", "cell")
-    )
-    cands = probed.join(assigned, "cell").where(F.col("query_id") != F.col("vec_id"))
-    cos = cosine_similarity(F.col("q_vec"), F.col("vec"))
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
     return (
-        cands.select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos_raw"))
-        .withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", _r(F.col("cos_raw"), 6).alias("cosine"))
     )
@@ -669,17 +744,7 @@ def _assign_blas(
         if n == 0:
             return pd.Series([], dtype="int32")
         x = np.stack(vecs.to_numpy())  # (n, dim) float64
-        out = np.empty(n, dtype=np.int64)
-        # ~32 MB (chunk × k) GEMM output buffer, same bound as the
-        # fold path; ‖x‖² is constant per row so argmin drops it
-        k_ = len(b_cids)
-        chunk = max(1, (4 << 20) // max(1, k_))
-        for s in range(0, n, chunk):
-            xs = x[s : s + chunk]
-            d = xs @ b_mat.T  # (chunk, k) GEMM — the whole point
-            d *= -2.0
-            d += b_c2[None, :]
-            out[s : s + chunk] = b_cids[np.argmin(d, axis=1)]
+        out = b_cids[_argmin_blas(x, b_mat, b_c2)]
         return pd.Series(out, dtype="int64").astype("int32")
 
     return v.withColumn("cid", _argmin_cid(F.col("vec"))), bc

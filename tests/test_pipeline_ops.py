@@ -75,6 +75,50 @@ def test_distributed_cc_matches_union_find(spark, sf_dir):
     assert dist == uf
 
 
+def test_driver_cc_runs_one_jvm_job(spark, sf_dir):
+    """The driver branch of dedup_clusters reads the pairs with ONE bounded
+    collect and returns its union-find result as a local relation, so
+    building and collecting the clusters runs exactly one Spark job, and
+    no stage of it runs a Python RDD. The pairs are materialised into one
+    partition first: a limit read over several partitions may take a few
+    jobs (Spark's take loop scans partitions in growing rounds)."""
+    from svdmovie_lens_parallel_apache_spark_spark.operators.dedup import (
+        dedup_clusters,
+        jaccard_pairs,
+    )
+    from svdmovie_lens_parallel_apache_spark_spark.sources.readers import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    pairs = (
+        jaccard_pairs(docs, threshold=0.5, n=3, block_col="lang")
+        .coalesce(1)
+        .localCheckpoint(eager=True)
+    )
+    sc = spark.sparkContext
+    group = "test_driver_cc_runs_one_jvm_job"
+    sc.setJobGroup(group, group)
+    try:
+        rows = dedup_clusters(pairs, driver_edge_threshold=2**62).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) > 0
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) == 1, jobs
+    store = sc._jsc.sc().statusStore()
+
+    def rdd_names(cluster):
+        nodes, kids = cluster.childNodes(), cluster.childClusters()
+        names = [nodes.apply(i).name() for i in range(nodes.size())]
+        for i in range(kids.size()):
+            names += rdd_names(kids.apply(i))
+        return names
+
+    for stage in tracker.getJobInfo(jobs[0]).stageIds:
+        names = rdd_names(store.operationGraphForStage(stage).rootCluster())
+        assert "PythonRDD" not in names, names
+
+
 def test_simhash_identical_docs_zero_hamming(spark):
     from svdmovie_lens_parallel_apache_spark_spark.operators.dedup import simhash_pairs
 

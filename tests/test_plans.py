@@ -387,3 +387,28 @@ def test_aqe_splits_skewed_join_partition(spark):
         (i % 97) + (0 if i % 10 < 8 else 2 * (i % mod + 1)) for i in range(n_fact)
     )
     assert (row.n, row.s) == (exp_n, exp_s)
+
+
+def test_spread_small_skips_only_shuffled_inputs(spark):
+    """spread_small repartitions an under-parallel input unless a shuffle
+    exchange already sets its parallelism: a broadcast exchange does not,
+    and neither does the word 'Exchange' inside a filter literal."""
+    from svdmovie_lens_parallel_apache_spark_spark.operators.relational import spread_small
+
+    target = spark.sparkContext.defaultParallelism
+    assert target > 1
+    one = spark.range(0, 100, numPartitions=1).withColumn(
+        "s", F.concat(F.lit("E"), F.col("id").cast("string"))
+    )
+
+    behind_broadcast = one.join(F.broadcast(spark.range(0, 10, numPartitions=1)), "id")
+    assert spread_small(behind_broadcast).rdd.getNumPartitions() == target
+
+    hashed = spark.range(0, 100, numPartitions=2).groupBy(
+        (F.col("id") % 7).alias("g")
+    ).count()
+    assert spread_small(hashed) is hashed
+
+    literal = one.where(F.col("s") != "Exchange")
+    assert "Exchange" in literal._jdf.queryExecution().sparkPlan().toString()
+    assert spread_small(literal).rdd.getNumPartitions() == target

@@ -81,6 +81,64 @@ def test_ivf_knn_recall_vs_brute_force(spark, sf_dir):
     assert recall >= 0.4, f"IVF recall collapsed: {recall}"
 
 
+def test_ivf_knn_matches_numpy_reference(spark, sf_dir, monkeypatch):
+    """knn_ivf against the same algorithm written out in NumPy: the same
+    _lloyd centroids on the same vec_id-ordered sample, each corpus vector
+    in its nearest cell, each query probing its n_probe nearest cells
+    (ties to the lower cell id), the query itself excluded, ranked by
+    (cosine desc, neighbor_id asc), zero norm scoring 0."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from svdmovie_lens_parallel_apache_spark_spark.operators import similarity
+    from svdmovie_lens_parallel_apache_spark_spark.operators.similarity import (
+        _lloyd,
+        knn_ivf,
+    )
+    from svdmovie_lens_parallel_apache_spark_spark.sources.readers import load_table
+
+    n_queries, k, n_clusters, n_probe, seed = 40, 7, 16, 4, 42
+    t = pq.read_table(os.path.join(sf_dir, "embeddings.parquet")).sort_by("vec_id")
+    ids = t["vec_id"].to_numpy()
+    V = np.array(t["embedding"].to_pylist(), dtype=np.float64)
+    C = _lloyd(V[:20000], n_clusters, seed)
+    cell = (((V[:, None, :] - C[None]) ** 2).sum(-1)).argmin(1)
+    norms = np.linalg.norm(V, axis=1)
+    want = []
+    for qi in np.flatnonzero(ids < n_queries):
+        d2 = ((V[qi] - C) ** 2).sum(-1)
+        probed = np.argsort(d2, kind="stable")[:n_probe]
+        cand = np.flatnonzero(np.isin(cell, probed) & (ids != ids[qi]))
+        denom = norms[qi] * norms[cand]
+        cos = np.where(denom == 0.0, 0.0, (V[cand] @ V[qi]) / np.where(denom == 0.0, 1.0, denom))
+        order = np.lexsort((ids[cand], -cos))[:k]
+        want += [(int(ids[qi]), int(ids[cand][j]), r + 1, float(cos[j]))
+                 for r, j in enumerate(order)]
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    got = sorted(tuple(r) for r in knn_ivf(emb, n_queries, k, n_clusters, n_probe, seed).collect())
+    want.sort()
+    assert [g[:3] for g in got] == [w[:3] for w in want]
+    for g, w in zip(got, want):
+        assert abs(g[3] - np.floor(w[3] * 1e6 + 0.5) / 1e6) <= 1e-12, (g, w)
+
+    # the bounded-memory path: one query per GEMM and Arrow batches of 37
+    # vectors, so many per-batch top-k lists merge in the final window
+    monkeypatch.setattr(similarity, "_GEMM_ELEMS", 1)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "37")
+    try:
+        chunked = knn_ivf(emb, n_queries, k, n_clusters, n_probe, seed).collect()
+    finally:
+        spark.conf.set(key, prior)
+    assert sorted(tuple(r) for r in chunked) == got
+
+    empty = knn_ivf(emb, query_ids_below=0, k=k)
+    assert empty.collect() == []
+    assert empty.schema == knn_ivf(emb, n_queries, k).schema
+
+
 def test_mllib_brp_knn_overlaps_brute_force(spark, sf_dir):
     from svdmovie_lens_parallel_apache_spark_spark.operators.similarity import (
         knn_brute_force,
@@ -343,7 +401,7 @@ def test_bpe_per_round_cost_is_flat_in_depth(spark, sf_dir):
     median band absorbs local timing noise while still catching the
     failure mode this guards (lineage growth => cost linear in depth =>
     last rounds several-fold slower). Full 50-round sf0.1 evidence:
-    tools/bpe_depth_rehearsal.py -> SCALING.json["bpe_depth"]."""
+    SCALING.json["bpe_depth"]."""
     import statistics
 
     from svdmovie_lens_parallel_apache_spark_spark.catalog_pipeline import _bpe_train
