@@ -35,18 +35,21 @@ The ``plan_log`` option (a file path) records ``{"planned": n,
 actually changed what was PLANNED, not just what was returned.
 
 The WRITE half: ``df.write.format("snapshot_table").mode("append" |
-"overwrite").save(t)`` maps the ``DataSourceArrowWriter`` protocol
-onto the snapshot commit (see ``SnapshotTableBatchWriter``) —
-executors stage private shards with Arrow-computed stats/blooms, the
-driver validates CHECK constraints then claims one atomic snapshot.
-With the ``snapshot_changes`` stream source and ``snapshot_sink``
-stream writer, every surface of the table goes through official APIs.
+"overwrite").save(t)`` is an adapter (``SnapshotTableBatchWriter``)
+over the shared Arrow stager and commit of ``snapshot_table.py``
+(``_stage_arrow`` / ``_commit_staged``, staging under ``_tmp/batch/``).
+What it adds: overwrite mode, a ``partition_by`` option (identity
+fields only; appends inherit the table's spec) and the
+``fail_attempt0_on_value`` fault seam. With the ``snapshot_changes``
+stream source and ``snapshot_sink`` stream writer, every surface of the
+table goes through official APIs.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 from dataclasses import dataclass
 
 
@@ -71,6 +74,7 @@ def _build():
         _partition_match,
         _stats_overlap,
         latest_version,
+        table_partition_by,
         version_as_of,
     )
 
@@ -303,29 +307,21 @@ def _build():
             out = pa.Table.from_arrays(cols, schema=target)
             yield from out.to_batches()
 
-    from pyspark.sql.datasource import (
-        DataSourceArrowWriter,
-        WriterCommitMessage,
-    )
+    from pyspark.sql.datasource import DataSourceArrowWriter
 
-    @dataclass
-    class _Staged(WriterCommitMessage):
-        # staged entries for one task, each
-        # {name, n_rows, stats, bloom, partition?}; [] = empty task.
-        # A task holds MULTIPLE entries when the table is partitioned
-        # and its rows span partition tuples (one staged file per tuple)
-        files: list | None = None
+    from .snapshot_table import (
+        _arrow_write_options,
+        _commit_staged,
+        _discard_staged,
+        _stage_arrow,
+        _StagedFiles,
+    )
 
     class SnapshotTableBatchWriter(DataSourceArrowWriter):
         """Batch write path: ``df.write.format("snapshot_table")`` with
-        mode append/overwrite mapped onto the snapshot commit protocol
-        (two-phase: executors stage private shards + per-shard
-        stats/blooms computed FROM the Arrow batches in passing; the
-        driver enforces CHECK constraints against the staged files
-        BEFORE publishing, then claims one atomic snapshot with the
-        standard rebase loop). A failed job aborts to zero visibility."""
-
-        _STAGE = os.path.join("_tmp", "batch")
+        mode append/overwrite, one atomic snapshot per job through the
+        shared Arrow stager and commit. A failed job aborts to zero
+        visibility."""
 
         def __init__(self, options, schema, overwrite: bool):
             self.options = options
@@ -335,55 +331,21 @@ def _build():
                     "snapshot_table writer: option 'path' is required"
                 )
             self.overwrite = overwrite
-            self.stats_cols = [
-                c for c in (options.get("stats_cols") or "").split(",") if c
-            ]
-            self.bloom_cols = [
-                c for c in (options.get("bloom_cols") or "").split(",") if c
-            ]
-            self.bloom_bits = int(options.get("bloom_bits", 2048))
-            self.bloom_k = int(options.get("bloom_k", 3))
-            self.schema_json = schema.json()
-            # the same type gates write_snapshot applies, enforced at
-            # construction (driver-side, before any job runs): a
-            # timestamp stats column would crash the commit's JSON
-            # serialization AFTER publish, and a float bloom column
-            # would record hashes whose string form disagrees with
-            # probe-time values — silent wrong pruning
-            for c in self.stats_cols:
-                t = schema[c].dataType.simpleString()
-                if t not in ("int", "bigint", "smallint", "tinyint",
-                             "float", "double", "string"):
-                    raise ValueError(
-                        f"snapshot_table writer: stats_cols supports "
-                        f"numeric/string columns only; {c!r} is {t}"
-                    )
-            for c in self.bloom_cols:
-                t = schema[c].dataType.simpleString()
-                if t not in ("int", "bigint", "smallint", "tinyint",
-                             "string"):
-                    raise ValueError(
-                        f"snapshot_table writer: bloom_cols supports "
-                        f"integral/string columns only; {c!r} is {t}"
-                    )
+            self.meta = _arrow_write_options(
+                options, schema, "snapshot_table writer"
+            )
+            self.schema = schema
+            self.stage = os.path.join(self.table, "_tmp", "batch")
             # partition spec: explicit option wins; otherwise INHERIT
             # the live table's (same contract as write_snapshot with
             # partition_by=None). Resolved here on the driver — commit
             # may run without a JVM gateway, but the spec is plain
             # snapshot-log JSON
-            import re as _re
-
-            from .snapshot_table import (
-                _parse_partition_spec,
-                latest_version as _latest,
-                table_partition_by,
-            )
-
             # split on commas OUTSIDE parens: "lang,bucket(8, doc_id)"
             # is two fields
             opt_pb = [
                 c.strip()
-                for c in _re.split(
+                for c in re.split(
                     r",(?![^(]*\))", options.get("partition_by") or ""
                 )
                 if c.strip()
@@ -394,7 +356,7 @@ def _build():
             if (
                 opt_pb
                 and not overwrite
-                and _latest(self.table) is not None
+                and latest_version(self.table) is not None
                 and opt_pb != table_pb
             ):
                 raise ValueError(
@@ -402,16 +364,18 @@ def _build():
                     f"{opt_pb} conflicts with the table's spec "
                     f"{table_pb}; appends inherit (omit the option)"
                 )
-            for spec in self.partition_by:
-                f = _parse_partition_spec(spec)
+            self.split_fields = [
+                _parse_partition_spec(s) for s in self.partition_by
+            ]
+            for f in self.split_fields:
                 if f["kind"] != "identity":
                     # the executor-side Arrow split groups on raw column
                     # values; transform staging is the JVM path's job
                     raise ValueError(
                         f"snapshot_table writer: partition transform "
-                        f"{spec!r} is not supported through the batch "
-                        f"writer; write via write_snapshot (transforms "
-                        f"run JVM-side there)"
+                        f"{f['spec']!r} is not supported through the "
+                        f"batch writer; write via write_snapshot "
+                        f"(transforms run JVM-side there)"
                     )
                 t = schema[f["source"]].dataType.simpleString()
                 if t not in f["types"]:
@@ -421,73 +385,14 @@ def _build():
                         f"{f['source']!r} is {t}"
                     )
 
-        # -- executor side --------------------------------------------
         def write(self, iterator):
-            import pyarrow as pa
-            import pyarrow.compute as pc
-            import pyarrow.parquet as pq
-
-            from .snapshot_table import _bloom_bits_for
-
             batches = list(iterator)
-            n = sum(len(b) for b in batches)
-            if n == 0:
-                return _Staged(files=[])
-            t = pa.Table.from_batches(batches)
-            stage = os.path.join(self.table, self._STAGE)
-            os.makedirs(stage, exist_ok=True)
-            import uuid as _uuid
-
-            def _stage_one(sub: pa.Table, partition: dict | None) -> dict:
-                stats, bloom = {}, {}
-                for c in self.stats_cols:
-                    if c in sub.schema.names:
-                        mm = pc.min_max(sub[c])
-                        stats[c] = [mm["min"].as_py(), mm["max"].as_py()]
-                for c in self.bloom_cols:
-                    if c in sub.schema.names:
-                        bits: set[int] = set()
-                        for v in pc.unique(sub[c]).to_pylist():
-                            if v is not None:
-                                bits.update(
-                                    _bloom_bits_for(
-                                        v, self.bloom_bits, self.bloom_k
-                                    )
-                                )
-                        bloom[c] = {
-                            "m": self.bloom_bits,
-                            "k": self.bloom_k,
-                            "bits": sorted(bits),
-                        }
-                name = f"batch-{_uuid.uuid4().hex}.parquet"
-                pq.write_table(sub, os.path.join(stage, name))
-                entry = {
-                    "name": name, "n_rows": sub.num_rows,
-                    "stats": stats, "bloom": bloom,
-                }
-                if partition is not None:
-                    entry["partition"] = partition
-                return entry
-
-            if not self.partition_by:
-                staged = _Staged(files=[_stage_one(t, None)])
-            else:
-                # partitioned table: one staged file per partition tuple
-                # in this task's rows — the shared separator-proof
-                # group_by split (identity fields; transforms are gated
-                # at __init__)
-                from .snapshot_table import (
-                    _arrow_partition_split,
-                    _parse_partition_spec as _pps,
+            staged = _StagedFiles(
+                files=_stage_arrow(
+                    batches, self.stage, "batch", self.split_fields,
+                    self.meta,
                 )
-
-                fields = [_pps(s) for s in self.partition_by]
-                staged = _Staged(
-                    files=[
-                        _stage_one(sub, vals)
-                        for sub, vals in _arrow_partition_split(t, fields)
-                    ]
-                )
+            )
             # fault-injection hook (tests only; same seam the tsv_shards
             # sink exposes — kept in-path because task retries cannot be
             # simulated from outside the scheduler): die AFTER staging on
@@ -498,10 +403,13 @@ def _build():
             # files are never published (invisible residue under
             # _tmp/batch until vacuum's staged-age sweep).
             marker = self.options.get("fail_attempt0_on_value")
-            if marker:
+            if marker and staged.files:
+                import pyarrow as pa
+                import pyarrow.compute as pc
                 from pyspark import TaskContext
 
                 ctx = TaskContext.get()
+                t = pa.Table.from_batches(batches)
                 col = t.schema.names[0]
                 hit = pc.any(
                     pc.equal(pc.cast(t[col], pa.string()), marker)
@@ -512,92 +420,8 @@ def _build():
                     )
             return staged
 
-        # -- driver side ----------------------------------------------
-        def _staged(self, messages):
-            return [
-                e
-                for m in messages
-                if m is not None and m.files
-                for e in m.files
-            ]
-
-        def _discard(self, messages):
-            for e in self._staged(messages):
-                try:
-                    os.remove(
-                        os.path.join(self.table, self._STAGE, e["name"])
-                    )
-                except FileNotFoundError:
-                    pass
-
         def commit(self, messages):
-            import uuid as _uuid
-
-            from pyspark.sql.types import StructType as _ST
-
-            from .snapshot_table import (
-                _SNAP_DIR,
-                _base_constraints,
-                _commit,
-                _merge_schema,
-            )
-
-            staged = self._staged(messages)
-            schema = _ST.fromJson(json.loads(self.schema_json))
-            constraints = _base_constraints(self.table)
-            if constraints and staged:
-                try:
-                    self._validate(staged, schema, constraints)
-                except ValueError:
-                    self._discard(messages)  # nothing becomes visible
-                    raise
-            os.makedirs(os.path.join(self.table, _SNAP_DIR), exist_ok=True)
-            os.makedirs(os.path.join(self.table, _DATA_DIR), exist_ok=True)
-            mine = []
-            for e in staged:
-                name = f"part-{_uuid.uuid4().hex}.parquet"
-                os.replace(
-                    os.path.join(self.table, self._STAGE, e["name"]),
-                    os.path.join(self.table, _DATA_DIR, name),
-                )
-                shard = {"file": name, "n_rows": e["n_rows"]}
-                if e.get("stats"):
-                    shard["stats"] = e["stats"]
-                if e.get("bloom"):
-                    shard["bloom"] = e["bloom"]
-                if e.get("partition"):
-                    shard["partition"] = e["partition"]
-                mine.append(shard)
-            validated = dict(constraints)
-            published = [
-                os.path.join(self.table, _DATA_DIR, s["file"])
-                for s in mine
-            ]
-            shape = {
-                "operation": "overwrite" if self.overwrite else "append",
-                "properties": {"sink": "snapshot_table_batch"},
-                "schema": schema.jsonValue(),
-                "shards": mine,
-                "partition_by": list(self.partition_by),
-            }
-
-            def apply(base):
-                if base is None:
-                    return dict(shape)  # first commit creates the table
-                # a constraint added concurrently (between the entry
-                # validation and this claim) still binds this batch —
-                # same rebase rule write_snapshot applies
-                fresh = {
-                    k: v for k, v in base.get("constraints", {}).items()
-                    if validated.get(k) != v
-                }
-                if fresh and published:
-                    self._validate_paths(published, schema, fresh)
-                    validated.update(fresh)
-                if self.overwrite:
-                    # invariants persist through overwrite; pending
-                    # deletes do not
-                    return {**shape, "deletes": []}
+            def guard(base):
                 # same layout-race rule as write_snapshot: a concurrent
                 # re-partition invalidates these staged shards' split,
                 # not just the base
@@ -608,77 +432,19 @@ def _build():
                         f"append (spec {list(self.partition_by)}) was "
                         f"staging; retry the write"
                     )
-                return {
-                    **shape,
-                    "schema": _merge_schema(
-                        _ST.fromJson(base["schema"]), schema
-                    ).jsonValue(),
-                    "shards": base["shards"] + mine,
-                }
 
-            # the batch writer's contract is that a refused batch leaves
-            # its published files as unreferenced orphans for vacuum
-            # (never a committed violation), so they are not handed to
-            # _commit for reclaiming
-            _commit(self.table, None, apply, create=True)
-
-        def _validate(self, staged, schema, constraints):
-            self._validate_paths(
-                [
-                    os.path.join(self.table, self._STAGE, e["name"])
-                    for e in staged
-                ],
-                schema,
-                constraints,
+            shape = {
+                "operation": "overwrite" if self.overwrite else "append",
+                "properties": {"sink": "snapshot_table_batch"},
+                "partition_by": list(self.partition_by),
+            }
+            _commit_staged(
+                self.table, self.stage, messages, self.schema, shape, guard,
+                "snapshot_table writer",
             )
 
-        def _validate_paths(self, paths, schema, constraints):
-            """CHECK-constraint enforcement for the batch-writer commit
-            (entry validation of staged files, and in-loop revalidation
-            of constraints added concurrently, against the published
-            files). The commit runs in a Python runner WITHOUT a JVM
-            gateway (``getActiveSession()`` is None there), so when no
-            session is reachable the shards are validated with DuckDB —
-            the repo-wide semantic twin — under the same NULL-passes
-            CHECK rule. FAIL-CLOSED: a condition DuckDB cannot parse or
-            evaluate rejects the commit with a clear message instead of
-            skipping validation (an invariant is never silently
-            unenforced)."""
-            from pyspark.sql import SparkSession
-            spark = SparkSession.getActiveSession()
-            if spark is not None:
-                from .snapshot_table import _enforce_constraints as _enf
-
-                _enf(spark.read.schema(schema).parquet(*paths), constraints)
-                return
-            import duckdb
-
-            con = duckdb.connect()
-            files = "[" + ", ".join(f"'{p}'" for p in paths) + "]"
-            for name, cond in constraints.items():
-                try:
-                    bad = con.sql(
-                        f"SELECT * FROM read_parquet({files}) "
-                        f"WHERE NOT coalesce(CAST(({cond}) AS BOOLEAN), "
-                        f"TRUE) LIMIT 1"
-                    ).fetchall()
-                except Exception as exc:
-                    raise ValueError(
-                        f"snapshot_table writer: CHECK constraint "
-                        f"{name!r} ({cond}) cannot be validated in the "
-                        f"batch-writer commit (no Spark session in this "
-                        f"context and the twin evaluator rejected it: "
-                        f"{exc}); commit refused — write via "
-                        f"write_snapshot or drop the constraint"
-                    ) from exc
-                if bad:
-                    raise ValueError(
-                        f"snapshot_table writer: CHECK constraint "
-                        f"{name!r} ({cond}) violated by row {bad[0]!r}"
-                    )
-
         def abort(self, messages):
-            self._discard(messages)
+            _discard_staged(self.stage, messages)
 
     class SnapshotTableDataSource(DataSource):
         @classmethod

@@ -75,8 +75,10 @@ import os
 import shutil
 import time
 import uuid
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.datasource import WriterCommitMessage
 from pyspark.sql.types import StructType
 
 _SNAP_DIR = "_snapshots"
@@ -2616,6 +2618,232 @@ def _shard_entries(
                 s[key] = vals[n]
         out.append(s)
     return out
+
+
+# -- the official Arrow writers (snapshot_sink.py, snapshot_datasource.py)
+# share one executor-side stager and one driver-side commit; each writer
+# is a protocol adapter around them
+
+
+@dataclass
+class _StagedFiles(WriterCommitMessage):
+    # one task's staged entries, each {name, n_rows, stats, bloom,
+    # partition?}; [] = empty task. Several entries when the table is
+    # partitioned and the task's rows span partition tuples
+    files: list = field(default_factory=list)
+
+
+def _arrow_write_options(options, schema: StructType, prefix: str) -> dict:
+    """The ``stats_cols``/``bloom_cols``/``bloom_bits``/``bloom_k``
+    options of an Arrow writer, parsed on the driver under the same
+    type gates write_snapshot applies, before any job runs: a timestamp
+    stats column would crash the commit's JSON serialization after
+    publish, and a float bloom column would record hashes whose string
+    form disagrees with probe-time values (silent wrong pruning).
+    Errors start with the writer's ``prefix``."""
+    meta = {
+        k: [c for c in (options.get(k) or "").split(",") if c]
+        for k in ("stats_cols", "bloom_cols")
+    }
+    meta["bloom_bits"] = int(options.get("bloom_bits", 2048))
+    meta["bloom_k"] = int(options.get("bloom_k", 3))
+    integral = ("int", "bigint", "smallint", "tinyint")
+    for key, kinds, ok in (
+        ("stats_cols", "numeric/string",
+         integral + ("float", "double", "string")),
+        ("bloom_cols", "integral/string", integral + ("string",)),
+    ):
+        for c in meta[key]:
+            t = schema[c].dataType.simpleString()
+            if t not in ok:
+                raise ValueError(
+                    f"{prefix}: {key} supports {kinds} columns only; "
+                    f"{c!r} is {t}"
+                )
+    return meta
+
+
+def _stage_arrow(
+    batches, stage: str, prefix: str, fields: list[dict], meta: dict,
+) -> list[dict]:
+    """Executor side of the Arrow writers: stage one task's record
+    batches (zero-copy, no Row materialisation) as private parquet
+    files ``<prefix>-<uuid>.parquet`` under ``stage`` — one per
+    partition tuple over the identity ``fields`` (the shared
+    :func:`_arrow_partition_split`), one file when there are none — and
+    return their entries: name, row count, min/max of each
+    ``stats_cols`` column and the bloom bits of each ``bloom_cols``
+    column (``meta``, see :func:`_arrow_write_options`), computed from
+    the batches in passing, and the partition values. An empty task
+    stages nothing."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    batches = list(batches)
+    if not sum(len(b) for b in batches):
+        return []
+    os.makedirs(stage, exist_ok=True)
+    m, k = meta["bloom_bits"], meta["bloom_k"]
+    entries = []
+    for sub, partition in _arrow_partition_split(
+        pa.Table.from_batches(batches), fields
+    ):
+        stats, bloom = {}, {}
+        for c in meta["stats_cols"]:
+            if c in sub.schema.names:
+                mm = pc.min_max(sub[c])
+                stats[c] = [mm["min"].as_py(), mm["max"].as_py()]
+        for c in meta["bloom_cols"]:
+            if c in sub.schema.names:
+                bits: set[int] = set()
+                for v in pc.unique(sub[c]).to_pylist():
+                    if v is not None:
+                        bits.update(_bloom_bits_for(v, m, k))
+                bloom[c] = {"m": m, "k": k, "bits": sorted(bits)}
+        name = f"{prefix}-{uuid.uuid4().hex}.parquet"
+        pq.write_table(sub, os.path.join(stage, name))
+        entry = {
+            "name": name, "n_rows": sub.num_rows,
+            "stats": stats, "bloom": bloom,
+        }
+        if partition:
+            entry["partition"] = partition
+        entries.append(entry)
+    return entries
+
+
+def _staged_entries(messages) -> list[dict]:
+    """Every staged entry of a job's commit messages (a failed task
+    sends None)."""
+    return [e for m in messages if m is not None and m.files for e in m.files]
+
+
+def _discard_staged(stage: str, messages) -> None:
+    """Delete a job's staged files (abort, replay, refusal): none of
+    them ever becomes visible."""
+    for e in _staged_entries(messages):
+        try:
+            os.remove(os.path.join(stage, e["name"]))
+        except FileNotFoundError:
+            pass
+
+
+def _validate_paths(
+    paths: list[str], schema: StructType, constraints: dict, prefix: str,
+) -> None:
+    """CHECK-constraint enforcement for an Arrow-writer commit (entry
+    validation of staged files, and in-loop revalidation of constraints
+    added concurrently, against the published files). The commit runs
+    in a Python runner WITHOUT a JVM gateway (``getActiveSession()`` is
+    None there), so when no session is reachable the shards are
+    validated with DuckDB — the repo-wide semantic twin — under the
+    same NULL-passes CHECK rule. FAIL-CLOSED: a condition DuckDB cannot
+    parse or evaluate rejects the commit with a clear message instead
+    of skipping validation (an invariant is never silently
+    unenforced)."""
+    spark = SparkSession.getActiveSession()
+    if spark is not None:
+        _enforce_constraints(
+            spark.read.schema(schema).parquet(*paths), constraints
+        )
+        return
+    import duckdb
+
+    con = duckdb.connect()
+    files = "[" + ", ".join(f"'{p}'" for p in paths) + "]"
+    for name, cond in constraints.items():
+        try:
+            bad = con.sql(
+                f"SELECT * FROM read_parquet({files}) "
+                f"WHERE NOT coalesce(CAST(({cond}) AS BOOLEAN), "
+                f"TRUE) LIMIT 1"
+            ).fetchall()
+        except Exception as exc:
+            raise ValueError(
+                f"{prefix}: CHECK constraint {name!r} ({cond}) cannot be "
+                f"validated in the writer commit (no Spark session in "
+                f"this context and the twin evaluator rejected it: "
+                f"{exc}); commit refused — write via write_snapshot or "
+                f"drop the constraint"
+            ) from exc
+        if bad:
+            raise ValueError(
+                f"{prefix}: CHECK constraint {name!r} ({cond}) violated "
+                f"by row {bad[0]!r}"
+            )
+
+
+def _commit_staged(
+    table: str, stage: str, messages, schema: StructType, shape: dict,
+    guard, prefix: str,
+) -> int:
+    """Driver side of the Arrow writers: commit one job's staged files
+    (:func:`_stage_arrow`) as ONE snapshot. Enforces the table's CHECK
+    constraints against the staged files before anything is published
+    (a refusal discards them), publishes them into ``data/`` under
+    fresh ``part-<uuid>`` names and claims the next version through
+    :func:`_commit`. ``shape`` is the writer's part of the snapshot
+    (``operation``, ``properties``, optionally ``partition_by``); the
+    schema and shards are added here. On every rebase onto an existing
+    head, constraints the head gained since the entry read are
+    enforced against the published files, then an ``overwrite``
+    replaces the head's shards (and clears its pending deletes) while an
+    ``append`` first runs the writer's ``guard(base)`` (its own
+    conflict checks: raise to refuse) and adds its shards to the head's
+    under the by-name schema union. A refused batch's published files
+    are removed on the way out."""
+    staged = _staged_entries(messages)
+    validated = dict(_base_constraints(table))
+    if validated and staged:
+        try:
+            _validate_paths(
+                [os.path.join(stage, e["name"]) for e in staged],
+                schema, validated, prefix,
+            )
+        except ValueError:
+            _discard_staged(stage, messages)  # nothing becomes visible
+            raise
+    os.makedirs(os.path.join(table, _SNAP_DIR), exist_ok=True)
+    os.makedirs(os.path.join(table, _DATA_DIR), exist_ok=True)
+    mine, counts, stats, blooms, parts = [], {}, {}, {}, {}
+    for e in staged:
+        n = f"part-{uuid.uuid4().hex}.parquet"
+        os.replace(
+            os.path.join(stage, e["name"]), os.path.join(table, _DATA_DIR, n)
+        )
+        mine.append(n)
+        counts[n], stats[n], blooms[n] = e["n_rows"], e["stats"], e["bloom"]
+        parts[n] = e.get("partition")
+    published = [os.path.join(table, _DATA_DIR, n) for n in mine]
+    new = {
+        **shape,
+        "schema": schema.jsonValue(),
+        "shards": _shard_entries(mine, counts, stats, blooms, parts),
+    }
+
+    def apply(base):
+        if base is None:
+            return dict(new)  # the first commit creates the table
+        fresh = {
+            k: v for k, v in base.get("constraints", {}).items()
+            if validated.get(k) != v
+        }
+        if fresh and published:
+            _validate_paths(published, schema, fresh, prefix)
+            validated.update(fresh)
+        if new["operation"] == "overwrite":
+            return {**new, "deletes": []}
+        guard(base)
+        return {
+            **new,
+            "schema": _merge_schema(
+                StructType.fromJson(base["schema"]), schema
+            ).jsonValue(),
+            "shards": base["shards"] + new["shards"],
+        }
+
+    return _commit(table, None, apply, mine, create=True)
 
 
 def _recheck_constraints(df: DataFrame, validated: dict, base: dict) -> None:

@@ -7,6 +7,7 @@ partition-count invariance, filter pushdown equivalence (pushed lang
 equality == post-hoc filter), residual-filter handoff, and schema.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from svdmovie_lens_parallel_apache_spark_spark.sources.python_datasource import (
@@ -543,17 +544,29 @@ def test_snapshot_batch_writer_concurrent_commits_both_land(spark, sf_dir, tmp_p
     assert ops == ["append", "append"]
 
 
-def test_snapshot_batch_writer_rejects_unsupported_metadata_types(
-    spark, sf_dir, tmp_path
-):
-    """Regression: the writer enforces write_snapshot's stats/bloom
-    type gates at CONSTRUCTION (a timestamp stats column would crash
-    JSON serialization after publish; a float bloom column would
-    silently wrong-prune point lookups)."""
-    import os
+def _arrow_writer(kind, options, schema):
+    """The batch writer or the stream sink, constructed directly."""
+    from svdmovie_lens_parallel_apache_spark_spark.sources import (
+        snapshot_datasource,
+        snapshot_sink,
+    )
 
-    import pytest
-    from pyspark.sql import functions as F
+    if kind == "batch":
+        return snapshot_datasource._build()(options=options).writer(
+            schema, False
+        )
+    return snapshot_sink._build()(options=options).streamWriter(schema, False)
+
+
+@pytest.mark.parametrize("kind", ["batch", "sink"])
+def test_snapshot_batch_writer_rejects_unsupported_metadata_types(
+    spark, sf_dir, tmp_path, kind
+):
+    """Regression: both Arrow writers enforce write_snapshot's
+    stats/bloom type gates at CONSTRUCTION (a timestamp stats column
+    would crash JSON serialization after publish; a float bloom column
+    would silently wrong-prune point lookups)."""
+    import os
 
     from svdmovie_lens_parallel_apache_spark_spark.sources.snapshot_datasource import (
         register_snapshot_table_source,
@@ -564,33 +577,31 @@ def test_snapshot_batch_writer_rejects_unsupported_metadata_types(
         "ts", F.current_timestamp()
     ).withColumn("score", (F.col("n_chars") / 7.0))
     table = str(tmp_path / "t")
-    with pytest.raises(Exception, match="stats_cols supports"):
-        (
-            docs.write.format("snapshot_table")
-            .option("stats_cols", "ts").mode("append").save(table)
-        )
-    with pytest.raises(Exception, match="bloom_cols supports"):
-        (
-            docs.write.format("snapshot_table")
-            .option("bloom_cols", "score").mode("append").save(table)
-        )
+    for opt, col in (("stats_cols", "ts"), ("bloom_cols", "score")):
+        with pytest.raises(Exception, match=f"{opt} supports"):
+            if kind == "batch":
+                (
+                    docs.write.format("snapshot_table")
+                    .option(opt, col).mode("append").save(table)
+                )
+            else:
+                _arrow_writer(kind, {"path": table, opt: col}, docs.schema)
     assert not os.path.exists(os.path.join(table, "_snapshots"))
 
 
+@pytest.mark.parametrize("kind", ["batch", "sink"])
 def test_snapshot_batch_writer_revalidates_concurrent_constraint(
-    spark, sf_dir, tmp_path, monkeypatch
+    spark, sf_dir, tmp_path, monkeypatch, kind
 ):
-    """Regression: a CHECK constraint added between the writer's ENTRY
-    validation and its commit claim still binds the batch — the rebase
-    loop revalidates fresh constraints against the published files and
-    refuses; the orphans are vacuum-reclaimable, the log untouched.
-    (The entry read is blinded via monkeypatch to open the race window
-    deterministically — otherwise commit()'s own _base_constraints read
-    would catch the constraint before publish.)"""
-    import pytest
-
+    """Regression: a CHECK constraint added between an Arrow writer's
+    ENTRY validation and its commit claim still binds the batch — the
+    rebase loop revalidates fresh constraints against the published
+    files and refuses; the published files are reclaimed on the way out
+    and the log is untouched. (The entry read is blinded via
+    monkeypatch to open the race window deterministically — otherwise
+    commit()'s own _base_constraints read would catch the constraint
+    before publish.)"""
     from svdmovie_lens_parallel_apache_spark_spark.sources import (
-        snapshot_datasource,
         snapshot_table as st_mod,
     )
     from svdmovie_lens_parallel_apache_spark_spark.sources.snapshot_table import (
@@ -600,19 +611,18 @@ def test_snapshot_batch_writer_revalidates_concurrent_constraint(
     docs = _snap_docs(spark, sf_dir)
     table = str(tmp_path / "t")
     write_snapshot(docs.where("n_chars > 0"), table)               # v1
-    ds_cls = snapshot_datasource._build()
     bad = spark.createDataFrame([(-1, "xx", -100)], docs.schema)
-    wr = ds_cls(options={"path": table}).writer(bad.schema, False)
+    wr = _arrow_writer(kind, {"path": table}, bad.schema)
     msgs = [wr.write(iter(bad.toArrow().to_batches()))]
     add_constraint(spark, table, "pos", "n_chars > 0")             # v2
     # blind the ENTRY validation: the constraint "lands" after it
     monkeypatch.setattr(st_mod, "_base_constraints", lambda t: {})
     with pytest.raises(ValueError, match="CHECK constraint 'pos'"):
-        wr.commit(msgs)
+        wr.commit(msgs) if kind == "batch" else wr.commit(msgs, 0)
     monkeypatch.undo()
     assert latest_version(table) == 2  # nothing committed
     assert read_snapshot(spark, table).where("n_chars <= 0").count() == 0
-    assert vacuum(table)["orphans_removed"] >= 1  # published loser file
+    assert vacuum(table)["orphans_removed"] == 0  # published files reclaimed
 
 
 def test_snapshot_source_read_pins_analysis_version(spark, sf_dir, tmp_path):

@@ -141,9 +141,11 @@ def test_sink_round_trip_source_and_sink(spark, sf_dir, tmp_path):
 def test_sink_rejects_constraint_violations_before_visibility(
     spark, sf_dir, tmp_path
 ):
-    """A micro-batch violating the table's CHECK constraint must fail
-    the query BEFORE publishing: no new snapshot, no rows visible, and
-    no staged files left behind."""
+    """A constrained table takes streamed appends: a valid micro-batch
+    commits (its CHECK validation runs in the sink's commit, where
+    there is no Spark session). A micro-batch violating the constraint
+    must fail the query BEFORE publishing: no new snapshot, no rows
+    visible, and no staged files left behind."""
     from svdmovie_lens_parallel_apache_spark_spark.sources.snapshot_table import (
         add_constraint,
         write_snapshot,
@@ -157,17 +159,17 @@ def test_sink_rejects_constraint_violations_before_visibility(
     os.makedirs(src)
     write_snapshot(docs.limit(5), table, mode="append")
     add_constraint(spark, table, "id_in_range", "doc_id < 1000000")
-    v_before = latest_version(table)
-    bad = docs.limit(4).withColumn("doc_id", F.col("doc_id") + 10**7)
-    staging = f"{src}/__stage"
-    bad.coalesce(1).write.parquet(staging)
-    [p] = glob.glob(f"{staging}/part-*.parquet")
-    os.replace(p, f"{src}/bad.parquet")
-    shutil.rmtree(staging)
-    from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    with pytest.raises(StreamingQueryException):
-        q = (
+    def _drop(df, name):
+        staging = f"{src}/__stage"
+        df.coalesce(1).write.parquet(staging)
+        [p] = glob.glob(f"{staging}/part-*.parquet")
+        os.replace(p, f"{src}/{name}.parquet")
+        shutil.rmtree(staging)
+        time.sleep(0.05)  # distinct mtimes -> deterministic batch order
+
+    def _stream():
+        return (
             spark.readStream.schema(_SCHEMA)
             .parquet(src)
             .writeStream.format("snapshot_sink")
@@ -176,9 +178,22 @@ def test_sink_rejects_constraint_violations_before_visibility(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(180)
+
+    v_before = latest_version(table)
+    _drop(docs.limit(4), "good")
+    _stream().awaitTermination(180)
+    assert latest_version(table) == v_before + 1
+    assert read_snapshot(spark, table).count() == 9
+    v_before = latest_version(table)
+    _drop(docs.limit(4).withColumn("doc_id", F.col("doc_id") + 10**7), "bad")
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    with pytest.raises(
+        StreamingQueryException, match="CHECK constraint 'id_in_range'"
+    ):
+        _stream().awaitTermination(180)
     assert latest_version(table) == v_before
-    assert read_snapshot(spark, table).count() == 5
+    assert read_snapshot(spark, table).count() == 9
     assert glob.glob(os.path.join(table, "_tmp", "stream", "*")) == []
 
 

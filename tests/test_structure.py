@@ -58,6 +58,26 @@ def test_claim_snapshot_called_only_from_commit():
     }
 
 
+def test_arrow_writers_share_one_stager_and_commit():
+    """The stream sink and the batch writer are adapters over one
+    executor-side stager and one driver-side commit: a parquet write,
+    a footer min/max or a constraint validation anywhere else (a copied
+    staging body) fails here, and so does either writer calling
+    ``_commit`` itself."""
+    st = os.path.join("sources", "snapshot_table.py")
+    assert {
+        (f, owner) for f, owner, _l in _call_sites("write_table", "min_max")
+    } == {(st, "_stage_arrow")}
+    assert {
+        (f, owner) for f, owner, _l in _call_sites("_validate_paths")
+    } == {(st, "_commit_staged")}
+    writers = {
+        os.path.join("sources", "snapshot_sink.py"),
+        os.path.join("sources", "snapshot_datasource.py"),
+    }
+    assert [s for s in _call_sites("_commit") if s[0] in writers] == []
+
+
 def test_stream_waits_go_through_drain():
     """Every stream the package starts is waited on by
     ``streaming.jobs.drain``, the one wait with a stall limit; a bare
