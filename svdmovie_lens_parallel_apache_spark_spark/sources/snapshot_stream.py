@@ -34,9 +34,10 @@ module provides that over the snapshot-log format
   restart from a fresh ``start_version`` (or fall back to a batch
   rebuild) — the Delta/Iceberg operational rule, stated here instead of
   hidden.
-- The scan schema is pinned at query start from the latest snapshot
-  (schema evolution mid-stream needs a restart to surface new columns —
-  same contract as Delta's streaming source).
+- The scan schema is pinned when ``load()`` resolves it (the schema
+  Spark hands ``streamReader``; the head is not re-read at start):
+  columns added after ``load()`` surface after a restart — same
+  contract as Delta's streaming source.
 
 Options: ``path`` (the table directory), ``start_version`` (default 0 =
 from table creation, so version 1's files are the first batch) or its
@@ -379,69 +380,57 @@ def _capped_end_paged(
     return (v, 0, 0)
 
 
-def _build():
-    """Class definitions deferred so importing this module never
-    requires the pyspark.sql.datasource surface at import time."""
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
-    )
+def _reader_base():
+    """The one stream reader behind both formats: option parsing,
+    pacing, the retention contract and the planning walk. A format
+    supplies its name (``fmt``), its position codec (``_norm``/
+    ``_off``), its admission cap (``_capped``), its per-version planner
+    (``_plan``), its ``InputPartition`` factory (``_part``) and
+    ``read``. Deferred, like the format builders, so importing this
+    module never requires the pyspark.sql.datasource surface."""
+    import json
 
-    @dataclass
-    class _Shard(InputPartition):
-        path: str | None  # None = empty-range sentinel (yields nothing)
+    from pyspark.sql.datasource import DataSourceStreamReader
 
-    class SnapshotChangesStreamReader(DataSourceStreamReader):
-        def __init__(self, options):
+    class SnapshotStreamReader(DataSourceStreamReader):
+        def __init__(self, options, fields):
             self.table = options.get("path")
             if not self.table:
-                raise ValueError("snapshot_changes: option 'path' required")
-            self.start_version = _resolve_start(
-                self.table, options, "snapshot_changes"
-            )
-            v = latest_version(self.table)
-            if v is None:
-                raise FileNotFoundError(
-                    f"snapshot_changes: {self.table} has no snapshots"
-                )
-            snap = _load_snapshot(self.table, v)
-            self.schema_json = snap["schema"]
+                raise ValueError(f"{self.fmt}: option 'path' required")
+            self.start_version = _resolve_start(self.table, options, self.fmt)
+            # the scan schema Spark resolved at load(): a head re-read
+            # here would disagree with it after a concurrent add_column
+            self.fields = fields
             self.probes = None
             raw = options.get("partition_filter")
             if raw:
-                import json as _json
-
-                pb = snap.get("partition_by", [])
+                pb = _load_snapshot(
+                    self.table, latest_version(self.table)
+                ).get("partition_by", [])
                 self.probes = {
                     key: _transform_probes(pb, key, want)
-                    for key, want in _json.loads(raw).items()
+                    for key, want in json.loads(raw).items()
                 }
-            self.field_names = [
-                f.name for f in StructType.fromJson(self.schema_json).fields
-            ]
             self.max_files = int(options.get("max_files_per_trigger", 0) or 0)
             self.allow_data_loss = str(
                 options.get("allow_data_loss", "false")
             ).lower() == "true"
-            # positions are (version, index) tuples — see _norm_off.
-            # _pos (planning high-water) paces latestOffset; it is
-            # seeded with start_version, which is the TRUE position
-            # only for a fresh query. That seeding is safe because of
-            # an observed-and-relied-on Spark behavior (verified for
-            # both processingTime and availableNow restarts, committed
-            # and uncommitted final batches alike): on RESTART the
-            # engine's first call into the reader is always
-            # partitions(last_logged, last_logged) — an empty-range
-            # re-init that re-creates the last batch's scan — which
-            # teaches _pos the checkpointed position BEFORE the first
-            # latestOffset can cap from the stale seed. A capped
-            # offset therefore never regresses behind the checkpoint
-            # (the hazard: Spark logs whatever latestOffset returns,
-            # and a crash after logging a regressed offset would
-            # replay delivered files on the next restart).
-            self._pos = (self.start_version + 1, 0)  # planning high-water
-            self._floor = (self.start_version + 1, 0)  # delivered floor
+            # _pos (planning high-water) paces latestOffset; seeding it
+            # from start_version is the TRUE position only for a fresh
+            # query, and safe because on RESTART Spark's first call is
+            # always partitions(last_logged, last_logged) (verified for
+            # processingTime and availableNow restarts, committed and
+            # uncommitted final batches alike) — an empty-range re-init
+            # that teaches _pos the checkpointed position BEFORE the
+            # first latestOffset caps. A capped offset therefore never
+            # regresses behind the checkpoint (Spark logs whatever
+            # latestOffset returns; a logged regressed offset plus a
+            # crash would replay delivered files).
+            self._pos = self._floor = self._at(self.start_version + 1)
+
+        def _at(self, v):
+            """The position before any change of version ``v``."""
+            return self._norm({"version": v - 1})
 
         def initialOffset(self):
             return {"version": self.start_version}
@@ -450,40 +439,24 @@ def _build():
             v = latest_version(self.table)
             if v is None:
                 return {"version": self.start_version}
-            if self.max_files:
-                try:
-                    ev, ei = _capped_end_indexed(
-                        self.table, v, max(self._pos, self._floor),
-                        self.max_files,
-                    )
-                except FileNotFoundError:
-                    # counting walked into expired history (a position
-                    # predating retention): retry from the plannable
-                    # floor so the recovery batch STAYS budget-paced —
-                    # an uncapped fallback would hand allow_data_loss
-                    # recoveries the exact monster batch admission
-                    # control exists to prevent. partitions() still
-                    # raises the actionable contract when data loss
-                    # was not opted into.
-                    c = _plannable_floor(self.table)
-                    try:
-                        ev, ei = _capped_end_indexed(
-                            self.table, v,
-                            max(self._pos, self._floor, (c + 1, 0)),
-                            self.max_files,
-                        )
-                    except FileNotFoundError:
-                        # raced with a SECOND expiry: echo the current
-                        # position (a no-progress offset) and let the
-                        # next trigger re-cap — falling through to the
-                        # uncapped head would deliver exactly the
-                        # monster recovery batch admission control
-                        # exists to prevent
-                        return _off_of(max(self._pos, self._floor))
-                # canonical indexed form; equals the committed offset
-                # dict byte-for-byte once caught up (no churn batches)
-                return {"version": ev, "index": ei}
-            return {"version": v}
+            if not self.max_files:
+                return {"version": v}
+            at = max(self._pos, self._floor)
+            try:
+                return self._capped(v, at)
+            except FileNotFoundError:
+                # counting walked into expired history: retry from the
+                # plannable floor so an allow_data_loss recovery STAYS
+                # budget-paced (an uncapped fallback is the monster
+                # batch admission control exists to prevent);
+                # partitions() still raises the contract otherwise
+                at = max(at, self._at(_plannable_floor(self.table) + 1))
+            try:
+                return self._capped(v, at)
+            except FileNotFoundError:
+                # raced with a SECOND expiry: echo the current position
+                # (a no-progress offset) and let the next trigger re-cap
+                return self._off(max(self._pos, self._floor))
 
         def partitions(self, start, end):
             # On restart Spark's first call is partitions(last_logged,
@@ -499,26 +472,24 @@ def _build():
             # clamp is the identity (floor == last committed end <=
             # start); it exists as defense in depth against a
             # regressed start offset ever re-planning committed files.
-            s = max(_norm_off(start), self._floor)
-            e = _norm_off(end)
-            if s < e:
+            s = max(self._norm(start), self._floor)
+            e = self._norm(end)
+            if s[:2] < e[:2]:
                 # expired-history contract: fail (or, with
                 # allow_data_loss, skip) when the walk's first version
                 # precedes retention — see _retention_check
                 adj = _retention_check(
-                    self.table, s[0], self.allow_data_loss,
-                    "snapshot_changes",
+                    self.table, s[0], self.allow_data_loss, self.fmt
                 )
                 if adj != s[0]:
-                    s = (adj, 0)
+                    s = self._at(adj)
             self._pos = max(self._pos, s, e)
-            entries = []
-            v, i = s
-            while (v, i) < e:
-                if v == e[0] and e[1] == 0:
-                    break  # (V, 0) references nothing of V
+            items = []
+            pos = s
+            while pos[:2] < e[:2]:
+                v = pos[0]
                 try:
-                    adds, _ = _added_files(self.table, v - 1, v)
+                    items.extend(self._plan(pos, e))
                 except FileNotFoundError:
                     # a mid-range snapshot is gone — retention with a
                     # tag-pinned version BELOW the expired gap defeats
@@ -526,73 +497,119 @@ def _build():
                     # convert to the same actionable contract here
                     adj = _retention_check(
                         self.table, max(v, _plannable_floor(self.table)),
-                        self.allow_data_loss, "snapshot_changes",
+                        self.allow_data_loss, self.fmt,
                     )
                     if adj <= v:
                         raise  # not a retention gap: surface as-is
-                    v, i = adj, 0
+                    pos = self._at(adj)
                     continue
-                hi = e[1] if v == e[0] else len(adds)
-                entries.extend(adds[i:hi])
-                v, i = v + 1, 0
+                pos = self._at(v + 1)
             if self.probes:
-                entries = [
-                    s
-                    for s in entries
+                # each item is one file's adds or changes, and a file
+                # holds rows of exactly one partition tuple, so the
+                # stamp filter is exact; unstamped files conservatively
+                # stream (same contract as every pruning surface)
+                items = [
+                    i for i in items
                     if all(
-                        _partition_match(s, k, t)
+                        _partition_match(i, k, t)
                         for k, t in self.probes.items()
                     )
                 ]
-            import os
-
-            data = os.path.join(self.table, "data")
-            return [
-                _Shard(os.path.join(data, s["file"])) for s in entries
-            ] or [_Shard(None)]
-
-        def read(self, partition):
-            if partition.path is None:
-                return
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            t = pq.read_table(partition.path)
-            # pre-evolution shards conform by name IN ARROW (NULL-fill
-            # missing, drop extra) — shared with the CDC reader
-            t = _conform_arrow(
-                t, StructType.fromJson(self.schema_json).fields, None
-            )
-            yield from t.to_batches()
+            return [self._part(i) for i in items] or [self._part(None)]
 
         def commit(self, end):
             # the snapshot log + Spark's offset log are the state; the
             # position hints only pace the NEXT latestOffset and floor.
             # This is the ONLY place the floor advances: a committed
             # end offset is the one position Spark proves delivered.
-            self._pos = max(self._pos, _norm_off(end))
-            self._floor = max(self._floor, _norm_off(end))
+            self._pos = max(self._pos, self._norm(end))
+            self._floor = max(self._floor, self._norm(end))
 
-    class SnapshotChangesDataSource(DataSource):
+    return SnapshotStreamReader
+
+
+def _source(reader, extra):
+    """The ``DataSource`` of one format: its schema is the head
+    snapshot's plus the format's ``extra`` fields, and its reader
+    gets the fields Spark resolved, minus ``extra``."""
+    from pyspark.sql.datasource import DataSource
+
+    names = {f.name for f in extra}
+
+    class SnapshotStreamSource(DataSource):
         @classmethod
         def name(cls):
-            return "snapshot_changes"
+            return reader.fmt
 
         def schema(self):
             table = self.options.get("path")
             if not table:
-                raise ValueError("snapshot_changes: option 'path' required")
+                raise ValueError(f"{reader.fmt}: option 'path' required")
             v = latest_version(table)
             if v is None:
                 raise FileNotFoundError(
-                    f"snapshot_changes: {table} has no snapshots"
+                    f"{reader.fmt}: {table} has no snapshots"
                 )
-            return StructType.fromJson(_load_snapshot(table, v)["schema"])
+            base = StructType.fromJson(_load_snapshot(table, v)["schema"])
+            return StructType(list(base.fields) + list(extra))
 
         def streamReader(self, schema):
-            return SnapshotChangesStreamReader(self.options)
+            return reader(
+                self.options,
+                [f for f in schema.fields if f.name not in names],
+            )
 
-    return SnapshotChangesDataSource
+    return SnapshotStreamSource
+
+
+def _build():
+    """The ``snapshot_changes`` source: one input partition per added
+    file, positions ``(version, index)`` (see :func:`_norm_off`)."""
+    import os
+
+    from pyspark.sql.datasource import InputPartition
+
+    @dataclass
+    class _Shard(InputPartition):
+        path: str | None  # None = empty-range sentinel (yields nothing)
+
+    class SnapshotChangesStreamReader(_reader_base()):
+        fmt = "snapshot_changes"
+        _norm = staticmethod(_norm_off)
+        _off = staticmethod(_off_of)
+
+        def _capped(self, latest, at):
+            # always the indexed form; it equals the committed offset
+            # dict byte-for-byte once caught up (no churn batches)
+            ev, ei = _capped_end_indexed(
+                self.table, latest, at, self.max_files
+            )
+            return {"version": ev, "index": ei}
+
+        def _plan(self, pos, e):
+            v, i = pos
+            adds, _ = _added_files(self.table, v - 1, v)
+            return adds[i:e[1] if v == e[0] else None]
+
+        def _part(self, s):
+            if s is None:
+                return _Shard(None)
+            return _Shard(os.path.join(self.table, "data", s["file"]))
+
+        def read(self, partition):
+            if partition.path is None:
+                return
+            import pyarrow.parquet as pq
+
+            # pre-evolution shards conform by name IN ARROW (NULL-fill
+            # missing, drop extra) — shared with the CDC reader
+            t = _conform_arrow(
+                pq.read_table(partition.path), self.fields, None
+            )
+            yield from t.to_batches()
+
+    return _source(SnapshotChangesStreamReader, [])
 
 
 def register_snapshot_changes(spark) -> None:
@@ -858,10 +875,13 @@ def _cdc_plan_version(table: str, v: int) -> list[dict]:
 
 
 def _build_cdc():
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
+    from pyspark.sql.datasource import InputPartition
+    from pyspark.sql.types import (
+        AtomicType,
+        BinaryType,
+        LongType,
+        StringType,
+        StructField,
     )
 
     @dataclass
@@ -875,7 +895,7 @@ def _build_cdc():
         pages: tuple | None = None  # admitted key-range pages, or None
         n_pages: int = 0  # total pages of this version (0 = unsplit)
 
-    class SnapshotCdcStreamReader(DataSourceStreamReader):
+    class SnapshotCdcStreamReader(_reader_base()):
         """Change-data-feed STREAM over a snapshot table (Delta
         ``readChangeFeed`` streaming / Iceberg changelog-scan shaped):
         each micro-batch is the row-level changes of a committed
@@ -893,8 +913,8 @@ def _build_cdc():
         an update writing values IDENTICAL to the old row emits the
         pair anyway (the batch diff cancels it), Delta CDF's behavior;
         net effect per key is identical for any consumer merging by
-        key. The scan schema is pinned at query start; columns added
-        mid-stream surface after a restart.
+        key. The scan schema is pinned when ``load()`` resolves it;
+        columns added after that surface after a restart.
 
         With ``page_keys`` (comma-separated key columns) AND
         ``max_files_per_trigger``, a commit whose change count blows
@@ -908,54 +928,27 @@ def _build_cdc():
         heterogeneous executors, and library upgrades with no
         version-pinning requirement."""
 
-        def __init__(self, options):
-            self.table = options.get("path")
-            if not self.table:
-                raise ValueError("snapshot_cdc: option 'path' required")
-            self.start_version = _resolve_start(
-                self.table, options, "snapshot_cdc"
-            )
-            v = latest_version(self.table)
-            if v is None:
-                raise FileNotFoundError(
-                    f"snapshot_cdc: {self.table} has no snapshots"
-                )
-            snap = _load_snapshot(self.table, v)
-            self.schema_json = snap["schema"]
-            self.probes = None
-            raw = options.get("partition_filter")
-            if raw:
-                import json as _json
+        fmt = "snapshot_cdc"
+        _norm = staticmethod(_cdc_norm)
+        _off = staticmethod(_cdc_off)
 
-                pb = snap.get("partition_by", [])
-                self.probes = {
-                    key: _transform_probes(pb, key, want)
-                    for key, want in _json.loads(raw).items()
-                }
-            self.max_files = int(options.get("max_files_per_trigger", 0) or 0)
-            self.allow_data_loss = str(
-                options.get("allow_data_loss", "false")
-            ).lower() == "true"
+        def __init__(self, options, fields):
+            super().__init__(options, fields)
             raw_keys = options.get("page_keys", "")
             self.page_keys = tuple(
                 c.strip() for c in raw_keys.split(",") if c.strip()
             )
-            fields = {
-                f.name: f.dataType
-                for f in StructType.fromJson(self.schema_json).fields
-            }
-            missing = [c for c in self.page_keys if c not in fields]
+            types = {f.name: f.dataType for f in fields}
+            missing = [c for c in self.page_keys if c not in types]
             if missing:
                 raise ValueError(
                     f"snapshot_cdc: page_keys columns {missing} not in "
                     f"the table schema"
                 )
-            from pyspark.sql.types import AtomicType, BinaryType
-
             bad = [
                 c for c in self.page_keys
-                if not isinstance(fields[c], AtomicType)
-                or isinstance(fields[c], BinaryType)
+                if not isinstance(types[c], AtomicType)
+                or isinstance(types[c], BinaryType)
             ]
             if bad:
                 # arrays/structs have no canonical Arrow string cast
@@ -964,131 +957,46 @@ def _build_cdc():
                 raise ValueError(
                     f"snapshot_cdc: page_keys must be atomic non-binary "
                     f"columns; {bad} are "
-                    f"{[fields[c].simpleString() for c in bad]}"
+                    f"{[types[c].simpleString() for c in bad]}"
                 )
-            # seed is the true position only for a FRESH query; safe
-            # because Spark's restart re-init call partitions(
-            # last_logged, last_logged) always precedes the first
-            # latestOffset and re-teaches _pos — see the append
-            # reader's __init__ for the verified call-order contract.
-            # Positions are (version, page, n_pages) — see _cdc_norm.
-            self._pos = (self.start_version + 1, 0, 0)
-            self._floor = (self.start_version + 1, 0, 0)
 
-        def initialOffset(self):
-            return {"version": self.start_version}
+        def _capped(self, latest, at):
+            # counts are the raw segment diff (adds + removals +
+            # DV-covered files ~= the planned change items, in
+            # O(changed metadata)); refusal shapes still fail loudly
+            # in the planning walk
+            return _cdc_off(_capped_end_paged(
+                self.table, latest, at, self.max_files,
+                bool(self.page_keys),
+            ))
 
-        def latestOffset(self):
-            v = latest_version(self.table)
-            if v is None:
-                return {"version": self.start_version}
-            if self.max_files:
-                try:
-                    # counts are the raw segment diff (adds + removals
-                    # + DV-covered files ~= the planned change items,
-                    # in O(changed metadata)); refusal shapes still
-                    # fail loudly in the planning walk
-                    return _cdc_off(_capped_end_paged(
-                        self.table, v, max(self._pos, self._floor),
-                        self.max_files, bool(self.page_keys),
-                    ))
-                except FileNotFoundError:
-                    # expired history: retry from the plannable floor
-                    # so an allow_data_loss recovery stays paced (see
-                    # the append reader); partitions() still raises
-                    # the actionable contract otherwise
-                    c = _plannable_floor(self.table)
-                    try:
-                        return _cdc_off(_capped_end_paged(
-                            self.table, v,
-                            max(self._pos, self._floor, (c + 1, 0, 0)),
-                            self.max_files, bool(self.page_keys),
-                        ))
-                    except FileNotFoundError:
-                        # raced with a SECOND expiry: echo the current
-                        # position (no progress) and let the next
-                        # trigger re-cap — the uncapped head would be
-                        # exactly the monster recovery batch admission
-                        # control exists to prevent
-                        return _cdc_off(max(self._pos, self._floor))
-            return {"version": v}
+        def _plan(self, pos, e):
+            v, p, n = pos
+            plan = _cdc_plan_version(self.table, v)
+            if v == e[0] and e[2]:
+                pages, npages = tuple(range(p, e[1])), e[2]
+            elif n:
+                pages, npages = tuple(range(p, n)), n
+            else:
+                pages, npages = None, 0  # whole version, no filter
+            return [dict(i, pages=pages, n_pages=npages) for i in plan]
 
-        def partitions(self, start, end):
-            # same floor discipline as snapshot_changes (see there):
-            # clamp by the COMMITTED floor, never advance it here —
-            # `start` is a logged offset, not proof of delivery, and
-            # Spark's restart re-init call partitions(last_logged,
-            # last_logged) would otherwise clamp an uncommitted
-            # batch's replay to nothing
-            s = max(_cdc_norm(start), self._floor)
-            e = _cdc_norm(end)
-            if (s[0], s[1]) < (e[0], e[1]):
-                # expired-history contract — see _retention_check;
-                # s[0] is the first version the walk will load
-                adj = _retention_check(
-                    self.table, s[0], self.allow_data_loss,
-                    "snapshot_cdc",
-                )
-                if adj != s[0]:
-                    s = (adj, 0, 0)
-            self._pos = max(self._pos, s, e)
-            items = []
-            v, p, n = s
-            while (v, p) < (e[0], e[1]):
-                try:
-                    plan = _cdc_plan_version(self.table, v)
-                except FileNotFoundError:
-                    # mid-range expiry gap (tag pinned below it) — see
-                    # the append reader: convert to the loud contract
-                    adj = _retention_check(
-                        self.table, max(v, _plannable_floor(self.table)),
-                        self.allow_data_loss, "snapshot_cdc",
-                    )
-                    if adj <= v:
-                        raise  # not a retention gap: surface as-is
-                    v, p, n = adj, 0, 0
-                    continue
-                if v == e[0] and e[2]:
-                    pages, npages = tuple(range(p, e[1])), e[2]
-                elif n:
-                    pages, npages = tuple(range(p, n)), n
-                else:
-                    pages, npages = None, 0  # whole version, no filter
-                if self.probes:
-                    # CDC narrowed to partitions (the per-partition
-                    # derived-table refresh, WITH row-level DML): each
-                    # work item is one file's changes and a file holds
-                    # rows of exactly one partition tuple, so the stamp
-                    # filter is exact; unstamped files conservatively
-                    # stream (same contract as every pruning surface)
-                    plan = [
-                        i
-                        for i in plan
-                        if all(
-                            _partition_match(i, k, t)
-                            for k, t in self.probes.items()
-                        )
-                    ]
-                items.extend(
-                    dict(i, pages=pages, n_pages=npages) for i in plan
-                )
-                v, p, n = v + 1, 0, 0
-            return [
-                _Change(
-                    kind=i["kind"],
-                    data_path=i["data_path"],
-                    names=(
-                        tuple(sorted(i["names"].items()))
-                        if i["names"] is not None else None
-                    ),
-                    version=i["version"],
-                    dv_paths=tuple(i["dv_paths"]),
-                    file_name=i["file_name"],
-                    pages=i["pages"],
-                    n_pages=i["n_pages"],
-                )
-                for i in items
-            ] or [_Change(kind=None)]
+        def _part(self, i):
+            if i is None:
+                return _Change(kind=None)
+            return _Change(
+                kind=i["kind"],
+                data_path=i["data_path"],
+                names=(
+                    tuple(sorted(i["names"].items()))
+                    if i["names"] is not None else None
+                ),
+                version=i["version"],
+                dv_paths=tuple(i["dv_paths"]),
+                file_name=i["file_name"],
+                pages=i["pages"],
+                n_pages=i["n_pages"],
+            )
 
         def read(self, partition):
             if partition.kind is None:
@@ -1115,9 +1023,8 @@ def _build_cdc():
                     if pos:
                         mask[np.asarray(pos, dtype=np.int64)] = False
                     t = t.filter(pa.array(mask))
-            fields = StructType.fromJson(self.schema_json).fields
             t = _conform_arrow(
-                t, fields,
+                t, self.fields,
                 dict(partition.names) if partition.names is not None
                 else None,
             )
@@ -1168,47 +1075,13 @@ def _build_cdc():
             )
             yield from t.to_batches()
 
-        def commit(self, end):
-            # the snapshot log + Spark's offset log are the state; the
-            # position hints only pace the NEXT latestOffset and
-            # floor. Only place the floor advances (committed = the
-            # one position Spark proves delivered).
-            self._pos = max(self._pos, _cdc_norm(end))
-            self._floor = max(self._floor, _cdc_norm(end))
-
-    class SnapshotCdcDataSource(DataSource):
-        @classmethod
-        def name(cls):
-            return "snapshot_cdc"
-
-        def schema(self):
-            from pyspark.sql.types import (
-                LongType,
-                StringType,
-                StructField,
-            )
-
-            table = self.options.get("path")
-            if not table:
-                raise ValueError("snapshot_cdc: option 'path' required")
-            v = latest_version(table)
-            if v is None:
-                raise FileNotFoundError(
-                    f"snapshot_cdc: {table} has no snapshots"
-                )
-            base = StructType.fromJson(_load_snapshot(table, v)["schema"])
-            return StructType(
-                list(base.fields)
-                + [
-                    StructField("_change_type", StringType()),
-                    StructField("_commit_version", LongType()),
-                ]
-            )
-
-        def streamReader(self, schema):
-            return SnapshotCdcStreamReader(self.options)
-
-    return SnapshotCdcDataSource
+    return _source(
+        SnapshotCdcStreamReader,
+        [
+            StructField("_change_type", StringType()),
+            StructField("_commit_version", LongType()),
+        ],
+    )
 
 
 def register_snapshot_cdc(spark) -> None:

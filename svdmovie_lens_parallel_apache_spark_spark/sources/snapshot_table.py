@@ -2751,13 +2751,15 @@ def _validate_paths(
     import duckdb
 
     con = duckdb.connect()
-    files = "[" + ", ".join(f"'{p}'" for p in paths) + "]"
     for name, cond in constraints.items():
         try:
-            bad = con.sql(
-                f"SELECT * FROM read_parquet({files}) "
+            # the path list is a bound parameter, never SQL text: a
+            # table directory may contain a quote
+            bad = con.execute(
+                "SELECT * FROM read_parquet(?) "
                 f"WHERE NOT coalesce(CAST(({cond}) AS BOOLEAN), "
-                f"TRUE) LIMIT 1"
+                "TRUE) LIMIT 1",
+                [paths],
             ).fetchall()
         except Exception as exc:
             raise ValueError(
@@ -4181,6 +4183,23 @@ def streaming_snapshot_sink(
     matter — at 100 TB pair this with :func:`expire_snapshots`
     retention (bounded history) as any Delta/Iceberg deployment does.
     """
+    return _exactly_once(
+        table, app_id, branch,
+        lambda batch_df, props: write_snapshot(
+            batch_df, table, mode="append", properties=props, branch=branch,
+        ),
+    )
+
+
+def _exactly_once(
+    table: str, app_id: str | None, branch: str | None, apply,
+):
+    """The ``foreachBatch`` function of a streaming sink: skips a batch
+    id this writer lineage already committed
+    (:func:`_streaming_replayed`) and otherwise runs
+    ``apply(batch_df, props)``, whose ONE commit must carry ``props`` —
+    the ``streaming_batch_id`` (and ``streaming_app_id``) stamp the
+    replay check reads back."""
     if app_id == "":
         # "" is the ledger/publish-map key for app_id=None (JSON keys
         # are strings); allowing a user lineage named "" would make the
@@ -4197,9 +4216,7 @@ def streaming_snapshot_sink(
         props = {"streaming_batch_id": batch_id}
         if app_id is not None:
             props["streaming_app_id"] = app_id
-        write_snapshot(
-            batch_df, table, mode="append", properties=props, branch=branch,
-        )
+        apply(batch_df, props)
 
     return sink
 
@@ -4269,18 +4286,8 @@ def streaming_merge_sink(
     per key (the ambiguous-merge refusal is loud) — dedup upstream
     with ``dropDuplicates``/``max_by`` as Delta's pattern prescribes.
     """
-    if app_id == "":
-        raise ValueError(
-            "snapshot_table: app_id='' is reserved for the unnamed "
-            "lineage (app_id=None); pass a non-empty app_id or None"
-        )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if _streaming_replayed(table, app_id, batch_id, branch):
-            return
-        props = {"streaming_batch_id": batch_id}
-        if app_id is not None:
-            props["streaming_app_id"] = app_id
+    def apply(batch_df: DataFrame, props: dict) -> None:
         # pin the micro-batch: merge_upsert runs several actions over
         # its input (ambiguity gate, match scan, stage write), and a
         # batch backed by a Python streaming source re-executes the
@@ -4295,7 +4302,7 @@ def streaming_merge_sink(
         finally:
             batch_df.unpersist()
 
-    return sink
+    return _exactly_once(table, app_id, branch, apply)
 
 
 def streaming_cdc_apply_sink(
@@ -4328,15 +4335,7 @@ def streaming_cdc_apply_sink(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    if app_id == "":
-        raise ValueError(
-            "snapshot_table: app_id='' is reserved for the unnamed "
-            "lineage (app_id=None); pass a non-empty app_id or None"
-        )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if _streaming_replayed(table, app_id, batch_id, branch):
-            return
+    def apply(batch_df: DataFrame, props: dict) -> None:
         w = Window.partitionBy(*key_cols).orderBy(
             F.desc("_commit_version"),
             F.when(F.col("_change_type") == "insert", 0).otherwise(1),
@@ -4361,9 +4360,6 @@ def streaming_cdc_apply_sink(
         dead = reduced.where(
             F.col("_change_type") == "delete"
         ).select(*key_cols)
-        props = {"streaming_batch_id": batch_id}
-        if app_id is not None:
-            props["streaming_app_id"] = app_id
         try:
             merge_upsert(
                 post, table, key_cols=key_cols, delete_keys=dead,
@@ -4372,7 +4368,7 @@ def streaming_cdc_apply_sink(
         finally:
             reduced.unpersist()
 
-    return sink
+    return _exactly_once(table, app_id, branch, apply)
 
 
 # coordinate rows per deletion-vector part file: each publish task

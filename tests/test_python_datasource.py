@@ -589,9 +589,13 @@ def test_snapshot_batch_writer_rejects_unsupported_metadata_types(
     assert not os.path.exists(os.path.join(table, "_snapshots"))
 
 
-@pytest.mark.parametrize("kind", ["batch", "sink"])
+@pytest.mark.parametrize(
+    "kind,tdir",
+    [("batch", "t"), ("sink", "t"), ("batch", "q'uote"), ("sink", "q'uote")],
+    ids=["batch", "sink", "batch-quote", "sink-quote"],
+)
 def test_snapshot_batch_writer_revalidates_concurrent_constraint(
-    spark, sf_dir, tmp_path, monkeypatch, kind
+    spark, sf_dir, tmp_path, monkeypatch, kind, tdir
 ):
     """Regression: a CHECK constraint added between an Arrow writer's
     ENTRY validation and its commit claim still binds the batch — the
@@ -600,7 +604,10 @@ def test_snapshot_batch_writer_revalidates_concurrent_constraint(
     and the log is untouched. (The entry read is blinded via
     monkeypatch to open the race window deterministically — otherwise
     commit()'s own _base_constraints read would catch the constraint
-    before publish.)"""
+    before publish.) The quoted table directory commits with no active
+    session, as the writers do in their Python runner, so the
+    revalidation goes through the DuckDB twin with a ``'`` in every
+    file path."""
     from svdmovie_lens_parallel_apache_spark_spark.sources import (
         snapshot_table as st_mod,
     )
@@ -609,7 +616,7 @@ def test_snapshot_batch_writer_revalidates_concurrent_constraint(
     )
 
     docs = _snap_docs(spark, sf_dir)
-    table = str(tmp_path / "t")
+    table = str(tmp_path / tdir)
     write_snapshot(docs.where("n_chars > 0"), table)               # v1
     bad = spark.createDataFrame([(-1, "xx", -100)], docs.schema)
     wr = _arrow_writer(kind, {"path": table}, bad.schema)
@@ -617,7 +624,11 @@ def test_snapshot_batch_writer_revalidates_concurrent_constraint(
     add_constraint(spark, table, "pos", "n_chars > 0")             # v2
     # blind the ENTRY validation: the constraint "lands" after it
     monkeypatch.setattr(st_mod, "_base_constraints", lambda t: {})
-    with pytest.raises(ValueError, match="CHECK constraint 'pos'"):
+    if "'" in tdir:
+        monkeypatch.setattr(
+            st_mod.SparkSession, "getActiveSession", staticmethod(lambda: None)
+        )
+    with pytest.raises(ValueError, match="CHECK constraint 'pos'.* violated"):
         wr.commit(msgs) if kind == "batch" else wr.commit(msgs, 0)
     monkeypatch.undo()
     assert latest_version(table) == 2  # nothing committed

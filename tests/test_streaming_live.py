@@ -22,6 +22,7 @@ import json
 import tempfile
 import time
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -555,6 +556,12 @@ def test_snapshot_changes_stream_restart_exactly_once(spark, sf_dir):
     assert drain("phase3") == []
 
 
+def _reader(ds):
+    """A stream reader built as Spark builds one: ``streamReader`` gets
+    the schema the source resolved."""
+    return ds.streamReader(ds.schema())
+
+
 def _drain_cdc(spark, table, ckpt, out, start_version=0):
     """availableNow drain of the snapshot_cdc stream into parquet;
     returns the drained rows (empty list if no batch fired)."""
@@ -1034,7 +1041,7 @@ def test_paced_restart_offset_never_regresses(spark, tmp_path):
         return batch
 
     # --- run 1: fresh query, paced from the seed ---
-    r1 = DS(dict(opts)).streamReader(None)
+    r1 = _reader(DS(dict(opts)))
     o0 = r1.initialOffset()
     o1 = r1.latestOffset()
     assert _norm_off(o1) == (3, 0)  # 2-file budget: versions 1..2
@@ -1048,7 +1055,7 @@ def test_paced_restart_offset_never_regresses(spark, tmp_path):
     # --- run 2: restart — Spark's first call is the re-init
     # partitions(last_logged, last_logged), then the uncommitted
     # batch replays as partitions(committed, logged) ---
-    r2 = DS(dict(opts)).streamReader(None)
+    r2 = _reader(DS(dict(opts)))
     init = [p.path for p in r2.partitions(o2, o2) if p.path is not None]
     assert init == []  # empty-range re-init plans nothing
     replay = [p.path for p in r2.partitions(o1, o2) if p.path is not None]
@@ -1068,7 +1075,7 @@ def test_paced_restart_offset_never_regresses(spark, tmp_path):
     r2.commit(o3)
 
     # --- run 3: clean restart, fully committed and caught up ---
-    r3 = DS(dict(opts)).streamReader(None)
+    r3 = _reader(DS(dict(opts)))
     assert [p.path for p in r3.partitions(o3, o3) if p.path is not None] == []
     o4 = r3.latestOffset()
     assert _norm_off(o4) == (7, 0)  # no churn: caught-up fixpoint
@@ -1265,7 +1272,7 @@ def test_cdc_key_range_paging_exactly_once(spark, tmp_path):
         "path": table, "start_version": "0",
         "max_files_per_trigger": "3", "page_keys": "id",
     }
-    r = DS(dict(opts)).streamReader(None)
+    r = _reader(DS(dict(opts)))
     off = r.initialOffset()
     seen = Counter()
     paged_offsets = 0
@@ -1322,7 +1329,7 @@ def test_cdc_key_range_paging_restart_exactly_once(spark, tmp_path):
         "path": table, "start_version": "0",
         "max_files_per_trigger": "3", "page_keys": "id",
     }
-    r1 = DS(dict(opts)).streamReader(None)
+    r1 = _reader(DS(dict(opts)))
     o0 = r1.initialOffset()
     o1 = r1.latestOffset()
     assert o1 == {"version": 1, "page": 1, "pages": 3}
@@ -1335,7 +1342,7 @@ def test_cdc_key_range_paging_restart_exactly_once(spark, tmp_path):
 
     # restart: re-init partitions(last_logged, last_logged) first,
     # then the uncommitted paged batch replays byte-identically
-    r2 = DS(dict(opts)).streamReader(None)
+    r2 = _reader(DS(dict(opts)))
     assert _drain_paged_cdc(r2, o2, o2) == []
     assert sorted(_drain_paged_cdc(r2, o1, o2)) == sorted(b2)
     r2.commit(o2)
@@ -1451,13 +1458,13 @@ def test_stream_tag_pinned_gap_gets_retention_contract(spark, tmp_path):
     assert os.path.exists(st._snap_path(table, 2))  # tag pinned
     assert not os.path.exists(st._snap_path(table, 3))  # gap above it
     DS = ss._build()
-    r = DS({"path": table, "start_version": "0"}).streamReader(None)
+    r = _reader(DS({"path": table, "start_version": "0"}))
     # checkpoint at v2: parent v2 exists (fast path passes), v3 gone
     with pytest.raises(ValueError, match="expired"):
         r.partitions({"version": 2}, {"version": 7})
-    r2 = DS(
+    r2 = _reader(DS(
         {"path": table, "start_version": "0", "allow_data_loss": "true"}
-    ).streamReader(None)
+    ))
     parts = [
         p.path for p in r2.partitions({"version": 2}, {"version": 7})
         if p.path is not None
@@ -1493,7 +1500,7 @@ def test_stream_start_timestamp_resolution(spark, tmp_path):
 
     def start_of(**opts):
         o = {"path": table, **{k: str(v) for k, v in opts.items()}}
-        return ss._build()(o).streamReader(None).start_version
+        return _reader(ss._build()(o)).start_version
 
     assert start_of(start_timestamp=at[2]) == 1  # v2, v3 stream
     assert start_of(start_timestamp=(at[2] + at[3]) / 2) == 2  # v3 only
@@ -1501,17 +1508,17 @@ def test_stream_start_timestamp_resolution(spark, tmp_path):
     assert start_of(start_timestamp=at[3] + 10) == 3  # future only
     # the CDC twin resolves identically
     assert (
-        ss._build_cdc()(
+        _reader(ss._build_cdc()(
             {"path": table, "start_timestamp": str(at[2])}
-        ).streamReader(None).start_version
+        )).start_version
         == 1
     )
     with pytest.raises(Exception, match="mutually exclusive"):
         start_of(start_version=0, start_timestamp=at[2])
     # end to end: the resolved start feeds the normal planning walk
-    r = ss._build()(
+    r = _reader(ss._build()(
         {"path": table, "start_timestamp": str((at[2] + at[3]) / 2)}
-    ).streamReader(None)
+    ))
     o0 = r.initialOffset()
     o1 = r.latestOffset()
     files = [p.path for p in r.partitions(o0, o1) if p.path is not None]
@@ -1543,10 +1550,10 @@ def test_cdc_partition_filter_narrows_changes(spark, tmp_path):
     import json
 
     DS = ss._build_cdc()
-    r = DS({
+    r = _reader(DS({
         "path": table, "start_version": "0",
         "partition_filter": json.dumps({"g": 1}),
-    }).streamReader(None)
+    }))
     rows = _drain_paged_cdc(r, r.initialOffset(), r.latestOffset())
     ins = sorted(i for i, v, k in rows if k == "insert")
     dels = sorted(i for i, v, k in rows if k == "delete")
@@ -1573,10 +1580,10 @@ def test_cdc_page_keys_validation(spark, tmp_path):
     )
     DS = ss._build_cdc()
     with pytest.raises(ValueError, match="not in"):
-        DS({"path": table, "page_keys": "nope"}).streamReader(None)
+        _reader(DS({"path": table, "page_keys": "nope"}))
     with pytest.raises(ValueError, match="atomic"):
-        DS({"path": table, "page_keys": "v"}).streamReader(None)
-    r = DS({"path": table, "page_keys": "id"}).streamReader(None)
+        _reader(DS({"path": table, "page_keys": "v"}))
+    r = _reader(DS({"path": table, "page_keys": "id"}))
     assert r.page_keys == ("id",)
 
 
@@ -1606,10 +1613,10 @@ def test_cdc_paging_hash_ignores_null_dtype_promotion(spark, tmp_path):
         table, key_cols=["id"], mor=True,
     )  # v2: DV over the null-containing file + clean post-image shards
     DS = ss._build_cdc()
-    r = DS({
+    r = _reader(DS({
         "path": table, "start_version": "0",
         "max_files_per_trigger": "1", "page_keys": "id",
-    }).streamReader(None)
+    }))
     off = r.initialOffset()
     batches = []
     for _ in range(100):
@@ -1653,9 +1660,9 @@ def test_stream_start_timestamp_refuses_unstamped_history(spark, tmp_path):
     del raw["committed_at"]
     json.dump(raw, open(p, "w"))
     with pytest.raises(Exception, match="committed_at"):
-        ss._build()(
+        _reader(ss._build()(
             {"path": table, "start_timestamp": "0"}
-        ).streamReader(None)
+        ))
 
 
 def test_page_hash_is_portable_md5():
@@ -1729,9 +1736,9 @@ def test_start_timestamp_unstamped_prefix_at_boundary(spark, tmp_path):
     json.dump(raw, open(p, "w"))
 
     def start_of(ts):
-        return ss._build()(
+        return _reader(ss._build()(
             {"path": table, "start_timestamp": str(ts)}
-        ).streamReader(None).start_version
+        )).start_version
 
     # ts strictly between v1's (unknown) time bound and v2's stamp:
     # v1 could be on either side -> loud refusal naming the versions
@@ -1743,9 +1750,9 @@ def test_start_timestamp_unstamped_prefix_at_boundary(spark, tmp_path):
     assert start_of((at[2] + at[3]) / 2) == 2
     # the CDC twin shares the resolver
     with pytest.raises(ValueError, match="committed_at"):
-        ss._build_cdc()(
+        _reader(ss._build_cdc()(
             {"path": table, "start_timestamp": str((at[1] + at[2]) / 2)}
-        ).streamReader(None)
+        ))
 
 
 def test_latest_offset_double_expiry_race_stays_paced(spark, tmp_path, monkeypatch):
@@ -1771,17 +1778,17 @@ def test_latest_offset_double_expiry_race_stays_paced(spark, tmp_path, monkeypat
     def boom(*a, **k):
         raise FileNotFoundError("expired under the counter")
 
-    r = ss._build()(
+    r = _reader(ss._build()(
         {"path": table, "start_version": "0", "max_files_per_trigger": "1",
          "allow_data_loss": "true"}
-    ).streamReader(None)
+    ))
     monkeypatch.setattr(ss, "_capped_end_indexed", boom)
     off = r.latestOffset()
     assert off == r.initialOffset()  # no progress, NOT {"version": 3}
-    r2 = ss._build_cdc()(
+    r2 = _reader(ss._build_cdc()(
         {"path": table, "start_version": "0", "max_files_per_trigger": "1",
          "page_keys": "id", "allow_data_loss": "true"}
-    ).streamReader(None)
+    ))
     monkeypatch.setattr(ss, "_capped_end_paged", boom)
     off2 = r2.latestOffset()
     assert off2 == r2.initialOffset()
@@ -1939,3 +1946,49 @@ def test_stream_schema_evolution_restart_surfaces_new_columns(spark, tmp_path):
     q = start_run()
     q.awaitTermination()
     assert spark.read.option("mergeSchema", "true").parquet(out).count() == 30
+
+
+@pytest.mark.parametrize("fmt", ["snapshot_changes", "snapshot_cdc"])
+def test_stream_schema_pinned_at_load(spark, tmp_path, fmt):
+    """The scan schema is the one ``load()`` resolved: a column added
+    between ``load()`` and ``start()`` must not kill the query with
+    DATA_SOURCE_RETURN_SCHEMA_MISMATCH (a reader that re-reads the
+    head at start disagrees with the schema Spark planned). Every row,
+    the post-evolution append's included, arrives in the load-time
+    schema."""
+    from svdmovie_lens_parallel_apache_spark_spark.sources.snapshot_stream import (
+        register_snapshot_cdc,
+        register_snapshot_changes,
+    )
+    from svdmovie_lens_parallel_apache_spark_spark.sources.snapshot_table import (
+        add_column,
+        write_snapshot,
+    )
+    from svdmovie_lens_parallel_apache_spark_spark.streaming.jobs import drain
+
+    register_snapshot_changes(spark)
+    register_snapshot_cdc(spark)
+    table, out, ckpt = [str(tmp_path / x) for x in ("t", "out", "c")]
+    write_snapshot(
+        spark.range(0, 10).selectExpr("id", "id * 2 AS v").coalesce(1),
+        table, mode="append",
+    )
+    src = (
+        spark.readStream.format(fmt).option("path", table)
+        .option("start_version", 0).load()
+    )
+    add_column(spark, table, "w", "bigint")
+    write_snapshot(
+        spark.range(10, 20).selectExpr("id", "id * 2 AS v", "id AS w")
+        .coalesce(1),
+        table, mode="append",
+    )
+    drain(
+        src.writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True).start()
+    )
+    got = spark.read.parquet(out)
+    assert [c for c in got.columns if not c.startswith("_")] == ["id", "v"]
+    assert sorted(r.id for r in got.select("id").collect()) == list(range(20))
+    assert got.where("v != id * 2").count() == 0

@@ -89,6 +89,27 @@ def test_stream_waits_go_through_drain():
     }, sites
 
 
+def test_stream_sources_share_one_reader():
+    """``snapshot_changes`` and ``snapshot_cdc`` are two formats over ONE
+    stream reader: a second ``latestOffset``/``partitions``/``commit``/
+    ``initialOffset`` in ``snapshot_stream.py`` (a copied reader) fails
+    here, and so does start resolution or the retention contract called
+    from anywhere but that shared reader and the module's helpers."""
+    rel = os.path.join("sources", "snapshot_stream.py")
+    path = os.path.join(PKG, rel)
+    with open(path) as fh:
+        tree = ast.parse(fh.read(), path)
+    defs = [n.name for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+    for name in ("latestOffset", "partitions", "commit", "initialOffset"):
+        assert defs.count(name) == 1, f"{name} defined {defs.count(name)}x"
+    helpers = ("_retention_check", "_resolve_start", "_plannable_floor")
+    sites = {(f, owner) for f, owner, _l in _call_sites(*helpers)}
+    assert (rel, "_reader_base") in sites
+    assert sites <= {(rel, "_reader_base")} | {(rel, h) for h in helpers}, (
+        sites
+    )
+
+
 def test_catalog_registry_size_is_pinned():
     """Every catalog module is imported unconditionally, so a broken
     import fails loudly; these counts catch a module whose queries
