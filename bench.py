@@ -7,27 +7,20 @@ and prints ONE JSON line:
 Mirrors the reference's phase instrumentation idea
 (SVDMovieLensSparkJava.java:166-181: construct/load/train/test seconds) but
 per-query; `value` is the end-to-end wall time for the whole suite.
+
+    python bench.py                # every query, the ALS phases, BENCH_FULL.json
+    python bench.py q1,q2,...      # only these queries, same min-of-2 and
+                                   # calibration kernel; JSON on stdout only
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-
-# Private temp root for THIS bench process: every mkdtemp in the engine
-# (streaming checkpoints, rollup state dirs) lands under it, so per-query
-# cleanup can delete streaming state without racing another svdml process
-# (a concurrent pytest/verify run's live checkpoint dirs share /tmp).
-_BENCH_TMP = tempfile.mkdtemp(prefix="svdml-bench-root-")
-tempfile.tempdir = _BENCH_TMP
 
 
 def _calibrate(spark) -> float:
@@ -56,32 +49,31 @@ def _calibrate(spark) -> float:
     return round(best, 4)
 
 
-def _isolate(spark, baseline_tables: set) -> None:
-    """Reset session state between timed queries so each timing reflects the
-    query alone (r2 lesson: streaming memory-sink tables, temp views, cached
-    stages, and checkpoint dirs accumulated across the 140-query alphabetical
-    run and inflated late-alphabet timings 3-27x vs fresh-session cost).
+def _timed(spark, build, sf_dir: str, keep_views: set) -> tuple[float, int]:
+    """Seconds to build and fully materialise one query, and its row
+    count. Then the session is reset so each timing reflects the query
+    alone (r2 lesson: streaming memory-sink tables, temp views, cached
+    stages, and checkpoint dirs accumulated across the 140-query
+    alphabetical run and inflated late-alphabet timings 3-27x vs
+    fresh-session cost). The reset runs after the clock stops, so it
+    costs the suite wall time but never a query's number."""
+    from svdmovie_lens_parallel_apache_spark_spark.session import (
+        clear_scratch,
+        isolate,
+    )
 
-    Everything here is post-timing bookkeeping — it runs after the query's
-    clock stops, so it costs the suite wall time but never a query's number.
-    """
-    for q in spark.streams.active:  # availableNow queries self-terminate;
-        q.stop()  # belt-and-braces for any leaked continuous query
-    for t in spark.catalog.listTables():
-        # drop memory-sink outputs + per-query temp views; keep fixture views
-        if t.name not in baseline_tables:
-            try:
-                spark.catalog.dropTempView(t.name)
-            except Exception:
-                pass
-    spark.catalog.clearCache()
-    for d in glob.glob(os.path.join(_BENCH_TMP, "svdml-*")):
-        shutil.rmtree(d, ignore_errors=True)
+    t = time.time()
+    n = build(spark, sf_dir).count()
+    dt = round(time.time() - t, 3)
+    isolate(spark, keep_views)
+    clear_scratch()
+    return dt, n
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
+    subset = sys.argv[1].split(",") if len(sys.argv) > 1 else None
 
     t_construct = time.time()
     from svdmovie_lens_parallel_apache_spark_spark import get_spark
@@ -93,6 +85,7 @@ def main() -> None:
     construct_s = time.time() - t_construct
 
     qs = entrymod.queries()
+    names = subset or sorted(qs)
     # JVM/codegen warmup so the first timed query isn't charged for startup
     from svdmovie_lens_parallel_apache_spark_spark.sources.readers import load_table
 
@@ -102,16 +95,12 @@ def main() -> None:
     cal_pre = _calibrate(spark)
     print(f"# calibration kernel (pre-suite): {cal_pre:.4f}s", file=sys.stderr)
 
-    baseline_tables = {t.name for t in spark.catalog.listTables()}
+    keep_views = {t.name for t in spark.catalog.listTables()}
     timings: dict[str, float] = {}
     t0 = time.time()
-    for name, builder in sorted(qs.items()):
-        t = time.time()
-        df = builder(spark, sf_dir)
-        n = df.count()  # full materialisation of the query result
-        timings[name] = round(time.time() - t, 3)
+    for name in names:
+        timings[name], n = _timed(spark, qs[name], sf_dir, keep_views)
         print(f"# {name}: {timings[name]:.3f}s rows={n}", file=sys.stderr)
-        _isolate(spark, baseline_tables)
     # Second pass, keeping the min: transient host-level contention windows
     # (observed: 4-30x inflation for whatever alphabetical block ran during
     # them) otherwise masquerade as query regressions in the per-round
@@ -119,35 +108,56 @@ def main() -> None:
     # sub-second tail single-sample, and that tail is where round-over-round
     # sample noise lived — the retime pass costs ~2-3 min and buys a stable
     # per-query map).
-    retimed = list(timings)
-    for name in retimed:
-        t = time.time()
-        qs[name](spark, sf_dir).count()
-        second = round(time.time() - t, 3)
-        if second < timings[name]:
-            print(f"# retime {name}: {timings[name]:.3f}s -> {second:.3f}s", file=sys.stderr)
-            timings[name] = second
-        _isolate(spark, baseline_tables)
-    # Third pass for the ALS variance watchlist (r10 verdict item 5):
+    # A third pass covers the ALS variance watchlist (r10 verdict item 5):
     # this host runs MLlib on the pure-Java BLAS fallback (the
     # dev.ludovic.netlib JNI bindings are absent), which makes ALS
     # timings JIT-warmup-sensitive — min-of-2 left als_replay_hash
     # drifting 1.9-4.0s across rounds with no code change. One more
     # sample tightens exactly the queries that inherit that variance.
-    for name in ("als_replay_hash", "movielens_replay", "als_rank_sweep"):
-        if name not in qs:
-            continue
-        t = time.time()
-        qs[name](spark, sf_dir).count()
-        third = round(time.time() - t, 3)
-        if third < timings[name]:
-            print(f"# retime3 {name}: {timings[name]:.3f}s -> {third:.3f}s", file=sys.stderr)
-            timings[name] = third
-        _isolate(spark, baseline_tables)
+    watch = ("als_replay_hash", "movielens_replay", "als_rank_sweep")
+    for label, retime in (
+        ("retime", names),
+        ("retime3", [q for q in watch if q in timings]),
+    ):
+        for name in retime:
+            again, _n = _timed(spark, qs[name], sf_dir, keep_views)
+            if again < timings[name]:
+                print(f"# {label} {name}: {timings[name]:.3f}s -> {again:.3f}s", file=sys.stderr)
+                timings[name] = again
     total = time.time() - t0
 
     cal_post = _calibrate(spark)
     print(f"# calibration kernel (post-suite): {cal_post:.4f}s", file=sys.stderr)
+    # Drift-normalized protocol (r12 verdict item 1): divide every
+    # per-query timing by the host-speed kernel constant. Ratios are
+    # dimensionless "multiples of the calibration kernel" — stable
+    # under uniform host slowdown, so a round-over-round ratio change
+    # isolates CODE change. kernel_sec uses the min of pre/post (the
+    # kernel itself is load-sensitive; min is the least-loaded view),
+    # and the pre/post pair bounds WITHIN-run drift.
+    kernel_sec = min(cal_pre, cal_post)
+    calibration = {
+        "kernel": (
+            "range(600e6, 64 partitions) -> bit_xor(xxhash64(id)) collect; "
+            "pure-JVM whole-stage codegen, no I/O, no Python, no "
+            "shuffle; min-of-3, run before and after the suite"
+        ),
+        "kernel_sec_pre": cal_pre,
+        "kernel_sec_post": cal_post,
+        "kernel_sec": kernel_sec,
+    }
+    normalized = {q: round(t / kernel_sec, 3) for q, t in timings.items()}
+    if subset:
+        # an A/B over a few queries: no ALS phases, and the committed
+        # full-suite artifact is left alone
+        print(json.dumps({
+            "sf": sf,
+            "queries": timings,
+            "queries_normalized": normalized,
+            "calibration": calibration,
+        }, separators=(",", ":")))
+        spark.stop()
+        return
 
     # Record which BLAS MLlib actually loaded, so round-over-round
     # diffs read ALS timing drift as environment variance, not a
@@ -261,31 +271,10 @@ def main() -> None:
             "ALS variance watchlist"
         ),
         "blas": blas_note,
+        "calibration": calibration,
+        "queries_normalized": normalized,
+        "sum_query_normalized": round(sum(timings.values()) / kernel_sec, 3),
     }
-    # Drift-normalized protocol (r12 verdict item 1): divide every
-    # per-query timing by the host-speed kernel constant. Ratios are
-    # dimensionless "multiples of the calibration kernel" — stable
-    # under uniform host slowdown, so a round-over-round ratio change
-    # isolates CODE change. kernel_sec uses the min of pre/post (the
-    # kernel itself is load-sensitive; min is the least-loaded view),
-    # and the pre/post pair bounds WITHIN-run drift.
-    kernel_sec = min(cal_pre, cal_post)
-    full["calibration"] = {
-        "kernel": (
-            "range(600e6, 64 partitions) -> bit_xor(xxhash64(id)) collect; "
-            "pure-JVM whole-stage codegen, no I/O, no Python, no "
-            "shuffle; min-of-3, run before and after the suite"
-        ),
-        "kernel_sec_pre": cal_pre,
-        "kernel_sec_post": cal_post,
-        "kernel_sec": kernel_sec,
-    }
-    full["queries_normalized"] = {
-        q: round(t / kernel_sec, 3) for q, t in timings.items()
-    }
-    full["sum_query_normalized"] = round(
-        sum(timings.values()) / kernel_sec, 3
-    )
     prior_path = os.path.join(repo_dir, "BENCH_FULL.json")
     if os.path.exists(prior_path):
         try:

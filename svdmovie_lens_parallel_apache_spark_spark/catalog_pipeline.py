@@ -26,6 +26,7 @@ from .functions.scalar import portable_round as _r
 from .functions.text import token_count
 from .functions.vectors import to_double
 from .operators.sketches import bloom_positions, bloom_prune, cms_build, cms_estimate
+from .session import scratch_dir
 from .streaming.jobs import drain
 
 # DuckDB twin of functions.text.tokens (single-space corpus; parity proven
@@ -201,16 +202,15 @@ def _lang_fp(df):
     )
 
 
-def _file_replay(spark, frames, prefix):
+def _file_replay(spark, frames, tag):
     """A file stream replaying ``frames`` as one micro-batch each: every
-    frame is written as one parquet file under a fresh temp dir (a short
+    frame is written as one parquet file under a fresh scratch dir (a short
     sleep between writes gives distinct mtimes, which fixes the batch
     order) and read back with ``maxFilesPerTrigger=1`` under
     ``frames[0]``'s schema."""
-    import tempfile
     import time
 
-    src = tempfile.mkdtemp(prefix=prefix)
+    src = scratch_dir(tag)
     for df in frames:
         df.coalesce(1).write.mode("append").parquet(src)
         time.sleep(0.05)  # distinct mtimes -> deterministic batch order
@@ -2523,12 +2523,11 @@ def q_synthetic_source_pushdown(spark, sf_dir):
     "protocol details in sources/snapshot_table.py.",
 )
 def q_snapshot_time_travel(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_table import read_snapshot, write_snapshot
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text", "n_chars")
-    table = tempfile.mkdtemp(prefix="svdml-snaptable-")
+    table = scratch_dir("snaptable")
     v1 = write_snapshot(docs.where(F.col("lang") == "en"), table, mode="append")
     v2 = write_snapshot(docs.where(F.col("lang") == "de"), table, mode="append")
 
@@ -2569,7 +2568,6 @@ def q_snapshot_time_travel(spark, sf_dir):
     "sources/snapshot_table.py::_claim_snapshot.",
 )
 def q_snapshot_time_travel_ts(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_table import (
         read_snapshot,
@@ -2579,7 +2577,7 @@ def q_snapshot_time_travel_ts(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text", "n_chars")
-    table = tempfile.mkdtemp(prefix="svdml-snaptable-ts-")
+    table = scratch_dir("snaptable-ts")
     write_snapshot(docs.where(F.col("lang") == "en"), table, mode="append")
     write_snapshot(docs.where(F.col("lang") == "de"), table, mode="append")
     stamps = {s["version"]: s["committed_at"] for s in snapshot_history(table)}
@@ -2651,7 +2649,6 @@ def q_snapshot_time_travel_ts(spark, sf_dir):
     "argument in sources/snapshot_table.py::read_cdc.",
 )
 def q_snapshot_cdc_read(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_table import (
         delete_where,
@@ -2662,7 +2659,7 @@ def q_snapshot_cdc_read(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text", "n_chars")
-    table = tempfile.mkdtemp(prefix="svdml-snapcdc-")
+    table = scratch_dir("snapcdc")
     write_snapshot(docs.where(F.col("lang") == "en"), table, mode="append")
     write_snapshot(docs.where(F.col("lang") == "de"), table, mode="append")
     delete_where(spark, table, "n_chars < 500")
@@ -2720,7 +2717,6 @@ def q_snapshot_cdc_read(spark, sf_dir):
     "per refresh; append-only companion: snapshot_table_chain.",
 )
 def q_snapshot_cdc_aggregate(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_table import (
         delete_where,
@@ -2735,8 +2731,8 @@ def q_snapshot_cdc_aggregate(spark, sf_dir):
         .select("doc_id", "lang", "n_chars")
         .where(F.col("lang").isin("en", "de", "fr"))
     )
-    src = tempfile.mkdtemp(prefix="svdml-cdcagg-src-")
-    dst = tempfile.mkdtemp(prefix="svdml-cdcagg-dst-")
+    src = scratch_dir("cdcagg-src")
+    dst = scratch_dir("cdcagg-dst")
 
     def agg(df):
         return df.groupBy("lang").agg(
@@ -2915,7 +2911,6 @@ def q_length_percentile_filter_scalable(spark, sf_dir):
     "_scan_with_deletes.",
 )
 def q_snapshot_merge_mor(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_table import (
         compact_table,
@@ -2929,7 +2924,7 @@ def q_snapshot_merge_mor(spark, sf_dir):
         "doc_id", "lang", "text", "n_chars"
     )
     en = docs.where(F.col("lang") == "en")
-    table = tempfile.mkdtemp(prefix="svdml-mor-") + "/t"
+    table = scratch_dir("mor")
     write_snapshot(en, table, stats_cols=["doc_id"])
     files_v1 = {s["file"] for s in snapshot_history(table)[-1]["shards"]}
     up1 = en.where(F.col("doc_id") % 6 == 0).withColumn(
@@ -2992,13 +2987,12 @@ def q_snapshot_merge_mor(spark, sf_dir):
     "backfills; protocol in sources/snapshot_table.py.",
 )
 def q_snapshot_merge_upsert(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_table import merge_upsert, read_snapshot, write_snapshot
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text", "n_chars")
     en = docs.where(F.col("lang") == "en")
-    table = tempfile.mkdtemp(prefix="svdml-snapmerge-")
+    table = scratch_dir("snapmerge")
     write_snapshot(en, table, mode="append")
     upd = en.where(F.col("doc_id") % 3 == 0).withColumn(
         "n_chars", F.col("n_chars") * 2
@@ -3029,7 +3023,6 @@ def q_snapshot_merge_upsert(spark, sf_dir):
     "tests/test_snapshot_table.py.",
 )
 def q_snapshot_stream_ingest(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_table import (
         latest_version,
@@ -3040,10 +3033,10 @@ def q_snapshot_stream_ingest(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text", "n_chars")
     src = _file_replay(
         spark, [docs.where(F.col("doc_id") % 3 == i) for i in range(3)],
-        "svdml-snapingest-src-",
+        "snapingest-src",
     )
-    table = tempfile.mkdtemp(prefix="svdml-snapingest-table-")
-    ckpt = tempfile.mkdtemp(prefix="svdml-snapingest-ckpt-")
+    table = scratch_dir("snapingest-table")
+    ckpt = scratch_dir("snapingest-ckpt")
     drain(
         src.writeStream.foreachBatch(streaming_snapshot_sink(table))
         .option("checkpointLocation", ckpt)
@@ -3096,7 +3089,6 @@ def q_snapshot_stream_ingest(spark, sf_dir):
     "sources/snapshot_table.py::streaming_merge_sink.",
 )
 def q_snapshot_stream_upsert(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_table import (
         latest_version,
@@ -3110,7 +3102,7 @@ def q_snapshot_stream_upsert(spark, sf_dir):
         "doc_id", "lang", "text", "n_chars"
     )
     en = docs.where(F.col("lang") == "en")
-    table = tempfile.mkdtemp(prefix="svdml-streamupsert-") + "/t"
+    table = scratch_dir("streamupsert")
     write_snapshot(en, table, stats_cols=["doc_id"])            # v1
     batches = [
         en.where(F.col("doc_id") % 4 == 0).withColumn(
@@ -3123,8 +3115,8 @@ def q_snapshot_stream_upsert(spark, sf_dir):
             "n_chars", F.col("n_chars") + 3000
         ),
     ]
-    src = _file_replay(spark, batches, "svdml-streamupsert-src-")
-    ckpt = tempfile.mkdtemp(prefix="svdml-streamupsert-ckpt-")
+    src = _file_replay(spark, batches, "streamupsert-src")
+    ckpt = scratch_dir("streamupsert-ckpt")
     sink = streaming_merge_sink(table, ["doc_id"], app_id="cdc")
     drain(
         src.writeStream.foreachBatch(sink)
@@ -3217,7 +3209,6 @@ def q_snapshot_stream_upsert(spark, sf_dir):
     "sources/snapshot_table.py::read_cdc.",
 )
 def q_snapshot_cdc_stream(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_stream import register_snapshot_cdc
     from .sources.snapshot_table import (
@@ -3230,7 +3221,7 @@ def q_snapshot_cdc_stream(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     en = docs.where(F.col("lang") == "en")
     de = docs.where(F.col("lang") == "de")
-    table = tempfile.mkdtemp(prefix="svdml-cdcstream-") + "/t"
+    table = scratch_dir("cdcstream")
     write_snapshot(en, table, stats_cols=["doc_id"])                 # v1
     upd = en.where(F.col("doc_id") % 10 == 0).withColumn(
         "n_chars", F.col("n_chars") + 1000
@@ -3243,8 +3234,8 @@ def q_snapshot_cdc_stream(spark, sf_dir):
     )                                                                # v3
 
     register_snapshot_cdc(spark)
-    out = tempfile.mkdtemp(prefix="svdml-cdcstream-out-") + "/feed"
-    ckpt = tempfile.mkdtemp(prefix="svdml-cdcstream-ckpt-")
+    out = scratch_dir("cdcstream-out") + "/feed"
+    ckpt = scratch_dir("cdcstream-ckpt")
 
     def sink(batch_df, batch_id):
         batch_df.write.mode("append").parquet(out)
@@ -3336,7 +3327,6 @@ def q_snapshot_cdc_stream(spark, sf_dir):
     "merge_upsert(delete_keys=).",
 )
 def q_snapshot_cdc_replication(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_stream import register_snapshot_cdc
     from .sources.snapshot_table import (
@@ -3352,8 +3342,8 @@ def q_snapshot_cdc_replication(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     en = docs.where(F.col("lang") == "en")
     de = docs.where(F.col("lang") == "de")
-    up = tempfile.mkdtemp(prefix="svdml-cdcrepl-") + "/up"
-    down = tempfile.mkdtemp(prefix="svdml-cdcrepl-") + "/down"
+    up = scratch_dir("cdcrepl") + "/up"
+    down = scratch_dir("cdcrepl") + "/down"
     write_snapshot(en, up, stats_cols=["doc_id"])                    # v1
     write_snapshot(en, down, stats_cols=["doc_id"])  # bootstrap = v1
     upd = en.where(F.col("doc_id") % 10 == 0).withColumn(
@@ -3372,7 +3362,7 @@ def q_snapshot_cdc_replication(spark, sf_dir):
     )                                                                # v4
 
     register_snapshot_cdc(spark)
-    ckpt = tempfile.mkdtemp(prefix="svdml-cdcrepl-ckpt-")
+    ckpt = scratch_dir("cdcrepl-ckpt")
     sink = streaming_cdc_apply_sink(down, ["doc_id"], app_id="repl")
     drain(
         spark.readStream.format("snapshot_cdc")
@@ -3430,7 +3420,6 @@ def q_snapshot_cdc_replication(spark, sf_dir):
     "source+sink round trip are gated in tests/test_snapshot_sink.py.",
 )
 def q_snapshot_sink_ingest(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_sink import register_snapshot_sink
     from .sources.snapshot_table import latest_version, read_snapshot
@@ -3439,10 +3428,10 @@ def q_snapshot_sink_ingest(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text", "n_chars")
     src = _file_replay(
         spark, [docs.where(F.col("doc_id") % 3 == i) for i in range(3)],
-        "svdml-sinkingest-src-",
+        "sinkingest-src",
     )
-    table = tempfile.mkdtemp(prefix="svdml-sinkingest-table-") + "/t"
-    ckpt = tempfile.mkdtemp(prefix="svdml-sinkingest-ckpt-")
+    table = scratch_dir("sinkingest-table")
+    ckpt = scratch_dir("sinkingest-ckpt")
     drain(
         src.writeStream.format("snapshot_sink")
         .option("path", table)
@@ -3485,7 +3474,6 @@ def q_snapshot_sink_ingest(spark, sf_dir):
     "rewriting the table. Protocol in sources/snapshot_table.py.",
 )
 def q_snapshot_delete_where(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_table import (
         compact_table,
@@ -3496,7 +3484,7 @@ def q_snapshot_delete_where(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text", "n_chars")
-    table = tempfile.mkdtemp(prefix="svdml-snapdelete-")
+    table = scratch_dir("snapdelete")
     write_snapshot(docs, table, mode="append")
     compact_table(spark, table, target_shards=8, cluster_by=["doc_id"])
     thr = int(docs.agg(F.max("doc_id")).collect()[0][0] // 4)
@@ -3543,7 +3531,6 @@ def q_snapshot_delete_where(spark, sf_dir):
     "sources/snapshot_table.py (update_where).",
 )
 def q_snapshot_update_where(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_table import (
         compact_table,
@@ -3554,7 +3541,7 @@ def q_snapshot_update_where(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text", "n_chars")
-    table = tempfile.mkdtemp(prefix="svdml-snapupdate-")
+    table = scratch_dir("snapupdate")
     write_snapshot(docs, table, mode="append")
     compact_table(spark, table, target_shards=8, cluster_by=["doc_id"])
     thr = int(docs.agg(F.max("doc_id")).collect()[0][0] // 4)
@@ -3595,7 +3582,6 @@ def q_snapshot_update_where(spark, sf_dir):
     "sources/snapshot_table.py (rename_column/drop_column/add_column).",
 )
 def q_snapshot_column_evolution(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_table import (
         _load_snapshot,
@@ -3607,7 +3593,7 @@ def q_snapshot_column_evolution(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    table = tempfile.mkdtemp(prefix="svdml-snapevolve-")
+    table = scratch_dir("snapevolve")
     write_snapshot(docs.where(F.col("doc_id") % 3 == 0), table)       # v1
     rename_column(spark, table, "n_chars", "chars")                   # v2
     write_snapshot(
@@ -3660,14 +3646,13 @@ def q_snapshot_column_evolution(spark, sf_dir):
     "O(metadata)-vs-O(table) gap on the most common dashboard queries.",
 )
 def q_snapshot_metadata_agg(spark, sf_dir):
-    import tempfile
 
     from pyspark.sql import types as T
 
     from .sources.snapshot_table import table_stats, write_snapshot
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    table = tempfile.mkdtemp(prefix="svdml-snapmeta-")
+    table = scratch_dir("snapmeta")
     write_snapshot(
         docs.repartition(8, "doc_id"), table,
         mode="append", stats_cols=["doc_id", "n_chars"],
@@ -3724,18 +3709,17 @@ def q_snapshot_metadata_agg(spark, sf_dir):
 )
 def q_snapshot_source_pushdown(spark, sf_dir):
     import json
-    import tempfile
 
     from .sources.snapshot_datasource import register_snapshot_table_source
     from .sources.snapshot_table import compact_table, write_snapshot
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text", "n_chars")
-    table = tempfile.mkdtemp(prefix="svdml-snapsrc-")
+    table = scratch_dir("snapsrc")
     write_snapshot(docs, table, mode="append")
     compact_table(spark, table, target_shards=8, cluster_by=["doc_id"])
     register_snapshot_table_source(spark)
     thr = int(docs.agg(F.max("doc_id")).collect()[0][0] // 4)
-    log = tempfile.mktemp(prefix="svdml-snapsrc-plan-")
+    log = scratch_dir("snapsrc-plan") + "/plan.json"
     out = _lang_fp(
         spark.read.format("snapshot_table")
         .option("path", table).option("plan_log", log)
@@ -3778,12 +3762,11 @@ def q_snapshot_source_pushdown(spark, sf_dir):
 )
 def q_snapshot_roundtrip_official(spark, sf_dir):
     import json
-    import tempfile
 
     from .sources.snapshot_datasource import register_snapshot_table_source
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text", "n_chars")
-    table = tempfile.mkdtemp(prefix="svdml-snapofficial-") + "/t"
+    table = scratch_dir("snapofficial")
     register_snapshot_table_source(spark)
     (
         docs.repartitionByRange(8, "doc_id")
@@ -3793,7 +3776,7 @@ def q_snapshot_roundtrip_official(spark, sf_dir):
         .mode("append").save(table)
     )
     thr = int(docs.agg(F.max("doc_id")).collect()[0][0] // 4)
-    log = tempfile.mktemp(prefix="svdml-snapofficial-plan-")
+    log = scratch_dir("snapofficial-plan") + "/plan.json"
     out = _lang_fp(
         spark.read.format("snapshot_table")
         .option("path", table).option("plan_log", log)
@@ -3833,7 +3816,6 @@ def q_snapshot_roundtrip_official(spark, sf_dir):
     "every probe scanned STRICTLY fewer shards than the table holds.",
 )
 def q_snapshot_bloom_skip(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_table import (
         _bloom_may_contain,
@@ -3843,7 +3825,7 @@ def q_snapshot_bloom_skip(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    table = tempfile.mkdtemp(prefix="svdml-snapbloom-")
+    table = scratch_dir("snapbloom")
     write_snapshot(
         docs.repartition(8, "doc_id"), table,
         mode="append", bloom_cols=["doc_id"],
@@ -3897,7 +3879,6 @@ def q_snapshot_bloom_skip(spark, sf_dir):
 )
 def q_snapshot_partition_prune(spark, sf_dir):
     import json
-    import tempfile
 
     from .sources.snapshot_datasource import register_snapshot_table_source
     from .sources.snapshot_table import (
@@ -3910,7 +3891,7 @@ def q_snapshot_partition_prune(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text", "n_chars"
     )
-    table = tempfile.mkdtemp(prefix="svdml-snappart-") + "/t"
+    table = scratch_dir("snappart")
     write_snapshot(docs, table, partition_by=["lang"])
     snap = snapshot_history(table)[-1]
     total = len(snap["shards"])
@@ -3923,7 +3904,7 @@ def q_snapshot_partition_prune(spark, sf_dir):
         s["partition"]["lang"] in ("en", "de") for s in kept
     )
     register_snapshot_table_source(spark)
-    log = tempfile.mktemp(prefix="svdml-snappart-plan-")
+    log = scratch_dir("snappart-plan") + "/plan.json"
     probe = (
         spark.read.format("snapshot_table")
         .option("path", table).option("plan_log", log)
@@ -3973,7 +3954,6 @@ def q_snapshot_partition_prune(spark, sf_dir):
     "set_partition_spec / show_partitions.",
 )
 def q_snapshot_spec_evolution(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_table import (
         _load_snapshot,
@@ -3986,7 +3966,7 @@ def q_snapshot_spec_evolution(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text", "n_chars"
     )
-    table = tempfile.mkdtemp(prefix="svdml-snapspec-") + "/t"
+    table = scratch_dir("snapspec")
     write_snapshot(docs.where(F.col("doc_id") % 2 == 0), table,
                    partition_by=["lang"])                       # v1
     v2 = set_partition_spec(table, ["bucket(4, doc_id)"])       # v2
@@ -4038,7 +4018,6 @@ def q_snapshot_spec_evolution(spark, sf_dir):
     "compact_partitions.",
 )
 def q_snapshot_partition_compaction(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_table import (
         _load_snapshot,
@@ -4051,7 +4030,7 @@ def q_snapshot_partition_compaction(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text", "n_chars"
     )
-    table = tempfile.mkdtemp(prefix="svdml-snapcompactp-") + "/t"
+    table = scratch_dir("snapcompactp")
     write_snapshot(docs, table, partition_by=["lang"])
     en = docs.where(F.col("lang") == "en")
     for i in (0, 1, 2):  # hot-partition small-file appends
@@ -4114,7 +4093,6 @@ def q_snapshot_partition_compaction(spark, sf_dir):
 )
 def q_snapshot_hidden_partition(spark, sf_dir):
     import json
-    import tempfile
 
     from .sources.snapshot_datasource import register_snapshot_table_source
     from .sources.snapshot_table import (
@@ -4124,7 +4102,7 @@ def q_snapshot_hidden_partition(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    table = tempfile.mkdtemp(prefix="svdml-snaphidden-") + "/t"
+    table = scratch_dir("snaphidden")
     write_snapshot(docs, table, partition_by=["bucket(16, doc_id)"])
     mn, mx = docs.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
     probes = [int(mn), int((mn + mx) // 2), int(mx)]
@@ -4133,7 +4111,7 @@ def q_snapshot_hidden_partition(spark, sf_dir):
     shards = snapshot_history(table)[-1]["shards"]
 
     def _probe(p):
-        log = tempfile.mktemp(prefix="svdml-snaphidden-plan-")
+        log = scratch_dir("snaphidden-plan") + "/plan.json"
         out = (
             spark.read.format("snapshot_table")
             .option("path", table).option("plan_log", log)
@@ -4197,7 +4175,6 @@ def q_snapshot_hidden_partition(spark, sf_dir):
 def q_snapshot_drop_partition(spark, sf_dir):
     import glob as _glob
     import os as _os
-    import tempfile
 
     from .sources.snapshot_table import (
         _load_snapshot,
@@ -4209,7 +4186,7 @@ def q_snapshot_drop_partition(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text", "n_chars"
     )
-    table = tempfile.mkdtemp(prefix="svdml-snapdrop-") + "/t"
+    table = scratch_dir("snapdrop")
     write_snapshot(docs, table, partition_by=["lang"])
     files_before = set(
         _glob.glob(_os.path.join(table, "data", "part-*.parquet"))
@@ -4264,7 +4241,6 @@ def q_snapshot_drop_partition(spark, sf_dir):
     "metadata. Engine: sources/snapshot_table.py::replace_partition.",
 )
 def q_snapshot_replace_partition(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_table import (
         _load_snapshot,
@@ -4277,7 +4253,7 @@ def q_snapshot_replace_partition(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text", "n_chars"
     )
-    table = tempfile.mkdtemp(prefix="svdml-snapreplace-") + "/t"
+    table = scratch_dir("snapreplace")
     write_snapshot(docs, table, partition_by=["lang"])
     v1_files = {
         s["file"]: s["partition"]["lang"]
@@ -4327,7 +4303,6 @@ def q_snapshot_replace_partition(spark, sf_dir):
     "refresh derived tables without rescanning a 100 TB base table.",
 )
 def q_snapshot_incremental_read(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_table import (
         compact_table,
@@ -4336,7 +4311,7 @@ def q_snapshot_incremental_read(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text", "n_chars")
-    table = tempfile.mkdtemp(prefix="svdml-snapcdc-")
+    table = scratch_dir("snapcdc")
     write_snapshot(docs.where(F.col("doc_id") % 3 == 0), table, mode="append")
     write_snapshot(docs.where(F.col("doc_id") % 3 == 1), table, mode="append")
     compact_table(spark, table, target_shards=2)
@@ -4364,7 +4339,6 @@ def q_snapshot_incremental_read(spark, sf_dir):
     "recover-from-a-bad-load primitive every production table layer needs.",
 )
 def q_snapshot_rollback(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_table import (
         latest_version,
@@ -4374,7 +4348,7 @@ def q_snapshot_rollback(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text", "n_chars")
-    table = tempfile.mkdtemp(prefix="svdml-snaprollback-")
+    table = scratch_dir("snaprollback")
     write_snapshot(docs.where(F.col("lang") == "en"), table, mode="append")
     write_snapshot(docs.where(F.col("lang") == "fr"), table, mode="overwrite")
     rollback(table, 1)
@@ -4406,14 +4380,13 @@ def q_snapshot_rollback(spark, sf_dir):
     "snapshot_incremental_read (same oracle, metadata-only read).",
 )
 def q_snapshot_changes_stream(spark, sf_dir):
-    import tempfile
     import uuid as _uuid
 
     from .sources.snapshot_stream import register_snapshot_changes
     from .sources.snapshot_table import compact_table, write_snapshot
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text", "n_chars")
-    table = tempfile.mkdtemp(prefix="svdml-snapchgq-")
+    table = scratch_dir("snapchgq")
     write_snapshot(docs.where(F.col("doc_id") % 3 == 0), table, mode="append")
     write_snapshot(docs.where(F.col("doc_id") % 3 == 1), table, mode="append")
     compact_table(spark, table, target_shards=2)
@@ -4459,7 +4432,6 @@ def q_snapshot_changes_stream(spark, sf_dir):
     "O(table).",
 )
 def q_snapshot_table_chain(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_stream import register_snapshot_changes
     from .sources.snapshot_table import read_snapshot, streaming_snapshot_sink
@@ -4467,14 +4439,14 @@ def q_snapshot_table_chain(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text", "n_chars")
     src = _file_replay(
         spark, [docs.where(F.col("doc_id") % 3 == i) for i in range(3)],
-        "svdml-chain-src-",
+        "chain-src",
     )
-    table_a = tempfile.mkdtemp(prefix="svdml-chain-a-")
-    table_b = tempfile.mkdtemp(prefix="svdml-chain-b-")
+    table_a = scratch_dir("chain-a")
+    table_b = scratch_dir("chain-b")
     # stage 1: raw files -> table A (exactly-once snapshot ingest)
     drain(
         src.writeStream.foreachBatch(streaming_snapshot_sink(table_a))
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="svdml-chain-ck1-"))
+        .option("checkpointLocation", scratch_dir("chain-ck1"))
         .trigger(availableNow=True)
         .start()
     )
@@ -4489,7 +4461,7 @@ def q_snapshot_table_chain(spark, sf_dir):
         .writeStream.foreachBatch(
             lambda df, bid: sink_b(df.where(F.col("n_chars") >= 100), bid)
         )
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="svdml-chain-ck2-"))
+        .option("checkpointLocation", scratch_dir("chain-ck2"))
         .trigger(availableNow=True)
         .start()
     )
@@ -4537,7 +4509,6 @@ def q_snapshot_table_chain(spark, sf_dir):
 )
 def q_snapshot_lazy_delete(spark, sf_dir):
     import os as _os
-    import tempfile
 
     from .sources.snapshot_table import (
         compact_table,
@@ -4548,7 +4519,7 @@ def q_snapshot_lazy_delete(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text", "n_chars")
     en = docs.where(F.col("lang") == "en")
-    table = tempfile.mkdtemp(prefix="svdml-snaplazy-")
+    table = scratch_dir("snaplazy")
     write_snapshot(en, table, mode="append")
     thr = int(en.agg(F.max("n_chars")).collect()[0][0] // 2)
     data_dir = _os.path.join(table, "data")
@@ -4714,7 +4685,6 @@ def q_variant_json_extract(spark, sf_dir):
     "commit. Engine: snapshot_table.py::read_metadata_table.",
 )
 def q_snapshot_files_metadata(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_table import (
         read_metadata_table,
@@ -4722,7 +4692,7 @@ def q_snapshot_files_metadata(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    table = tempfile.mkdtemp(prefix="svdml-snapmeta-") + "/t"
+    table = scratch_dir("snapmeta")
     write_snapshot(
         docs, table, partition_by=["lang"], stats_cols=["doc_id"]
     )
@@ -4961,7 +4931,6 @@ def q_variant_ragged_fields(spark, sf_dir):
     "Engine: read_snapshot's reducer pipeline (snapshot_table.py).",
 )
 def q_snapshot_tiered_pruning(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_table import (
         _bloom_may_contain,
@@ -4977,7 +4946,7 @@ def q_snapshot_tiered_pruning(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text", "n_chars"
     )
-    table = tempfile.mkdtemp(prefix="svdml-snaptier-") + "/t"
+    table = scratch_dir("snaptier")
     write_snapshot(docs, table, partition_by=["lang"])
     langs = [r["lang"] for r in docs.select("lang").distinct().collect()]
     for lg in sorted(langs):  # cluster + stats + bloom each partition
@@ -5056,7 +5025,6 @@ def q_snapshot_tiered_pruning(spark, sf_dir):
     "append landed exactly the new fingerprints and nothing else.",
 )
 def q_snapshot_incremental_dedup(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_table import read_snapshot, write_snapshot
 
@@ -5071,7 +5039,7 @@ def q_snapshot_incremental_dedup(spark, sf_dir):
             F.min_by("lang", "doc_id").alias("lang"),
         )
 
-    table = tempfile.mkdtemp(prefix="svdml-incdedup-")
+    table = scratch_dir("incdedup")
     v1 = self_dedup(fp.where(F.col("doc_id") % 2 == 0))
     write_snapshot(
         v1.select("fp", "doc_id", "lang"), table,
@@ -5150,7 +5118,6 @@ def q_snapshot_incremental_dedup(spark, sf_dir):
     "the publish is one O(metadata) commit.",
 )
 def q_snapshot_wap_publish(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_table import (
         create_branch, delete_where, publish_branch, read_snapshot,
@@ -5166,7 +5133,7 @@ def q_snapshot_wap_publish(spark, sf_dir):
             F.col("n_chars")
         ),
     )
-    table = tempfile.mkdtemp(prefix="svdml-wap-")
+    table = scratch_dir("wap")
     write_snapshot(base, table, stats_cols=["n_chars"])  # main v1
     n_main_before = read_snapshot(spark, table).count()
     create_branch(table, "audit")
@@ -5287,7 +5254,6 @@ def q_snapshot_wap_publish(spark, sf_dir):
     "compaction, retention) + the dedup-on-ingest pattern.",
 )
 def q_pipeline_daily_e2e(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_table import (
         compact_table,
@@ -5318,7 +5284,7 @@ def q_pipeline_daily_e2e(spark, sf_dir):
             F.min_by("n_chars", "doc_id").alias("n_chars"),
         ).select("fp", "doc_id", "lang", "n_chars")
 
-    table = tempfile.mkdtemp(prefix="svdml-daily-") + "/t"
+    table = scratch_dir("daily")
     # n_chars stats are what make the remediation delete's prune real:
     # without them every shard (incl. day-1's clean fork) is
     # conservatively rewritten
@@ -5464,7 +5430,6 @@ def q_pipeline_daily_e2e(spark, sf_dir):
     "readable under an aggressive retention policy.",
 )
 def q_snapshot_tag_retention(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_table import (
         create_tag, expire_snapshots, read_snapshot, snapshot_history,
@@ -5472,7 +5437,7 @@ def q_snapshot_tag_retention(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    table = tempfile.mkdtemp(prefix="svdml-tag-")
+    table = scratch_dir("tag")
     write_snapshot(docs.where(F.col("doc_id") % 2 == 0), table)  # v1
     create_tag(table, "baseline")  # pins v1
     write_snapshot(docs.where(F.col("doc_id") % 2 == 1), table)  # v2
@@ -5704,7 +5669,6 @@ def q_url_canonical_domains(spark, sf_dir):
     "table.",
 )
 def q_snapshot_branch_changes(spark, sf_dir):
-    import tempfile
 
     from .functions.hashing import portable_hash64
     from .sources.snapshot_table import (
@@ -5713,7 +5677,7 @@ def q_snapshot_branch_changes(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    table = tempfile.mkdtemp(prefix="svdml-bchanges-")
+    table = scratch_dir("bchanges")
     write_snapshot(docs.where(F.col("doc_id") % 2 == 0), table)  # main v1
     create_branch(table, "ingest")
     write_snapshot(docs.where(F.col("doc_id") % 4 == 1), table, branch="ingest")
@@ -5803,7 +5767,6 @@ def q_snapshot_branch_changes(spark, sf_dir):
     "sources/snapshot_table.py::read_cdc (branch=).",
 )
 def q_snapshot_branch_cdc(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_table import (
         create_branch,
@@ -5819,7 +5782,7 @@ def q_snapshot_branch_cdc(spark, sf_dir):
         "doc_id", "lang", "text", "n_chars"
     )
     en = docs.where(F.col("lang") == "en")
-    table = tempfile.mkdtemp(prefix="svdml-bcdc-") + "/t"
+    table = scratch_dir("bcdc")
     write_snapshot(en, table)                                   # main v1
     create_branch(table, "audit")                               # seq 1
     write_snapshot(
@@ -5873,7 +5836,6 @@ def q_snapshot_branch_cdc(spark, sf_dir):
     "O(refs); the per-ref counts are ordinary snapshot scans.",
 )
 def q_snapshot_refs_inspection(spark, sf_dir):
-    import tempfile
 
     from .sources.snapshot_table import (
         create_branch, create_tag, read_metadata_table, read_snapshot,
@@ -5881,7 +5843,7 @@ def q_snapshot_refs_inspection(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
-    table = tempfile.mkdtemp(prefix="svdml-refs-")
+    table = scratch_dir("refs")
     write_snapshot(docs.where(F.col("doc_id") % 2 == 0), table)  # v1
     create_tag(table, "baseline")
     create_branch(table, "dev")
@@ -5943,7 +5905,6 @@ def q_snapshot_refs_inspection(spark, sf_dir):
     "rewrite_manifests.",
 )
 def q_snapshot_manifest_scale(spark, sf_dir):
-    import tempfile
 
     from .sources import snapshot_table as st
     from .sources.snapshot_table import (
@@ -5958,7 +5919,7 @@ def q_snapshot_manifest_scale(spark, sf_dir):
         "doc_id", "lang", "text", "n_chars",
         (F.col("doc_id") % 10).alias("b"),
     )
-    table = tempfile.mkdtemp(prefix="svdml-manifest-") + "/t"
+    table = scratch_dir("manifest")
     keep = st._MANIFEST_INLINE_MAX
     st._MANIFEST_INLINE_MAX = 2
     try:
@@ -6067,7 +6028,6 @@ def q_snapshot_manifest_scale(spark, sf_dir):
 )
 def q_snapshot_stream_paced(spark, sf_dir):
     import ast
-    import tempfile
     import uuid as _uuid
 
     from .sources.snapshot_stream import _norm_off, register_snapshot_changes
@@ -6077,7 +6037,7 @@ def q_snapshot_stream_paced(spark, sf_dir):
         "doc_id", "lang", "text", "n_chars"
     )
     n_expected = docs.count()
-    table = tempfile.mkdtemp(prefix="svdml-paced-")
+    table = scratch_dir("paced")
     write_snapshot(docs.repartition(8), table, mode="append")  # 1 commit
     register_snapshot_changes(spark)
     sink = f"paced_{_uuid.uuid4().hex[:8]}"
@@ -6152,7 +6112,6 @@ def q_snapshot_stream_paced(spark, sf_dir):
 )
 def q_snapshot_cdc_paged(spark, sf_dir):
     import ast
-    import tempfile
     import uuid as _uuid
 
     from pyspark.sql import Window
@@ -6163,7 +6122,7 @@ def q_snapshot_cdc_paged(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text", "n_chars"
     )
-    table = tempfile.mkdtemp(prefix="svdml-cdcpaged-") + "/t"
+    table = scratch_dir("cdcpaged")
     write_snapshot(docs.repartition(12), table, mode="append")  # v1: 12 files
     dead = docs.where(F.col("doc_id") % 5 == 0).select("doc_id")
     # v2: pure-delete MoR merge — positional DVs cover all 12 files,
@@ -6270,14 +6229,13 @@ def q_snapshot_cdc_paged(spark, sf_dir):
 def q_snapshot_analyze(spark, sf_dir):
     import glob as _glob
     import os
-    import tempfile
 
     from .sources import snapshot_table as st
 
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text", "n_chars"
     )
-    table = tempfile.mkdtemp(prefix="svdml-analyze-") + "/t"
+    table = scratch_dir("analyze")
     st.write_snapshot(
         docs.repartitionByRange(8, "doc_id").sortWithinPartitions("doc_id"),
         table,
@@ -6349,7 +6307,6 @@ def q_snapshot_analyze(spark, sf_dir):
 )
 def q_snapshot_ts_prune(spark, sf_dir):
     import datetime as _dt
-    import tempfile
 
     from .sources import snapshot_table as st
 
@@ -6360,7 +6317,7 @@ def q_snapshot_ts_prune(spark, sf_dir):
     ).collect()[0]
     lo_us = row["lo"] + (row["hi"] - row["lo"]) // 4
     hi_us = row["lo"] + (row["hi"] - row["lo"]) // 2
-    table = tempfile.mkdtemp(prefix="svdml-tsprune-") + "/t"
+    table = scratch_dir("tsprune")
     st.write_snapshot(
         ev.repartitionByRange(8, "ts").sortWithinPartitions("ts"),
         table, stats_cols=["ts"],
@@ -6437,7 +6394,6 @@ def q_snapshot_ts_prune(spark, sf_dir):
 def q_snapshot_vacuum_grace(spark, sf_dir):
     import os
     import shutil
-    import tempfile
     import time as _time
     import uuid as _uuid
 
@@ -6446,7 +6402,7 @@ def q_snapshot_vacuum_grace(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text", "n_chars"
     )
-    table = tempfile.mkdtemp(prefix="svdml-vacgrace-") + "/t"
+    table = scratch_dir("vacgrace")
     st.write_snapshot(docs.repartition(4), table)
     live_before = sorted(
         s["file"] for s in st._load_snapshot(table, 1)["shards"]
@@ -6515,7 +6471,6 @@ def q_snapshot_vacuum_grace(spark, sf_dir):
     "Engine: sources/snapshot_table.py::_parse_partition_spec (hours).",
 )
 def q_snapshot_hours_partition(spark, sf_dir):
-    import tempfile
 
     from .sources import snapshot_table as st
 
@@ -6537,7 +6492,7 @@ def q_snapshot_hours_partition(spark, sf_dir):
         .distinct().orderBy("hb").limit(4)
         .agg(F.max("hb")).collect()[0][0]
     )
-    table = tempfile.mkdtemp(prefix="svdml-hourspart-") + "/t"
+    table = scratch_dir("hourspart")
     st.write_snapshot(ev, table, partition_by=["hours(ts)"])
     snap = st._load_snapshot(table, 1)
     stamped = all(
@@ -6601,7 +6556,6 @@ def q_snapshot_hours_partition(spark, sf_dir):
     "final state.",
 )
 def q_snapshot_mv_refresh(spark, sf_dir):
-    import tempfile
 
     from .sources import materialized_view as mvw
     from .sources import snapshot_table as st
@@ -6613,7 +6567,7 @@ def q_snapshot_mv_refresh(spark, sf_dir):
             "band", F.floor(F.col("o_totalprice") / 50000).cast("long")
         )
     )
-    root = tempfile.mkdtemp(prefix="svdml-mv-")
+    root = scratch_dir("mv")
     src, view = root + "/src", root + "/view"
     spec = dict(
         group_by=["band"],
@@ -6697,7 +6651,6 @@ def q_snapshot_mv_refresh(spark, sf_dir):
     "aggregate over the source's final state.",
 )
 def q_snapshot_mv_time_rollup(spark, sf_dir):
-    import tempfile
 
     from .sources import materialized_view as mvw
     from .sources import snapshot_table as st
@@ -6705,7 +6658,7 @@ def q_snapshot_mv_time_rollup(spark, sf_dir):
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_totalprice"
     )
-    root = tempfile.mkdtemp(prefix="svdml-mvtr-")
+    root = scratch_dir("mvtr")
     src, view = root + "/src", root + "/view"
     spec = dict(
         group_by={"month": "date_format(o_orderdate, 'yyyy-MM')"},
@@ -6792,7 +6745,6 @@ def q_snapshot_mv_time_rollup(spark, sf_dir):
     "state.",
 )
 def q_snapshot_mv_multi(spark, sf_dir):
-    import tempfile
 
     from .sources import materialized_view as mvw
     from .sources import snapshot_table as st
@@ -6802,7 +6754,7 @@ def q_snapshot_mv_multi(spark, sf_dir):
     ).withColumn(
         "band", F.floor(F.col("o_totalprice") / 20000).cast("long")
     )
-    root = tempfile.mkdtemp(prefix="svdml-mvmulti-")
+    root = scratch_dir("mvmulti")
     src, v1, v2 = root + "/src", root + "/v1", root + "/v2"
     spec1 = dict(
         group_by=["band"],

@@ -336,14 +336,13 @@ def q_streaming_dedup(spark, sf_dir):
     "with a two-file split source.",
 )
 def q_streaming_incremental_rollup(spark, sf_dir):
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from .functions.scalar import portable_round as _r
+    from .session import scratch_dir
     from .streaming.jobs import stream_incremental_rollup
 
-    state = tempfile.mkdtemp(prefix="svdml-incr-rollup-")
+    state = scratch_dir("incr-rollup")
     final = stream_incremental_rollup(
         spark, sf_dir, state, glob="events.parquet", raw_nanos=True
     )

@@ -10,7 +10,11 @@ broadcast threshold, Arrow for any pandas exchange).
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -76,3 +80,61 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# One scratch root per process: every checkpoint, state dir and
+# throwaway table the engine makes lives under it, and it goes when the
+# process exits, so a killed run leaves one dir behind instead of one
+# per query. Only the creating pid removes it: a forked child inherits
+# the atexit hook but not the ownership. Other processes' roots are
+# never swept: in another pid namespace a dead owner cannot be told
+# from a live one.
+_scratch_lock = threading.Lock()
+_scratch_root: str | None = None
+
+
+def _remove_root(root: str, pid: int) -> None:
+    if os.getpid() == pid:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _root() -> str:
+    """The process's scratch root, made under ``tempfile.gettempdir()``
+    on first use. Catalog queries ask for scratch from thread pools, so
+    creation is locked."""
+    global _scratch_root
+    with _scratch_lock:
+        if _scratch_root is None:
+            pid = os.getpid()
+            _scratch_root = tempfile.mkdtemp(prefix=f"svdml-{pid}-")
+            atexit.register(_remove_root, _scratch_root, pid)
+        return _scratch_root
+
+
+def scratch_dir(tag: str) -> str:
+    """A fresh empty dir named ``<tag>-*`` under the scratch root."""
+    return tempfile.mkdtemp(prefix=f"{tag}-", dir=_root())
+
+
+def clear_scratch() -> None:
+    """Empty the scratch root. Only for harnesses between queries: a
+    lazy DataFrame still reading a scratch dir breaks after this."""
+    if _scratch_root is not None:
+        for name in os.listdir(_scratch_root):
+            shutil.rmtree(os.path.join(_scratch_root, name), ignore_errors=True)
+
+
+def isolate(spark: SparkSession, keep_views) -> None:
+    """Reset session state between queries so one query's leftovers
+    never shape the next one's plan or time: stop live streams, drop
+    every temp view (memory-sink outputs included) not in
+    ``keep_views``, and drop the cache."""
+    for q in spark.streams.active:
+        q.stop()
+    for t in spark.catalog.listTables():
+        if t.name not in keep_views:
+            try:
+                spark.catalog.dropTempView(t.name)
+            except Exception:
+                pass
+    spark.catalog.clearCache()

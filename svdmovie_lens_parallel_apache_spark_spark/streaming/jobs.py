@@ -16,7 +16,6 @@ parquet file source here exercises identical operators.
 
 from __future__ import annotations
 
-import tempfile
 import threading
 import time
 
@@ -24,6 +23,8 @@ from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..session import scratch_dir
 
 # every stream the package starts is drained through drain(); a drain
 # that makes no headway for this many seconds (no micro-batch commits
@@ -171,7 +172,7 @@ def run_available_now(result: DataFrame, query_name: str, mode: str = "complete"
     local bench and made state-store commits dominate wall time."""
     spark = result.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    ckpt = tempfile.mkdtemp(prefix=f"svdml-ckpt-{query_name}-")
+    ckpt = scratch_dir(f"ckpt-{query_name}")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
         q = (
@@ -555,7 +556,7 @@ def stream_incremental_rollup(spark: SparkSession, source_dir: str,
             merged = part
         merged.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id:06d}")
 
-    ckpt = tempfile.mkdtemp(prefix="svdml-ckpt-incr-rollup-")
+    ckpt = scratch_dir("ckpt-incr-rollup")
     drain(
         ev.writeStream.foreachBatch(merge_batch)
         .option("checkpointLocation", ckpt)

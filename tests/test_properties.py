@@ -461,7 +461,9 @@ def test_epoch_probe_form_agreement(us, days):
     max_examples=8, deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-def test_mv_refresh_equals_full_recompute_under_any_dml(spark, base, ops):
+def test_mv_refresh_equals_full_recompute_under_any_dml(
+    spark, tmp_path_factory, base, ops
+):
     """Property: after ANY sequence of appends / predicate deletes /
     in-place updates on the source, refresh_aggregate_view's maintained
     count/sum/min/max state equals a from-scratch recompute — including
@@ -470,14 +472,13 @@ def test_mv_refresh_equals_full_recompute_under_any_dml(spark, base, ops):
     remove a group's extremum (dirty recompute path). Integer values so
     equality is exact."""
     import shutil as _sh
-    import tempfile as _tf
 
     from svdmovie_lens_parallel_apache_spark_spark.sources import (
         materialized_view as mvw,
         snapshot_table as stab,
     )
 
-    root = _tf.mkdtemp(prefix="svdml-mvprop-")
+    root = str(tmp_path_factory.mktemp("mvprop"))
     src, view = root + "/src", root + "/view"
     spec = dict(
         group_by=["k"],

@@ -72,13 +72,12 @@ def test_residual_filter_still_applied(spark):
     assert all(r.n_words > 50 for r in rows)
 
 
-def test_stream_reader_matches_batch_over_microbatches(spark):
+def test_stream_reader_matches_batch_over_microbatches(spark, tmp_path):
     """The partition-planned Python stream reader replays the SAME corpus
     as the batch reader across >=3 real micro-batches (150-id offset
     steps over 500 ids): complete-mode per-lang counts in a memory sink
     must equal the batch groupBy, and progress must show multiple
     non-empty batches."""
-    import tempfile
     import time
 
     register_synthetic_docs(spark)
@@ -91,7 +90,7 @@ def test_stream_reader_matches_batch_over_microbatches(spark):
     )
     assert stream.isStreaming
     counts = stream.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
-    ckpt = tempfile.mkdtemp(prefix="svdml-pyds-ckpt-")
+    ckpt = str(tmp_path / "ckpt")
     q = (
         counts.writeStream.format("memory")
         .queryName("pyds_lang_counts")

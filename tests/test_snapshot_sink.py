@@ -21,6 +21,7 @@ from svdmovie_lens_parallel_apache_spark_spark.sources.snapshot_table import (
     read_snapshot,
     snapshot_history,
 )
+from svdmovie_lens_parallel_apache_spark_spark.streaming.jobs import drain
 
 _SCHEMA = T.StructType(
     [
@@ -62,7 +63,7 @@ def _run(spark, src_dir, table, ckpt, app_id):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
 
 
 def _canon(df):
@@ -133,7 +134,7 @@ def test_sink_round_trip_source_and_sink(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    out.awaitTermination(180)
+    assert out.awaitTermination(180)
     assert _canon(spark.table("sink_round_trip")) == _canon(docs)
     spark.catalog.dropTempView("sink_round_trip")
 
@@ -181,7 +182,7 @@ def test_sink_rejects_constraint_violations_before_visibility(
 
     v_before = latest_version(table)
     _drop(docs.limit(4), "good")
-    _stream().awaitTermination(180)
+    assert _stream().awaitTermination(180)
     assert latest_version(table) == v_before + 1
     assert read_snapshot(spark, table).count() == 9
     v_before = latest_version(table)
@@ -191,7 +192,7 @@ def test_sink_rejects_constraint_violations_before_visibility(
     with pytest.raises(
         StreamingQueryException, match="CHECK constraint 'id_in_range'"
     ):
-        _stream().awaitTermination(180)
+        assert _stream().awaitTermination(180)
     assert latest_version(table) == v_before
     assert read_snapshot(spark, table).count() == 9
     assert glob.glob(os.path.join(table, "_tmp", "stream", "*")) == []
@@ -220,7 +221,7 @@ def test_sink_refuses_complete_mode(spark, sf_dir, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(60)
+        assert q.awaitTermination(60)
 
 
 def test_sink_records_bloom_filters_for_point_skipping(spark, sf_dir, tmp_path):
@@ -254,7 +255,7 @@ def test_sink_records_bloom_filters_for_point_skipping(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     snap = snapshot_history(table)[-1]
     assert all("bloom" in s for s in snap["shards"])
     # a key from batch 0 (doc_id % 3 == 0): its shard says maybe, at
@@ -285,5 +286,5 @@ def test_sink_records_bloom_filters_for_point_skipping(spark, sf_dir, tmp_path):
         .start()
     )
     with pytest.raises(Exception, match="bloom_cols supports"):
-        q2.awaitTermination()
+        drain(q2)
     assert not os.path.exists(os.path.join(bad_table, "_snapshots"))

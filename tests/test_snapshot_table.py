@@ -18,6 +18,7 @@ from svdmovie_lens_parallel_apache_spark_spark.sources.snapshot_table import (
     streaming_snapshot_sink,
     write_snapshot,
 )
+from svdmovie_lens_parallel_apache_spark_spark.streaming.jobs import drain
 
 
 def _canon(df):
@@ -501,7 +502,7 @@ def test_streaming_snapshot_sink_exactly_once(spark, docs, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        drain(q)
 
     # phase 1: two files, two micro-batch snapshots; then STOP
     add_file(0)
@@ -1124,7 +1125,7 @@ def test_snapshot_changes_stream_drains_appends(spark, docs, tmp_path):
 
     register_snapshot_changes(spark)
 
-    def drain(start_version, name):
+    def run(start_version, name):
         src = (
             spark.readStream.format("snapshot_changes")
             .option("path", table)
@@ -1138,18 +1139,18 @@ def test_snapshot_changes_stream_drains_appends(spark, docs, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        drain(q)
         return spark.table(name)
 
     # from creation: everything, pre-evolution rows NULL-quality
-    all_rows = drain(0, "snapchg_all")
+    all_rows = run(0, "snapchg_all")
     assert all_rows.columns == ["doc_id", "lang", "n_chars", "quality"]
     expect_all = b1.unionByName(b2, allowMissingColumns=True).unionByName(
         b3, allowMissingColumns=True
     ).select("doc_id", "lang", "n_chars", "quality")
     assert _canon(all_rows) == _canon(expect_all)
     # from v2: only the post-v2 append (compaction contributes nothing)
-    after = drain(2, "snapchg_after2")
+    after = run(2, "snapchg_after2")
     assert _canon(after) == _canon(
         b3.select("doc_id", "lang", "n_chars", "quality")
     )
@@ -1182,7 +1183,7 @@ def test_snapshot_changes_stream_fails_on_row_changing_commit(
         .start()
     )
     with pytest.raises(StreamingQueryException, match="append-only"):
-        q.awaitTermination()
+        drain(q)
 
 
 def test_zorder_compaction_prunes_both_dimensions(spark, docs, tmp_path):
@@ -2753,7 +2754,7 @@ def test_streaming_sink_stamps_partitions(spark, docs, tmp_path):
         .option("checkpointLocation", str(tmp_path / "ck"))
         .trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     snap = snapshot_history(table)[-1]
     assert snap["partition_by"] == ["lang"]
     assert all(
@@ -2970,7 +2971,7 @@ def test_stream_source_partition_filter(spark, docs, tmp_path):
         out.writeStream.format("memory").queryName("pf_stream")
         .trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = sorted(
         tuple(r) for r in spark.sql("SELECT * FROM pf_stream").collect()
     )
@@ -3507,7 +3508,7 @@ def test_streaming_wap_branch_sink(spark, docs, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    drain(q)
     # two micro-batches landed on the branch; main is untouched
     assert latest_version(table, "ingest") == 3  # fork + 2 batches
     assert latest_version(table) == 1
@@ -4533,8 +4534,6 @@ def test_streaming_cdc_apply_replicates_table(spark, docs, tmp_path):
     streaming_cdc_apply_sink in two drains with a commit landing in
     between — final downstream state must equal upstream exactly, and
     replaying a drained batch must commit nothing."""
-    import tempfile
-
     from svdmovie_lens_parallel_apache_spark_spark.sources.snapshot_stream import (
         register_snapshot_cdc,
     )
@@ -4557,10 +4556,10 @@ def test_streaming_cdc_apply_replicates_table(spark, docs, tmp_path):
     merge_upsert(upd.unionByName(de), up, key_cols=["doc_id"],
                  mor=True)                                           # v2
     register_snapshot_cdc(spark)
-    ckpt = tempfile.mkdtemp(prefix="svdml-cdcapply-ckpt-")
+    ckpt = str(tmp_path / "ckpt")
     sink = streaming_cdc_apply_sink(down, ["doc_id"], app_id="repl")
 
-    def drain():
+    def run():
         q = (
             spark.readStream.format("snapshot_cdc")
             .option("path", up)
@@ -4571,9 +4570,9 @@ def test_streaming_cdc_apply_replicates_table(spark, docs, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        drain(q)
 
-    drain()
+    run()
     assert _canon(read_snapshot(spark, down)) == _canon(
         read_snapshot(spark, up)
     )
@@ -4589,7 +4588,7 @@ def test_streaming_cdc_apply_replicates_table(spark, docs, tmp_path):
         victims, up, key_cols=["doc_id"], mor=True,
         delete_condition="true",
     )                                                                # v4
-    drain()
+    run()
     assert _canon(read_snapshot(spark, down)) == _canon(
         read_snapshot(spark, up)
     )

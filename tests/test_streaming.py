@@ -102,15 +102,16 @@ def test_foreach_batch_parquet_upsert_sink(spark, sf_dir, tmp_path):
     arbitrary batch logic (the deploy path for sinks Structured Streaming
     lacks natively — JDBC upserts, MERGEs). Row totals must match the
     batch read."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from svdmovie_lens_parallel_apache_spark_spark.sources.readers import load_table
-    from svdmovie_lens_parallel_apache_spark_spark.streaming.jobs import events_stream
+    from svdmovie_lens_parallel_apache_spark_spark.streaming.jobs import (
+        drain,
+        events_stream,
+    )
 
     target = str(tmp_path / "events_sink")
-    ckpt = tempfile.mkdtemp(prefix="svdml-ckpt-feb-")
+    ckpt = str(tmp_path / "ckpt")
 
     def sink_batch(batch_df, batch_id):
         (batch_df.withColumn("__batch", F.lit(batch_id))
@@ -123,7 +124,7 @@ def test_foreach_batch_parquet_upsert_sink(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    drain(q)
     written = spark.read.parquet(target)
     expected = load_table(spark, sf_dir, "events").count()
     assert written.count() == expected
@@ -305,7 +306,7 @@ def test_drain_outlasts_the_stall_limit_while_batches_commit(
 
     frames = [spark.range(10 * i, 10 * i + 10) for i in range(7)]
     q = (
-        _file_replay(spark, frames, "svdml-drain-slow-")
+        _file_replay(spark, frames, "drain-slow")
         .writeStream.foreachBatch(slow)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
@@ -344,7 +345,7 @@ def test_drain_outlasts_the_stall_limit_in_one_batch_while_tasks_finish(
         seen.append(batch_id)
 
     q = (
-        _file_replay(spark, [spark.range(10)], "svdml-drain-one-")
+        _file_replay(spark, [spark.range(10)], "drain-one")
         .writeStream.foreachBatch(long_batch)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)

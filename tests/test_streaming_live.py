@@ -19,15 +19,16 @@ tests do:
 """
 
 import json
-import tempfile
 import time
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from svdmovie_lens_parallel_apache_spark_spark.streaming.jobs import drain
 
-def _split_events_by_ts(spark, sf_dir, n_files=4):
+
+def _split_events_by_ts(spark, sf_dir, tmp_path, n_files=4):
     """Write the events fixture as n time-ordered parquet files so a
     maxFilesPerTrigger=1 stream replays it in n micro-batches with the
     watermark advancing monotonically."""
@@ -39,7 +40,7 @@ def _split_events_by_ts(spark, sf_dir, n_files=4):
     n = ev.count()
     rows_per = (n + n_files - 1) // n_files
     ranked = ev.withColumn("__rk", F.row_number().over(Window.orderBy("ts", "event_id")))
-    out_dir = tempfile.mkdtemp(prefix="svdml-evsplit-")
+    out_dir = str(tmp_path / "evsplit")
     for i in range(n_files):
         chunk = ranked.where(
             (F.col("__rk") > i * rows_per) & (F.col("__rk") <= (i + 1) * rows_per)
@@ -68,9 +69,9 @@ def _stream_from_dir(spark, path):
     )
 
 
-def _drain_with_progress(result, name, mode):
+def _drain_with_progress(result, name, mode, tmp_path):
     assert result.isStreaming
-    ckpt = tempfile.mkdtemp(prefix=f"svdml-ckpt-{name}-")
+    ckpt = str(tmp_path / f"ckpt-{name}")
     spark = result.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
@@ -83,7 +84,7 @@ def _drain_with_progress(result, name, mode):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        drain(q)
         progress = [p if isinstance(p, dict) else json.loads(p) for p in q.recentProgress]
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
@@ -105,15 +106,15 @@ def _batch_user_totals(spark, sf_dir):
     }
 
 
-def test_stateful_totals_across_four_micro_batches(spark, sf_dir):
+def test_stateful_totals_across_four_micro_batches(spark, sf_dir, tmp_path):
     from svdmovie_lens_parallel_apache_spark_spark.streaming.jobs import (
         latest_user_totals,
         user_totals_stateful_transform,
     )
 
-    src_dir, n_rows = _split_events_by_ts(spark, sf_dir, n_files=4)
+    src_dir, n_rows = _split_events_by_ts(spark, sf_dir, tmp_path, n_files=4)
     agg = user_totals_stateful_transform(_stream_from_dir(spark, src_dir))
-    progress = _drain_with_progress(agg, "live_stateful_totals", "update")
+    progress = _drain_with_progress(agg, "live_stateful_totals", "update", tmp_path)
 
     data_batches = [p for p in progress if p.get("numInputRows", 0) > 0]
     assert len(data_batches) >= 3, (
@@ -130,7 +131,7 @@ def test_stateful_totals_across_four_micro_batches(spark, sf_dir):
     spark.catalog.dropTempView("live_stateful_totals")
 
 
-def test_session_windows_merge_across_batches_with_watermark(spark, sf_dir):
+def test_session_windows_merge_across_batches_with_watermark(spark, sf_dir, tmp_path):
     """Cross-batch session-state merging: a 4-batch replay must produce the
     SAME sessions as the 1-batch drain, and the watermark must actually
     advance between micro-batches (the state-eviction trigger at scale)."""
@@ -145,9 +146,9 @@ def test_session_windows_merge_across_batches_with_watermark(spark, sf_dir):
     }
     spark.catalog.dropTempView("stream_session_window")
 
-    src_dir, _ = _split_events_by_ts(spark, sf_dir, n_files=4)
+    src_dir, _ = _split_events_by_ts(spark, sf_dir, tmp_path, n_files=4)
     agg = session_window_transform(_stream_from_dir(spark, src_dir))
-    progress = _drain_with_progress(agg, "live_session_window", "complete")
+    progress = _drain_with_progress(agg, "live_session_window", "complete", tmp_path)
 
     data_batches = [p for p in progress if p.get("numInputRows", 0) > 0]
     assert len(data_batches) >= 3
@@ -167,7 +168,7 @@ def test_session_windows_merge_across_batches_with_watermark(spark, sf_dir):
     spark.catalog.dropTempView("live_session_window")
 
 
-def test_rate_source_continuous_query(spark):
+def test_rate_source_continuous_query(spark, tmp_path):
     """A genuinely continuous query: rate source, processing-time triggers,
     stopped by the test after its bounded prefix (value < 120) is fully
     absorbed. Rate's value column is 0,1,2,..., so the expected final
@@ -193,7 +194,7 @@ def test_rate_source_continuous_query(spark):
     )
     agg = user_totals_stateful_transform(src)
     assert agg.isStreaming
-    ckpt = tempfile.mkdtemp(prefix="svdml-ckpt-rate-")
+    ckpt = str(tmp_path / "ckpt-rate")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     q = (
@@ -241,7 +242,7 @@ def test_rate_source_continuous_query(spark):
     spark.catalog.dropTempView("live_rate_totals")
 
 
-def test_stateful_ops_under_rocksdb_state_store(spark, sf_dir):
+def test_stateful_ops_under_rocksdb_state_store(spark, sf_dir, tmp_path):
     """Provider swap: the stateful totals and session windows must produce
     identical results under RocksDBStateStoreProvider — the state store
     every real 100 TB deployment runs (state spills to disk instead of
@@ -263,12 +264,12 @@ def test_stateful_ops_under_rocksdb_state_store(spark, sf_dir):
     }
     spark.catalog.dropTempView("stream_session_window")
 
-    src_dir, _ = _split_events_by_ts(spark, sf_dir, n_files=4)
+    src_dir, _ = _split_events_by_ts(spark, sf_dir, tmp_path, n_files=4)
     try:
         spark.conf.set(key, rocks)
 
         agg = user_totals_stateful_transform(_stream_from_dir(spark, src_dir))
-        _drain_with_progress(agg, "rocks_stateful_totals", "update")
+        _drain_with_progress(agg, "rocks_stateful_totals", "update", tmp_path)
         final = {
             r.user_id: (r.n_events, r.sum_value)
             for r in latest_user_totals(spark.table("rocks_stateful_totals")).collect()
@@ -276,7 +277,7 @@ def test_stateful_ops_under_rocksdb_state_store(spark, sf_dir):
         assert final == _batch_user_totals(spark, sf_dir)
 
         sess = session_window_transform(_stream_from_dir(spark, src_dir))
-        _drain_with_progress(sess, "rocks_session_window", "complete")
+        _drain_with_progress(sess, "rocks_session_window", "complete", tmp_path)
         rocks_sessions = {
             (r.user_id, r.session_start_s, r.session_end_s, r.n_events)
             for r in spark.table("rocks_session_window").collect()
@@ -294,7 +295,7 @@ def test_stateful_ops_under_rocksdb_state_store(spark, sf_dir):
                 pass
 
 
-def test_restart_from_checkpoint_recovers_state_and_offsets(spark, sf_dir):
+def test_restart_from_checkpoint_recovers_state_and_offsets(spark, sf_dir, tmp_path):
     """Stop a live file-split stream after two committed micro-batches,
     then start a brand-NEW query on the SAME checkpoint with more files
     present: the restarted query must (a) restore per-key aggregate state
@@ -308,13 +309,14 @@ def test_restart_from_checkpoint_recovers_state_and_offsets(spark, sf_dir):
 
     from svdmovie_lens_parallel_apache_spark_spark.sources.readers import load_table
 
-    split_dir, n_rows = _split_events_by_ts(spark, sf_dir, n_files=4)
+    split_dir, n_rows = _split_events_by_ts(spark, sf_dir, tmp_path, n_files=4)
     files = sorted(
         glob.glob(os.path.join(split_dir, "part-*.parquet")), key=os.path.getmtime
     )
     assert len(files) == 4
-    src_dir = tempfile.mkdtemp(prefix="svdml-restart-src-")
-    ckpt = tempfile.mkdtemp(prefix="svdml-restart-ckpt-")
+    src_dir = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    os.mkdir(src_dir)
 
     def agg_of(stream):
         return stream.groupBy("user_id").agg(
@@ -332,7 +334,7 @@ def test_restart_from_checkpoint_recovers_state_and_offsets(spark, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        drain(q)
         return [
             p if isinstance(p, dict) else json.loads(p) for p in q.recentProgress
         ]
@@ -387,7 +389,7 @@ def _committed_end_offset(ckpt):
     return json.loads(json.loads(last) if last.startswith('"') else last)["id"]
 
 
-def test_python_datasource_stream_restart_no_reemission(spark):
+def test_python_datasource_stream_restart_no_reemission(spark, tmp_path):
     """The Python DataSource stream reader across a REAL stop/restart:
     a fresh reader instance loses its in-memory ``_latest`` pacing state
     (sources/python_datasource.py), so this gates the checkpoint re-sync
@@ -402,8 +404,8 @@ def test_python_datasource_stream_restart_no_reemission(spark):
 
     register_synthetic_docs(spark)
     n_docs, batch_docs = 400, 50
-    ckpt = tempfile.mkdtemp(prefix="svdml-pyds-restart-")
-    out_root = tempfile.mkdtemp(prefix="svdml-pyds-out-")
+    ckpt = str(tmp_path / "ckpt")
+    out_root = str(tmp_path / "out")
 
     def start(phase_dir):
         # foreachBatch parquet sink: the memory sink refuses checkpoint
@@ -488,7 +490,7 @@ def test_python_datasource_stream_restart_no_reemission(spark):
     assert drained_ids("phase3") == [], "restart re-emitted committed ids"
 
 
-def test_snapshot_changes_stream_restart_exactly_once(spark, sf_dir):
+def test_snapshot_changes_stream_restart_exactly_once(spark, sf_dir, tmp_path):
     """The snapshot_changes source across a REAL stop/restart: offsets
     are snapshot versions and file resolution is a pure function of the
     version range, so a query restarted on its checkpoint after new
@@ -507,9 +509,9 @@ def test_snapshot_changes_stream_restart_exactly_once(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = tempfile.mkdtemp(prefix="svdml-snapchg-table-")
-    ckpt = tempfile.mkdtemp(prefix="svdml-snapchg-ckpt-")
-    out_root = tempfile.mkdtemp(prefix="svdml-snapchg-out-")
+    table = str(tmp_path / "t")
+    ckpt = str(tmp_path / "ckpt")
+    out_root = str(tmp_path / "out")
     b1 = docs.where(F.col("doc_id") % 3 == 0)
     b2 = docs.where(F.col("doc_id") % 3 == 1)
     b3 = docs.where(F.col("doc_id") % 3 == 2)
@@ -517,7 +519,7 @@ def test_snapshot_changes_stream_restart_exactly_once(spark, sf_dir):
     write_snapshot(b2, table, mode="append")  # v2
     register_snapshot_changes(spark)
 
-    def drain(phase):
+    def run(phase):
         out = os.path.join(out_root, phase)
 
         def sink(batch_df, batch_id):
@@ -535,7 +537,7 @@ def test_snapshot_changes_stream_restart_exactly_once(spark, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        drain(q)
         if not os.path.isdir(out):
             return []
         return [
@@ -543,17 +545,17 @@ def test_snapshot_changes_stream_restart_exactly_once(spark, sf_dir):
             for r in spark.read.schema("doc_id bigint").parquet(out).collect()
         ]
 
-    phase1 = drain("phase1")
+    phase1 = run("phase1")
     assert sorted(phase1) == sorted(
         r.doc_id for r in b1.unionByName(b2).collect()
     )
     # new commit lands while the query is down
     write_snapshot(b3, table, mode="append")  # v3
-    phase2 = drain("phase2")
+    phase2 = run("phase2")
     # exactly-once across the restart: phase 2 = v3's rows, each once
     assert sorted(phase2) == sorted(r.doc_id for r in b3.collect())
     # a third restart with nothing new emits nothing
-    assert drain("phase3") == []
+    assert run("phase3") == []
 
 
 def _reader(ds):
@@ -582,7 +584,7 @@ def _drain_cdc(spark, table, ckpt, out, start_version=0):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    drain(q)
     if not os.path.isdir(out) or not any(
         f.endswith(".parquet") for f in os.listdir(out)
     ):
@@ -590,7 +592,7 @@ def _drain_cdc(spark, table, ckpt, out, start_version=0):
     return spark.read.parquet(out).collect()
 
 
-def test_snapshot_cdc_stream_matches_batch_read_cdc(spark, sf_dir):
+def test_snapshot_cdc_stream_matches_batch_read_cdc(spark, sf_dir, tmp_path):
     """The row-level CDC STREAM over a table taking real DML — appends,
     MoR merge (update+insert), add_column, MoR update_where — must
     produce exactly the batch read_cdc feed for the same range: same
@@ -614,7 +616,7 @@ def test_snapshot_cdc_stream_matches_batch_read_cdc(spark, sf_dir):
     )
     en = docs.where(F.col("lang") == "en")
     de = docs.where(F.col("lang") == "de")
-    table = tempfile.mkdtemp(prefix="svdml-cdcstream-") + "/t"
+    table = str(tmp_path / "t")
     write_snapshot(en, table, stats_cols=["doc_id"])                 # v1
     upd = en.where(F.col("doc_id") % 10 == 0).withColumn(
         "n_chars", F.col("n_chars") + 1000
@@ -631,8 +633,8 @@ def test_snapshot_cdc_stream_matches_batch_read_cdc(spark, sf_dir):
     )                                                                # v5
 
     register_snapshot_cdc(spark)
-    ckpt = tempfile.mkdtemp(prefix="svdml-cdcstream-ckpt-")
-    out = tempfile.mkdtemp(prefix="svdml-cdcstream-out-") + "/p"
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out")
     streamed = _drain_cdc(spark, table, ckpt, out)
     batch = read_cdc(spark, table, 0).collect()
     cols = ["doc_id", "lang", "n_chars", "score",
@@ -642,7 +644,7 @@ def test_snapshot_cdc_stream_matches_batch_read_cdc(spark, sf_dir):
     assert len(s) > 0 and s == b
 
 
-def test_snapshot_cdc_stream_restart_and_pure_removal(spark, sf_dir):
+def test_snapshot_cdc_stream_restart_and_pure_removal(spark, sf_dir, tmp_path):
     """Exactly-once across a stop/restart (offsets are versions;
     planning is a pure log function), and a pure-removal commit
     (drop_partition) streams its visible rows as deletes — matching
@@ -662,14 +664,14 @@ def test_snapshot_cdc_stream_restart_and_pure_removal(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = tempfile.mkdtemp(prefix="svdml-cdcrestart-") + "/t"
+    table = str(tmp_path / "t")
     write_snapshot(
         docs.where(F.col("lang").isin("en", "de")), table,
         partition_by=["lang"], stats_cols=["doc_id"],
     )                                                                # v1
     register_snapshot_cdc(spark)
-    ckpt = tempfile.mkdtemp(prefix="svdml-cdcrestart-ckpt-")
-    out_root = tempfile.mkdtemp(prefix="svdml-cdcrestart-out-")
+    ckpt = str(tmp_path / "ckpt")
+    out_root = str(tmp_path / "out")
     phase1 = _drain_cdc(spark, table, ckpt, out_root + "/p1")
     assert all(r._change_type == "insert" for r in phase1)
     assert len(phase1) == docs.where(F.col("lang").isin("en", "de")).count()
@@ -698,7 +700,7 @@ def test_snapshot_cdc_stream_restart_and_pure_removal(spark, sf_dir):
     assert _drain_cdc(spark, table, ckpt, out_root + "/p3") == []
 
 
-def test_snapshot_cdc_stream_refuses_cow_rewrites_loudly(spark, sf_dir):
+def test_snapshot_cdc_stream_refuses_cow_rewrites_loudly(spark, sf_dir, tmp_path):
     """A CoW rewrite in the range (adds AND removes files) is not
     per-file attributable — the stream must FAIL, never hand the
     consumer fabricated churn or a silent skip."""
@@ -717,17 +719,17 @@ def test_snapshot_cdc_stream_refuses_cow_rewrites_loudly(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = tempfile.mkdtemp(prefix="svdml-cdcrefuse-") + "/t"
+    table = str(tmp_path / "t")
     write_snapshot(docs.where(F.col("lang") == "en"), table)         # v1
     delete_where(spark, table, "doc_id % 2 = 0")                     # v2 CoW
     register_snapshot_cdc(spark)
-    ckpt = tempfile.mkdtemp(prefix="svdml-cdcrefuse-ckpt-")
-    out = tempfile.mkdtemp(prefix="svdml-cdcrefuse-out-") + "/p"
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out")
     with pytest.raises(StreamingQueryException, match="copy-on-write"):
         _drain_cdc(spark, table, ckpt, out)
 
 
-def test_snapshot_cdc_stream_publish_shaped_commit(spark, sf_dir):
+def test_snapshot_cdc_stream_publish_shaped_commit(spark, sf_dir, tmp_path):
     """A single commit that ADDS a file and a vector covering that same
     file — exactly what publish_branch produces when a branch appended
     data and then MoR-merged over it before publishing. The covered
@@ -752,7 +754,7 @@ def test_snapshot_cdc_stream_publish_shaped_commit(spark, sf_dir):
     )
     en = docs.where(F.col("lang") == "en")
     de = docs.where(F.col("lang") == "de")
-    table = tempfile.mkdtemp(prefix="svdml-cdcpub-") + "/t"
+    table = str(tmp_path / "t")
     write_snapshot(en, table, stats_cols=["doc_id"])                 # v1
     create_branch(table, "fix")
     write_snapshot(de, table, mode="append", branch="fix")    # branch 2
@@ -764,8 +766,8 @@ def test_snapshot_cdc_stream_publish_shaped_commit(spark, sf_dir):
                  branch="fix")                                # branch 3
     v_pub = publish_branch(table, "fix")                             # v2
     register_snapshot_cdc(spark)
-    ckpt = tempfile.mkdtemp(prefix="svdml-cdcpub-ckpt-")
-    out = tempfile.mkdtemp(prefix="svdml-cdcpub-out-") + "/p"
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out")
     streamed = _drain_cdc(spark, table, ckpt, out)
     batch = read_cdc(spark, table, 0).collect()
     cols = ["doc_id", "lang", "n_chars", "_change_type", "_commit_version"]
@@ -782,7 +784,7 @@ def test_snapshot_cdc_stream_publish_shaped_commit(spark, sf_dir):
     assert all(r.n_chars % 1000 > 0 for r in got_upd)  # post-images land
 
 
-def test_snapshot_changes_max_files_per_trigger_paces(spark, sf_dir):
+def test_snapshot_changes_max_files_per_trigger_paces(spark, sf_dir, tmp_path):
     """Admission control on the snapshot_changes source: with
     max_files_per_trigger=2 over six 1-file commits, a processingTime
     query must deliver them as >=3 micro-batches each spanning at most
@@ -802,7 +804,7 @@ def test_snapshot_changes_max_files_per_trigger_paces(spark, sf_dir):
     )
 
     register_snapshot_changes(spark)
-    root = tempfile.mkdtemp(prefix="svdml-rl-")
+    root = str(tmp_path)
     table, out, ckpt = [os.path.join(root, x) for x in ("t", "out", "c")]
     for i in range(6):
         write_snapshot(
@@ -865,13 +867,13 @@ def test_snapshot_changes_max_files_per_trigger_paces(spark, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        drain(q)
         drained.append(spark.read.parquet(out2).count())
     assert drained == [20, 40, 60, 60]  # converges, exactly once
     assert spark.read.parquet(out2).distinct().count() == 60
 
 
-def test_snapshot_cdc_max_files_per_trigger_paces(spark, sf_dir):
+def test_snapshot_cdc_max_files_per_trigger_paces(spark, sf_dir, tmp_path):
     """Admission control on the row-level CDC source: the budget counts
     the commit's planned change-items; three 1-item DML commits under
     max_files_per_trigger=1 drain as three per-run capped availableNow
@@ -889,7 +891,7 @@ def test_snapshot_cdc_max_files_per_trigger_paces(spark, sf_dir):
     )
 
     register_snapshot_cdc(spark)
-    root = tempfile.mkdtemp(prefix="svdml-rlcdc-")
+    root = str(tmp_path)
     table, out, ckpt = [os.path.join(root, x) for x in ("t", "out", "c")]
     base = spark.range(0, 50).selectExpr("id", "id * 2 as val")
     write_snapshot(base.coalesce(1), table, mode="append")        # v1
@@ -911,7 +913,7 @@ def test_snapshot_cdc_max_files_per_trigger_paces(spark, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        drain(q)
         counts.append(spark.read.parquet(out).count())
     # each merge = 5 deletes + 5 inserts = 10 change rows; the per-run
     # budget of 1 version admits exactly one commit per drain
@@ -922,7 +924,7 @@ def test_snapshot_cdc_max_files_per_trigger_paces(spark, sf_dir):
     assert batch.exceptAll(streamed).count() == 0
 
 
-def test_snapshot_changes_splits_monster_commit(spark, sf_dir):
+def test_snapshot_changes_splits_monster_commit(spark, sf_dir, tmp_path):
     """File-granular admission control: ONE commit of 9 files under
     max_files_per_trigger=2 pages through in (version, index) offset
     steps — >=5 batches of <=2 files under a processingTime trigger,
@@ -943,7 +945,7 @@ def test_snapshot_changes_splits_monster_commit(spark, sf_dir):
     )
 
     register_snapshot_changes(spark)
-    root = tempfile.mkdtemp(prefix="svdml-split-")
+    root = str(tmp_path)
     table, out, ckpt = [os.path.join(root, x) for x in ("t", "out", "c")]
     write_snapshot(
         spark.range(0, 90).repartition(9), table, mode="append",
@@ -1111,7 +1113,7 @@ def test_stream_restart_onto_expired_history_contract(spark, tmp_path):
         )
     register_snapshot_changes(spark)
 
-    def drain(extra=None):
+    def run(extra=None):
         src = spark.readStream.format("snapshot_changes").option(
             "path", table
         ).option("start_version", 0)
@@ -1127,7 +1129,7 @@ def test_stream_restart_onto_expired_history_contract(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        drain(q)
 
     def drained():
         if not os.path.isdir(out):
@@ -1137,17 +1139,17 @@ def test_stream_restart_onto_expired_history_contract(spark, tmp_path):
             .collect()
         )
 
-    drain()
+    run()
     assert drained() == list(range(50))  # checkpoint at v5
     write_snapshot(spark.range(50, 60).coalesce(1), table, mode="append")
     write_snapshot(spark.range(60, 70).coalesce(1), table, mode="append")
     expire_snapshots(table, keep_last=2)  # keeps v6, v7; v6 unplannable
     # restart onto the expired gap: loud, actionable
     with pytest.raises(Exception, match="expired|allow_data_loss"):
-        drain()
+        run()
     assert drained() == list(range(50))  # nothing replayed or emitted
     # opt-in data loss: v6's rows are skipped, v7's delivered
-    drain(extra={"allow_data_loss": "true"})
+    run(extra={"allow_data_loss": "true"})
     assert drained() == list(range(50)) + list(range(60, 70))
     # fresh subscription predating retention gets the same contract
     with pytest.raises(Exception, match="expired|allow_data_loss"):
@@ -1160,7 +1162,7 @@ def test_stream_restart_onto_expired_history_contract(spark, tmp_path):
             .option("checkpointLocation", str(tmp_path / "ckpt2"))
             .trigger(availableNow=True).start()
         )
-        q.awaitTermination()
+        drain(q)
 
 
 def test_cdc_stream_restart_onto_expired_history(spark, tmp_path):
@@ -1187,7 +1189,7 @@ def test_cdc_stream_restart_onto_expired_history(spark, tmp_path):
         )
     register_snapshot_cdc(spark)
 
-    def drain(extra=None):
+    def run(extra=None):
         src = spark.readStream.format("snapshot_cdc").option(
             "path", table
         ).option("start_version", 0)
@@ -1203,15 +1205,15 @@ def test_cdc_stream_restart_onto_expired_history(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        drain(q)
 
-    drain()  # checkpoint at v4
+    run()  # checkpoint at v4
     write_snapshot(spark.range(40, 50).coalesce(1), table, mode="append")
     write_snapshot(spark.range(50, 60).coalesce(1), table, mode="append")
     expire_snapshots(table, keep_last=2)  # keeps v5, v6; v5 unplannable
     with pytest.raises(Exception, match="expired|allow_data_loss"):
-        drain()
-    drain(extra={"allow_data_loss": "true"})
+        run()
+    run(extra={"allow_data_loss": "true"})
     got = sorted(
         r.id
         for r in spark.read.schema("id bigint, _change_type string")
@@ -1908,7 +1910,7 @@ def test_stream_schema_evolution_restart_surfaces_new_columns(spark, tmp_path):
 
     # run 1 (per-RUN budget: one file) delivers ONLY v1, old schema
     q = start_run()
-    q.awaitTermination()
+    drain(q)
     got1 = spark.read.parquet(out)
     assert sorted(got1.columns) == ["id", "v"] and got1.count() == 10
 
@@ -1924,9 +1926,9 @@ def test_stream_schema_evolution_restart_surfaces_new_columns(spark, tmp_path):
     # restart on the same checkpoint: the re-pinned scan schema now
     # carries `score`; drain the backlog (v2 then v3)
     q = start_run()
-    q.awaitTermination()
+    drain(q)
     q = start_run()
-    q.awaitTermination()
+    drain(q)
     got = spark.read.option("mergeSchema", "true").parquet(out)
     assert "score" in got.columns
     assert got.count() == 30
@@ -1944,7 +1946,7 @@ def test_stream_schema_evolution_restart_surfaces_new_columns(spark, tmp_path):
     ).count() == 10
     # offsets uncorrupted: a further restart is a clean no-progress run
     q = start_run()
-    q.awaitTermination()
+    drain(q)
     assert spark.read.option("mergeSchema", "true").parquet(out).count() == 30
 
 
@@ -1964,7 +1966,6 @@ def test_stream_schema_pinned_at_load(spark, tmp_path, fmt):
         add_column,
         write_snapshot,
     )
-    from svdmovie_lens_parallel_apache_spark_spark.streaming.jobs import drain
 
     register_snapshot_changes(spark)
     register_snapshot_cdc(spark)

@@ -3,12 +3,13 @@ code (AST, registry) rather than run queries, so a regression in the
 engine's shape fails fast and names the offending site."""
 
 import ast
+import glob
 import os
+import subprocess
+import sys
 
-PKG = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "svdmovie_lens_parallel_apache_spark_spark",
-)
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = os.path.join(REPO, "svdmovie_lens_parallel_apache_spark_spark")
 
 # _commit is the one retry loop; create_branch makes a single claim that
 # must not retry, and _ledger_append claims ledger entries, which are
@@ -108,6 +109,69 @@ def test_stream_sources_share_one_reader():
     assert sites <= {(rel, "_reader_base")} | {(rel, h) for h in helpers}, (
         sites
     )
+
+
+def test_scratch_has_one_owner():
+    """Every scratch dir the package makes comes from
+    ``session.scratch_dir``, under the one per-process root that goes
+    when the process exits: a ``tempfile.mkdtemp``/``mktemp`` anywhere
+    else in the package (a dir nothing removes) fails here, and so does
+    a harness pointing ``tempfile.tempdir`` somewhere for the whole
+    process instead of cleaning up after itself."""
+    sites = _call_sites("mkdtemp", "mktemp")
+    assert {(f, owner) for f, owner, _l in sites} == {
+        ("session.py", "_root"), ("session.py", "scratch_dir")
+    }, sites
+    paths = (
+        glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)
+        + glob.glob(os.path.join(REPO, "tools", "*.py"))
+        + [os.path.join(REPO, "bench.py")]
+    )
+    stray = []
+    for path in paths:
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        for node in ast.walk(tree):
+            targets = (
+                node.targets if isinstance(node, ast.Assign)
+                else [node.target]
+                if isinstance(node, (ast.AugAssign, ast.AnnAssign))
+                else []
+            )
+            stray += [
+                (os.path.relpath(path, REPO), node.lineno)
+                for t in targets
+                if isinstance(t, ast.Attribute) and t.attr == "tempdir"
+            ]
+    assert stray == [], f"tempfile.tempdir assigned: {stray}"
+
+
+def test_scratch_root_goes_with_its_process(tmp_path):
+    """A child process's scratch dirs share one root under its temp dir,
+    a forked grandchild exiting does not take that root with it, and
+    the root is gone once the child itself exits."""
+    child = (
+        "import os, sys\n"
+        "from svdmovie_lens_parallel_apache_spark_spark.session import scratch_dir\n"
+        "a, b = scratch_dir('a'), scratch_dir('b')\n"
+        "assert a != b and os.path.dirname(a) == os.path.dirname(b)\n"
+        "pid = os.fork()\n"
+        "if pid == 0:\n"
+        "    sys.exit(0)\n"
+        "os.waitpid(pid, 0)\n"
+        "assert os.path.isdir(a), 'a forked child removed the root'\n"
+        "print(os.path.dirname(a))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", child], cwd=REPO,
+        env=dict(os.environ, TMPDIR=str(tmp_path)),
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr
+    root = out.stdout.strip()
+    assert os.path.dirname(root) == str(tmp_path)
+    assert os.path.basename(root).startswith("svdml-")
+    assert os.listdir(tmp_path) == []
 
 
 def test_catalog_registry_size_is_pinned():

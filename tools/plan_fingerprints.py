@@ -37,32 +37,21 @@ def compute_fingerprints(spark, sf_dir: str, names=None) -> dict[str, dict]:
     streams) so one query's leftovers never shape another's plan.
     """
     from svdmovie_lens_parallel_apache_spark_spark.plans.explain import plan_fingerprint
+    from svdmovie_lens_parallel_apache_spark_spark.session import isolate
 
     import __spark_entry__ as entry
 
     qs = entry.queries()
     names = names or sorted(qs)
-    baseline_tables = {t.name for t in spark.catalog.listTables()}
+    keep_views = {t.name for t in spark.catalog.listTables()}
     out: dict[str, dict] = {}
     for name in names:
-        df = qs[name](spark, sf_dir)
-        out[name] = plan_fingerprint(df)
-        for q in spark.streams.active:
-            q.stop()
-        for t in spark.catalog.listTables():
-            if t.name not in baseline_tables:
-                try:
-                    spark.catalog.dropTempView(t.name)
-                except Exception:
-                    pass
-        spark.catalog.clearCache()
+        out[name] = plan_fingerprint(qs[name](spark, sf_dir))
+        isolate(spark, keep_views)
     return out
 
 
 def main() -> None:
-    import tempfile
-
-    tempfile.tempdir = tempfile.mkdtemp(prefix="svdml-planfp-root-")
     from svdmovie_lens_parallel_apache_spark_spark import get_spark
 
     # same plan-relevant conf as tests/conftest.py: fingerprints must be

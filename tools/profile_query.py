@@ -5,9 +5,9 @@ merge_upsert / ...) that issued them.
 
 Round-13 measurement tool (guide §1: measure first). Two instruments:
 
-1. Python-level: the public snapshot_table / materialized_view entry
-   points are wrapped with wall-clock timers, so the report shows how
-   much of the query's time each engine call owns (inclusive).
+1. Python-level: every public function defined in snapshot_table and
+   materialized_view is wrapped with a wall-clock timer, so the report
+   shows how much of the query's time each engine call owns (inclusive).
 2. JVM-level: the Spark event log is parsed into a job timeline —
    per-job duration + the gaps between jobs (driver work: planning,
    commit protocol, py4j chatter).
@@ -17,10 +17,10 @@ Usage:
 """
 from __future__ import annotations
 
+import inspect
 import json
 import os
 import sys
-import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -32,9 +32,7 @@ _DEPTH = [0]
 
 
 def _wrap(mod, name):
-    orig = getattr(mod, name, None)
-    if orig is None or not callable(orig):
-        return
+    orig = getattr(mod, name)
     label = f"{mod.__name__.rsplit('.', 1)[-1]}.{name}"
 
     def w(*a, **k):
@@ -54,9 +52,10 @@ def _wrap(mod, name):
 def main():
     qname = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    evdir = tempfile.mkdtemp(prefix="svdml-evlog-")
-
     from svdmovie_lens_parallel_apache_spark_spark import get_spark
+    from svdmovie_lens_parallel_apache_spark_spark.session import scratch_dir
+
+    evdir = scratch_dir("evlog")
 
     spark = get_spark(
         app_name=f"profile-{qname}",
@@ -74,15 +73,10 @@ def main():
         snapshot_table as st,
     )
 
-    for fn in (
-        "write_snapshot", "merge_upsert", "delete_where", "update_where",
-        "vacuum", "analyze_table", "compact_shards", "read_cdc",
-        "read_changes", "read_snapshot", "create_branch", "create_tag",
-        "expire_snapshots", "zorder_rewrite",
-    ):
-        _wrap(st, fn)
-    for fn in ("refresh_aggregate_view", "refresh_aggregate_views"):
-        _wrap(mvw, fn)
+    for mod in (st, mvw):
+        for name, fn in inspect.getmembers(mod, inspect.isfunction):
+            if not name.startswith("_") and fn.__module__ == mod.__name__:
+                _wrap(mod, name)
 
     import __spark_entry__ as entrymod
 
@@ -210,7 +204,6 @@ def main():
         f"\njobs: {job_total:.3f}s in {len(jobs)} jobs; "
         f"driver gaps: {gap_total:.3f}s; wall {wall:.3f}s"
     )
-    print(f"event log: {path}")
 
 
 if __name__ == "__main__":

@@ -121,35 +121,18 @@ def main() -> None:
         DECADE3_QUERIES if _D3 else DECADE2_QUERIES if _D2 else DEFAULT_QUERIES
     )
     names = sys.argv[1].split(",") if len(sys.argv) > 1 else default
-    import tempfile
-
-    tmp_root = tempfile.mkdtemp(prefix="svdml-rehearsal-root-")
-    tempfile.tempdir = tmp_root  # private: cleanup can't race other procs
-
     from svdmovie_lens_parallel_apache_spark_spark import get_spark
+    from svdmovie_lens_parallel_apache_spark_spark.session import (
+        clear_scratch,
+        isolate,
+    )
 
     spark = get_spark(app_name="svdml-scale-rehearsal")
     spark.sparkContext.setLogLevel("ERROR")
-    import glob
-    import shutil
-
     import __spark_entry__ as m
 
     qs = m.queries()
-    baseline_tables = {t.name for t in spark.catalog.listTables()}
-
-    def isolate():
-        for q in spark.streams.active:
-            q.stop()
-        for t in spark.catalog.listTables():
-            if t.name not in baseline_tables:
-                try:
-                    spark.catalog.dropTempView(t.name)
-                except Exception:
-                    pass
-        spark.catalog.clearCache()
-        for d in glob.glob(os.path.join(tmp_root, "svdml-*")):
-            shutil.rmtree(d, ignore_errors=True)
+    keep_views = {t.name for t in spark.catalog.listTables()}
 
     out = {}
     for name in names:
@@ -159,7 +142,8 @@ def main() -> None:
             n = qs[name](spark, sf).count()
             rec[f"t_{tag}_s"] = round(time.time() - t0, 3)
             rec[f"rows_{tag}"] = n
-            isolate()
+            isolate(spark, keep_views)
+            clear_scratch()
         rec["exponent"] = round(
             math.log(max(rec["t_big_s"], 1e-3) / max(rec["t_small_s"], 1e-3))
             / math.log(RATIO),

@@ -32,13 +32,14 @@ OUT = os.path.join(REPO, "SHUFFLE_AUDIT.json")
 
 def audit(spark, sf_dir: str, names=None) -> dict[str, dict]:
     from svdmovie_lens_parallel_apache_spark_spark.plans.metrics import StageMetricsProbe
+    from svdmovie_lens_parallel_apache_spark_spark.session import isolate
 
     import __spark_entry__ as entry
 
     qs = entry.queries()
     names = names or sorted(qs)
     probe = StageMetricsProbe(spark)
-    baseline_tables = {t.name for t in spark.catalog.listTables()}
+    keep_views = {t.name for t in spark.catalog.listTables()}
     out: dict[str, dict] = {}
     for name in names:
         before = probe.seen_stages()
@@ -56,22 +57,11 @@ def audit(spark, sf_dir: str, names=None) -> dict[str, dict]:
         out[name] = m
         print(f"# {name}: in={m['input_bytes']} sw={m['shuffle_write_bytes']} "
               f"amp={m['amplification']}", file=sys.stderr)
-        for q in spark.streams.active:
-            q.stop()
-        for t in spark.catalog.listTables():
-            if t.name not in baseline_tables:
-                try:
-                    spark.catalog.dropTempView(t.name)
-                except Exception:
-                    pass
-        spark.catalog.clearCache()
+        isolate(spark, keep_views)
     return out
 
 
 def main() -> None:
-    import tempfile
-
-    tempfile.tempdir = tempfile.mkdtemp(prefix="svdml-shuffleaudit-root-")
     from svdmovie_lens_parallel_apache_spark_spark import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
